@@ -50,37 +50,41 @@ object Plans {
       math.min(cap.toLong, (bytes.toLong + perPart - 1) / perPart)).toInt
   }
 
-  /** Optionally broadcast the build side of a self-join. `true` (the
-    * default in the pair operators) is right while the build side fits
-    * the broadcast limit — it removes blocking-key skew entirely.
-    * Pass `false` at corpus scale: the join falls back to a shuffle
-    * hash/sort-merge join planned by Catalyst (pair skew then wants
-    * [[graft.operators.SkewJoin]]-style salting on hot keys). */
-  def maybeBroadcast(df: DataFrame, enabled: Boolean): DataFrame =
-    if (enabled) broadcast(df) else df
+  // THE broadcast decision reads the session here and nowhere else: no
+  // operator carries a per-call flag, and a threshold ≤ 0 (Spark's own
+  // broadcasting-off switch) turns every hint below off with it.
+  private def broadcastLimit: Long =
+    org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
 
-  /** THE broadcast-safety gate, in one place: true iff an estimated
+  /** Hint a build side the operator expects to be small (a pair
+    * family's self-join side, a test/ref/change set): it removes
+    * blocking-key skew entirely while the side fits. Applied unless the
+    * session turns broadcasting off, in which case the join falls back
+    * to Catalyst's shuffle hash/sort-merge join (pair skew then wants
+    * [[graft.operators.SkewJoin]]-style salting on hot keys). */
+  def broadcastHint(df: DataFrame): DataFrame =
+    if (broadcastLimit > 0) broadcast(df) else df
+
+  /** Hint a side of KNOWN size: only when an estimated
+    * `nRows × bytesPerRow` relation passes [[underBroadcastGate]]. */
+  def broadcastHint(df: DataFrame, nRows: Long, bytesPerRow: Long): DataFrame =
+    if (underBroadcastGate(nRows, bytesPerRow)) broadcast(df) else df
+
+  /** THE broadcast-safety gate: true iff an estimated
     * `nRows × bytesPerRow` relation fits the session's
     * `autoBroadcastJoinThreshold` (and broadcasting isn't disabled,
-    * threshold -1). Every size-gated stored-reference probe
-    * (bm25TopKStored's postings, the media band frames, q169's
-    * corpus-half digest sets) reads the threshold and compares through
-    * this helper, so the gate semantics can't drift between call
-    * sites; only the PER-ROW MODEL is site-specific (each relation's
-    * schema is different — see [[hashedDigestRowBytes]] and the
-    * callers' own constants). Forced broadcasts above the limit are
-    * the driver/executor-OOM class the gate exists to prevent; above
-    * it, callers fall back to Catalyst's shuffle join. */
+    * threshold ≤ 0). Every size-gated probe (bm25TopKStored's
+    * postings, the media band frames, the stored substring probe's
+    * digest sets) compares through this helper, so the gate semantics
+    * can't drift between call sites; only the PER-ROW MODEL is
+    * site-specific (each caller's own constant). Forced broadcasts
+    * above the limit are the driver/executor-OOM class the gate exists
+    * to prevent; above it, callers fall back to Catalyst's shuffle
+    * join. */
   def underBroadcastGate(nRows: Long, bytesPerRow: Long): Boolean = {
-    val limit =
-      org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    val limit = broadcastLimit
     limit > 0 && nRows * bytesPerRow <= limit
   }
-
-  /** Per-row estimate for a broadcast relation of hashed digests (one
-    * int64 hash + id + hashed-relation overhead) — the model q169's
-    * substring-screen reference and the digest-set probes share. */
-  val hashedDigestRowBytes = 48L
 
   /** Driver-side parquet row count: sum the footer record counts of a
     * stored artifact's files without scheduling a Spark job. The
@@ -90,7 +94,10 @@ object Plans {
     * ~40 k-row digest sets whose footers answer in milliseconds.
     * Reads the files on EVERY call (nothing cached across runs); flat
     * artifact directories only (the stored digest/posting layouts —
-    * no partition subdirectories). */
+    * no partition subdirectories). Hidden `_`/`.` entries are skipped,
+    * files and directories alike, exactly as Spark's reader skips them:
+    * commit markers, and the `_temporary` / `_spark_metadata`
+    * directories an interrupted write or a file sink leaves behind. */
   def parquetRowCount(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
@@ -100,18 +107,18 @@ object Plans {
     // unexpectedly-laid-out artifact would silently UNDERCOUNT here,
     // and an undercount feeds the broadcast gate — wrongly forcing a
     // corpus-sized broadcast build is exactly the failure the gate
-    // exists to prevent. Data files and commit markers only.
-    val statuses = fs.listStatus(p)
-    val rogue = statuses.filter(st => st.isDirectory ||
-      !(st.getPath.getName.endsWith(".parquet") ||
-        st.getPath.getName.startsWith("_") ||
-        st.getPath.getName.startsWith(".")))
+    // exists to prevent. Data files and hidden entries only.
+    val visible = fs.listStatus(p).filterNot { st =>
+      val name = st.getPath.getName
+      name.startsWith("_") || name.startsWith(".")
+    }
+    val rogue = visible.filter(st =>
+      st.isDirectory || !st.getPath.getName.endsWith(".parquet"))
     require(rogue.isEmpty,
       s"parquetRowCount($path): flat parquet artifact expected, found " +
         rogue.map(_.getPath.getName).take(3).mkString(", ") +
         " — a partitioned/drifted layout would undercount the broadcast gate")
-    statuses.iterator
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+    visible.iterator
       .map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromStatus(st, conf)

@@ -25,7 +25,13 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * checkpoint files eagerly — without the eager delete a loop would
   * leak one DFS file generation per round until driver GC + the
   * ContextCleaner (and only with
-  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`) got to it. */
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true`) got to it.
+  * The NON-iterative [[stable]] fences (the Dedup materializations)
+  * have no release hook: in reliable mode the engine never deletes
+  * their files. They stay until the ContextCleaner removes them after
+  * the frame is garbage-collected, and it does so only when
+  * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
+  * false) — otherwise until the checkpoint dir is cleaned. */
 object Checkpoints {
 
   // the raw conf value last passed to setCheckpointDir: SparkContext

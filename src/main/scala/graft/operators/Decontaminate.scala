@@ -65,10 +65,9 @@ object Decontaminate {
     * semi-join on the gram hash, then one distinct over the (small)
     * matched id set. */
   def contaminatedIds(corpus: DataFrame, idCol: String, textCol: String,
-      test: DataFrame, testTextCol: String, n: Int,
-      broadcastTest: Boolean = true): DataFrame =
+      test: DataFrame, testTextCol: String, n: Int): DataFrame =
     ngramHashesAll(corpus, idCol, textCol, n)
-      .join(Plans.maybeBroadcast(testGramSet(test, testTextCol, n), broadcastTest),
+      .join(Plans.broadcastHint(testGramSet(test, testTextCol, n)),
         Seq("gram_hash"), "left_semi")
       .select(col(idCol)).distinct()
 
@@ -76,12 +75,10 @@ object Decontaminate {
     * contaminated id frame is contamination-rate-sized, so the anti
     * join broadcasts it and the corpus again streams in place. */
   def clean(corpus: DataFrame, idCol: String, textCol: String,
-      test: DataFrame, testTextCol: String, n: Int,
-      broadcastTest: Boolean = true): DataFrame =
+      test: DataFrame, testTextCol: String, n: Int): DataFrame =
     corpus.join(
-      Plans.maybeBroadcast(
-        contaminatedIds(corpus, idCol, textCol, test, testTextCol, n, broadcastTest),
-        broadcastTest),
+      Plans.broadcastHint(
+        contaminatedIds(corpus, idCol, textCol, test, testTextCol, n)),
       Seq(idCol), "left_anti")
 
   /** [[clean]] with a Bloom pre-screen: grams are first tested against
@@ -131,18 +128,17 @@ object Decontaminate {
     * onto the row-local totals. The corpus is read twice (totals +
     * gram stream) but never shuffled whole. */
   def contaminationFraction(corpus: DataFrame, idCol: String, textCol: String,
-      test: DataFrame, testTextCol: String, n: Int, threshold: Double,
-      broadcastTest: Boolean = true): DataFrame = {
+      test: DataFrame, testTextCol: String, n: Int, threshold: Double): DataFrame = {
     val totals = corpus.select(col(idCol),
       size(Dedup.distinctShingles(col(textCol), n)).cast("long").as("n_grams"))
     val hits = ngramHashes(corpus, idCol, textCol, n)
-      .join(Plans.maybeBroadcast(testGramSet(test, testTextCol, n), broadcastTest),
+      .join(Plans.broadcastHint(testGramSet(test, testTextCol, n)),
         Seq("gram_hash"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hit"))
     val frac = graft.functions.PortableRound.round4(
       when(col("n_grams") > 0, col("n_hit").cast("double") / col("n_grams"))
         .otherwise(lit(0.0)))
-    totals.join(Plans.maybeBroadcast(hits, broadcastTest), Seq(idCol), "left")
+    totals.join(Plans.broadcastHint(hits), Seq(idCol), "left")
       .withColumn("n_hit", coalesce(col("n_hit"), lit(0L)))
       .withColumn("hit_frac", frac)
       .withColumn("contaminated", col("hit_frac") >= threshold)
@@ -250,8 +246,7 @@ object Decontaminate {
     * neighbor buckets upstream). */
   def semanticScreen(train: DataFrame, trainIdCol: String, trainVecCol: String,
       test: DataFrame, testIdCol: String, testVecCol: String,
-      threshold: Double, nBits: Int = 8,
-      broadcastTest: Boolean = true): DataFrame = {
+      threshold: Double, nBits: Int = 8): DataFrame = {
     val nPart = Plans.shufflePartitions(train)
     val tr = train.select(
       Similarity.signBucket(col(trainVecCol), nBits).as("_bucket"),
@@ -262,7 +257,7 @@ object Decontaminate {
       col(testIdCol).as("test_id"), col(testVecCol).as("_qv"))
     val sim = graft.functions.PortableRound.round4(
       Similarity.cosine(col("_tv"), col("_qv")))
-    tr.join(Plans.maybeBroadcast(te, broadcastTest),
+    tr.join(Plans.broadcastHint(te),
         tr("_bucket") === te("_bucket") && sim >= threshold)
       .select(col("test_id"), col("train_id"), sim.as("cos_sim"))
   }
@@ -279,10 +274,9 @@ object Decontaminate {
     * screen (spec-asserted); only the parameter is picked. */
   def semanticScreenAuto(train: DataFrame, trainIdCol: String,
       trainVecCol: String, test: DataFrame, testIdCol: String,
-      testVecCol: String, threshold: Double, targetBucket: Long = 64L,
-      broadcastTest: Boolean = true): DataFrame =
+      testVecCol: String, threshold: Double,
+      targetBucket: Long = 64L): DataFrame =
     semanticScreen(train, trainIdCol, trainVecCol, test, testIdCol,
       testVecCol, threshold,
-      Similarity.autoSignBits(train, trainVecCol, targetBucket),
-      broadcastTest)
+      Similarity.autoSignBits(train, trainVecCol, targetBucket))
 }

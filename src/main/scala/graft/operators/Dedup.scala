@@ -201,7 +201,7 @@ object Dedup {
     * dominant cost of the naive formulation (the pair stream is
     * ~nBands× the distinct pair count). */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bandSize: Int = 4, broadcastBuild: Boolean = true): DataFrame = {
+      k: Int = 16, bandSize: Int = 4): DataFrame = {
     // Signature-sized checkpoint (docs × k+1 columns): (a) the
     // self-join's two sides read the per-doc signature walk ONCE — the
     // materialization role the aggregation form's groupBy exchange used
@@ -226,7 +226,7 @@ object Dedup {
       col("keys").as("keys_a")).repartition(Plans.shufflePartitions(df))
     val b = bands.select(col(idCol).as("id_b"), col("band_id"), col("band_key"),
       col("keys").as("keys_b"))
-    a.join(Plans.maybeBroadcast(b, broadcastBuild), Seq("band_id", "band_key"))
+    a.join(Plans.broadcastHint(b), Seq("band_id", "band_key"))
       .filter(col("id_a") < col("id_b") &&
         graft.functions.ArrayOps.noEarlierCollision(
           col("keys_a"), col("keys_b"), col("band_id")))
@@ -247,20 +247,19 @@ object Dedup {
     * containment). One definition so the candidate-join discipline
     * cannot drift between them. */
   private def candidateTokenJoin(df: DataFrame, idCol: String, textCol: String,
-      k: Int, bandSize: Int, broadcastBuild: Boolean): DataFrame = {
+      k: Int, bandSize: Int): DataFrame = {
     val toks = df.select(col(idCol).as("_tid"),
       array_sort(distinctTokens(col(textCol))).as("_toks"))
       .withColumn("_n", size(col("_toks")).cast("long"))
-    minhashCandidates(df, idCol, textCol, k, bandSize, broadcastBuild)
-      .join(Plans.maybeBroadcast(toks.select(col("_tid").as("id_a"),
-        col("_toks").as("toks_a"), col("_n").as("n_a")), broadcastBuild), Seq("id_a"))
-      .join(Plans.maybeBroadcast(toks.select(col("_tid").as("id_b"),
-        col("_toks").as("toks_b"), col("_n").as("n_b")), broadcastBuild), Seq("id_b"))
+    minhashCandidates(df, idCol, textCol, k, bandSize)
+      .join(Plans.broadcastHint(toks.select(col("_tid").as("id_a"),
+        col("_toks").as("toks_a"), col("_n").as("n_a"))), Seq("id_a"))
+      .join(Plans.broadcastHint(toks.select(col("_tid").as("id_b"),
+        col("_toks").as("toks_b"), col("_n").as("n_b"))), Seq("id_b"))
   }
 
   def lshVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int, bandSize: Int, threshold: Double,
-      broadcastBuild: Boolean = true): DataFrame = {
+      k: Int, bandSize: Int, threshold: Double): DataFrame = {
     // Candidate generation is [[minhashCandidates]]' dedup-free
     // first-collision join, so candidates flow STRAIGHT into the
     // verification joins — zero shuffles between enumeration and verify
@@ -275,7 +274,7 @@ object Dedup {
     // prunes almost every non-near-equal-size candidate.
     val tScaled = math.round(threshold * 20000) - 1
     withJaccard(
-      candidateTokenJoin(df, idCol, textCol, k, bandSize, broadcastBuild)
+      candidateTokenJoin(df, idCol, textCol, k, bandSize)
         .filter(least(col("n_a"), col("n_b")) * 20000L >=
           greatest(col("n_a"), col("n_b")) * tScaled),
       Seq.empty, threshold)
@@ -302,9 +301,8 @@ object Dedup {
     * on candidates only; the fence keeps the non-deterministic-looking
     * filter from being split and pushed through the broadcast joins). */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int, bandSize: Int, threshold: Double,
-      broadcastBuild: Boolean = true): DataFrame = {
-    candidateTokenJoin(df, idCol, textCol, k, bandSize, broadcastBuild)
+      k: Int, bandSize: Int, threshold: Double): DataFrame = {
+    candidateTokenJoin(df, idCol, textCol, k, bandSize)
       .select(col("id_a"), col("id_b"),
         graft.functions.ArrayOps.sortedIntersectSize(col("toks_a"), col("toks_b"))
           .cast("long").as("n_int"),
@@ -350,8 +348,7 @@ object Dedup {
     * band_value) — COMPLETE (no recall loss, unlike MinHash LSH) and
     * never all-pairs. Verification is one xor+popcount per candidate. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      bits: Int = 16, maxHamming: Int = 3, bandBits: Int = 4,
-      broadcastBuild: Boolean = true): DataFrame = {
+      bits: Int = 16, maxHamming: Int = 3, bandBits: Int = 4): DataFrame = {
     require(bits % bandBits == 0, "bits must be divisible by bandBits")
     val nBands = bits / bandBits
     require(maxHamming < nBands,
@@ -381,7 +378,7 @@ object Dedup {
         shiftright(col("sim_a"), j * bandBits).bitwiseAND(lit(mask)) =!=
           shiftright(col("sim_b"), j * bandBits).bitwiseAND(lit(mask)))
       .reduceOption(_ && _).getOrElse(lit(true))
-    a.join(Plans.maybeBroadcast(b, broadcastBuild), Seq("band_id", "band_val"))
+    a.join(Plans.broadcastHint(b), Seq("band_id", "band_val"))
       .filter(col("id_a") < col("id_b") && noEarlierAgreement)
       .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
@@ -715,7 +712,7 @@ object Dedup {
     * candidate). The cheap conjuncts sit inside a `when` guard so the
     * optimizer cannot reorder the DP before them (SURVEY §9.4). */
   def editDistancePairs(df: DataFrame, idCol: String, strCol: String,
-      blockCol: String, maxDist: Int, broadcastBuild: Boolean = true): DataFrame = {
+      blockCol: String, maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
     val s = df.select(col(blockCol).as("block"), col(idCol).as("id"),
       col(strCol).as("s"), length(col(strCol)).as("len"))
@@ -732,7 +729,7 @@ object Dedup {
     val inRange = when(
       col("id_a") < col("id_b") && abs(col("len_a") - col("len_b")) <= maxDist,
       banded).otherwise(lit(null))
-    a.as("A").join(Plans.maybeBroadcast(b.as("B"), broadcastBuild),
+    a.as("A").join(Plans.broadcastHint(b.as("B")),
         col("A.block") === col("B.block") && inRange >= 0)
       .select(col("A.block").as("block"), col("id_a"), col("id_b"),
         levenshtein(col("s_a"), col("s_b")).cast("long").as("dist"))
@@ -750,7 +747,7 @@ object Dedup {
     * j ≥ t − 5e-5) skips the O(|A|+|B|) intersection for pairs that
     * cannot reach the threshold — exactness is preserved. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      blockCol: String, threshold: Double, broadcastBuild: Boolean = true): DataFrame = {
+      blockCol: String, threshold: Double): DataFrame = {
     // Sorted once per document so the per-pair intersection is a
     // zero-allocation merge count ([[ArrayOps.sortedIntersectSize]])
     // instead of array_intersect's per-call hash set + result array.
@@ -770,7 +767,7 @@ object Dedup {
     // round4(j) >= threshold requires j >= threshold - 0.00005; j is at
     // most min/max, so prune on 20000*min >= (20000*threshold - 1)*max.
     val tScaled = math.round(threshold * 20000) - 1
-    val joined = a.as("A").join(Plans.maybeBroadcast(b.as("B"), broadcastBuild),
+    val joined = a.as("A").join(Plans.broadcastHint(b.as("B")),
       col("A.block") === col("B.block") &&
         col("id_a") < col("id_b") &&
         least(col("n_a"), col("n_b")) * 20000L >= greatest(col("n_a"), col("n_b")) * tScaled)
@@ -1153,8 +1150,7 @@ object Dedup {
     * equal windows hash equal on both lines, so no true contamination
     * is missed. */
   private def crossVerifiedPositions(df: DataFrame, ref: DataFrame,
-      idCol: String, textCol: String, k: Int,
-      broadcastRef: Boolean): (DataFrame, DataFrame) = {
+      idCol: String, textCol: String, k: Int): (DataFrame, DataFrame) = {
     require(k >= 2, s"window size must be >= 2 tokens, got $k")
     val docs = df.filter(col(textCol).isNotNull)
     val refDocs = ref.filter(col(textCol).isNotNull)
@@ -1163,22 +1159,23 @@ object Dedup {
     val refExactSet = refDocs
       .select(explode(exactWindowHashes(textCol, k)).as("_h")).distinct()
     (docs, crossVerifiedFromSets(docs, idCol, textCol, k,
-      refRollSet, refExactSet, broadcastRef))
+      Plans.broadcastHint(refRollSet), Plans.broadcastHint(refExactSet)))
   }
 
   /** The screen itself, reference sets given: nominate `docs` positions
     * against the rolling-digest set, exact-verify the survivors against
     * the window-md5 set — shared by the inline pair (sets built from a
-    * ref frame) and the stored probe (sets read from an artifact). */
+    * ref frame) and the stored probe (sets read from an artifact). The
+    * sets are the one-column `_d` / `_h` frames; any broadcast hint on
+    * them is the caller's. */
   private def crossVerifiedFromSets(docs: DataFrame, idCol: String,
-      textCol: String, k: Int, refRollSet: DataFrame, refExactSet: DataFrame,
-      broadcastRef: Boolean): DataFrame = {
+      textCol: String, k: Int, refRollSet: DataFrame,
+      refExactSet: DataFrame): DataFrame = {
     import graft.functions.ArrayOps
     val cand = docs
       .select(col(idCol), posexplode(rollingWindowDigests(textCol, k)).as(Seq("_p0", "_d")))
       .select(col(idCol), (col("_p0") + 1).as("pos"), col("_d"))
-      .join(Plans.maybeBroadcast(refRollSet.select(col("_d")), broadcastRef),
-        Seq("_d"), "left_semi")
+      .join(refRollSet, Seq("_d"), "left_semi")
       .groupBy(col(idCol)).agg(collect_list(col("pos")).as("_ps"))
     val exact = docs.join(cand, Seq(idCol))
       .select(col(idCol), ArrayOps.bind(tokens(col(textCol))) { toks =>
@@ -1187,8 +1184,7 @@ object Dedup {
       }.as("_pe"))
       .select(col(idCol), explode(col("_pe")).as("_x"))
       .select(col(idCol), col("_x.pos").as("pos"), col("_x._h").as("_h"))
-    exact.join(Plans.maybeBroadcast(refExactSet.select(col("_h")), broadcastRef),
-      Seq("_h"), "left_semi")
+    exact.join(refExactSet, Seq("_h"), "left_semi")
   }
 
   /** Persist the substring-screen reference (a benchmark's k-token
@@ -1229,15 +1225,24 @@ object Dedup {
     * recomputed — bit-identical to the inline pair for the artifact's
     * benchmark by construction (both sets are deterministic
     * projections of it; spec-pinned). The probe reads only the two
-    * hash-set frames — benchmark text is not in the artifact. */
+    * hash-set frames — benchmark text is not in the artifact.
+    *
+    * The digest sets broadcast only under the size gate
+    * ([[Plans.underBroadcastGate]], ~48 B per hashed digest row — int64
+    * hash + id + hashed-relation overhead — with row counts from the
+    * parquet footers, no job): a benchmark-sized holdout passes, while
+    * a corpus-sized reference (q169's half of the corpus at scale)
+    * falls back to Catalyst's shuffle join instead of forcing a
+    * corpus-sized build into every executor. */
   def dupSpansRollingAgainstStored(spark: SparkSession, dir: String,
-      df: DataFrame, idCol: String, textCol: String,
-      broadcastRef: Boolean = true): DataFrame = {
+      df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val meta = spark.read.parquet(s"$dir/meta").head()
     val k = meta.getAs[Number]("k").intValue()
     val docs = df.filter(col(textCol).isNotNull)
+    val nRef = Plans.parquetRowCount(spark, s"$dir/roll") +
+      Plans.parquetRowCount(spark, s"$dir/exact")
     val verified =
-      if (broadcastRef) {
+      if (Plans.underBroadcastGate(nRef, 48L)) {
         // ROW-LOCAL bloom nomination (round 16, guide §2.4): under the
         // broadcast gate the artifact's rolling-digest bloom (dir/meta,
         // sized for the full digest set) nominates candidate POSITIONS
@@ -1269,12 +1274,10 @@ object Dedup {
         }
         docs.select(col(idCol), explode(pe).as("_x"))
           .select(col(idCol), col("_x.pos").as("pos"), col("_x._h").as("_h"))
-          .join(Plans.maybeBroadcast(
-            spark.read.parquet(s"$dir/exact").select(col("_h")), enabled = true),
+          .join(broadcast(spark.read.parquet(s"$dir/exact").select(col("_h"))),
             Seq("_h"), "left_semi")
       } else crossVerifiedFromSets(docs, idCol, textCol, k,
-        spark.read.parquet(s"$dir/roll"), spark.read.parquet(s"$dir/exact"),
-        broadcastRef = false)
+        spark.read.parquet(s"$dir/roll"), spark.read.parquet(s"$dir/exact"))
     spanStats(docs, idCol, textCol, verified, k)
   }
 
@@ -1328,8 +1331,8 @@ object Dedup {
     * that is [[dupSpansRolling]]'s signal. Scale shape: see
     * [[crossVerifiedPositions]] — the train side never shuffles. */
   def dupSpansRollingAgainst(df: DataFrame, ref: DataFrame, idCol: String,
-      textCol: String, k: Int, broadcastRef: Boolean = true): DataFrame = {
-    val (docs, verified) = crossVerifiedPositions(df, ref, idCol, textCol, k, broadcastRef)
+      textCol: String, k: Int): DataFrame = {
+    val (docs, verified) = crossVerifiedPositions(df, ref, idCol, textCol, k)
     spanStats(docs, idCol, textCol, verified, k)
   }
 
@@ -1340,8 +1343,8 @@ object Dedup {
     * [[cutDupSpans]] over df's docs (doc_id, n_kept, n_cut,
     * clean_digest). */
   def cutDupSpansRollingAgainst(df: DataFrame, ref: DataFrame, idCol: String,
-      textCol: String, k: Int, broadcastRef: Boolean = true): DataFrame = {
-    val (docs, verified) = crossVerifiedPositions(df, ref, idCol, textCol, k, broadcastRef)
+      textCol: String, k: Int): DataFrame = {
+    val (docs, verified) = crossVerifiedPositions(df, ref, idCol, textCol, k)
     val covered = verified
       .select(col(idCol).as("doc_id"),
         explode(sequence((col("pos") - 1).cast("long"),

@@ -143,11 +143,11 @@ object Multimodal {
     * [[Dedup.simhashNearDupPairs]] discipline), so the filter needs no
     * shuffled state at all. The build side broadcasts only while the
     * estimated band-frame size fits `autoBroadcastJoinThreshold`
-    * (the [[Retrieval.bm25TopKStored]] size-gate discipline); pass
-    * `broadcastBuild = false` to force the shuffle path. */
+    * (the [[Retrieval.bm25TopKStored]] size-gate discipline); a session
+    * with broadcasting off (threshold ≤ 0) always takes the shuffle
+    * path. */
   def mediaNearDupPairs(df: DataFrame, idCol: String, binCol: String,
-      dim: Int, bandSize: Int, maxL1: Long,
-      broadcastBuild: Boolean = true, quantShift: Int = 0): DataFrame = {
+      dim: Int, bandSize: Int, maxL1: Long, quantShift: Int = 0): DataFrame = {
     require(dim % bandSize == 0, s"bandSize $bandSize must divide dim $dim")
     // checkpointed: the self-join's two sides would otherwise decode
     // every payload twice; the count for the broadcast gate is then a
@@ -155,11 +155,9 @@ object Multimodal {
     val feats =
       featsFrame(df, idCol, binCol, dim, quantShift).localCheckpoint()
     val bands = bandsFrame(feats, dim, bandSize)
-    val gated = broadcastBuild &&
-      underBroadcastGate(feats.count(), dim, bandSize)
     bandJoinVerify(
       sideA(bands),
-      graft.functions.Plans.maybeBroadcast(sideB(bands), gated),
+      broadcastBands(sideB(bands), feats.count(), dim, bandSize),
       dim, bandSize, maxL1, col("id_a") < col("id_b"))
   }
 
@@ -216,14 +214,13 @@ object Multimodal {
     * hashed-relation overhead per band row, against the session's
     * `autoBroadcastJoinThreshold`. Forced broadcasts above the limit
     * are the driver-OOM class the gate exists to prevent. The
-    * threshold read and compare are [[graft.functions.Plans.underBroadcastGate]]
+    * threshold read and compare are [[graft.functions.Plans.broadcastHint]]'s
     * (one gate definition engine-wide); only the per-band-row byte
     * model is media-specific. */
-  private def underBroadcastGate(nDocs: Long, dim: Int, bandSize: Int): Boolean = {
-    val bandRowBytes = 64L + (dim + bandSize) * 8L
-    graft.functions.Plans.underBroadcastGate(
-      nDocs * (dim / bandSize), bandRowBytes)
-  }
+  private def broadcastBands(side: DataFrame, nDocs: Long, dim: Int,
+      bandSize: Int): DataFrame =
+    graft.functions.Plans.broadcastHint(side,
+      nDocs * (dim / bandSize), 64L + (dim + bandSize) * 8L)
 
   /** THE first-agreeing-band rule, in one place (every banded face —
     * pair enumeration, stored-index probe, ingest routing — keeps a
@@ -313,19 +310,17 @@ object Multimodal {
     * ONCE and never re-joined. Output `(id_a = probe id, id_b =
     * indexed id, l1, same_content)`. Scale shape: the STORED side is
     * the big one — the probe batch broadcasts into the stored band
-    * scan while it fits the size gate (`broadcastProbe = false`
-    * forces the shuffle path for corpus-sized probes), so per ingest
-    * batch the index is scanned, never shuffled. */
+    * scan while it fits the size gate (a corpus-sized probe, or a
+    * session with broadcasting off, takes the shuffle path), so per
+    * ingest batch the index is scanned, never shuffled. */
   def mediaNearDupAgainstStored(spark: org.apache.spark.sql.SparkSession,
       dir: String, df: DataFrame, idCol: String, binCol: String,
-      maxL1: Long, broadcastProbe: Boolean = true): DataFrame = {
+      maxL1: Long): DataFrame = {
     val (dim, bandSize) = readGeometry(spark, dir)
     val probeF = featsFrame(df, idCol, binCol, dim).localCheckpoint()
-    val gated = broadcastProbe &&
-      underBroadcastGate(probeF.count(), dim, bandSize)
     bandJoinVerify(
-      graft.functions.Plans.maybeBroadcast(
-        sideA(bandsFrame(probeF, dim, bandSize)), gated),
+      broadcastBands(sideA(bandsFrame(probeF, dim, bandSize)),
+        probeF.count(), dim, bandSize),
       sideB(spark.read.parquet(s"$dir/bands")),
       dim, bandSize, maxL1, lit(true))
   }
@@ -370,12 +365,11 @@ object Multimodal {
     *     (no band hit, verify miss, null payload) is `keep`. */
   def mediaScreenCut(spark: org.apache.spark.sql.SparkSession,
       dir: String, df: DataFrame, idCol: String, binCol: String,
-      maxL1: Long, broadcastProbe: Boolean = true): DataFrame = {
+      maxL1: Long): DataFrame = {
     val (bloom, dim, bandSize) = readScreenMeta(spark, dir)
     val suspects = df.filter(col(binCol).isNotNull &&
       bloomHit(col(binCol), bloom, dim, bandSize))
-    val best = mediaNearDupAgainstStored(spark, dir, suspects, idCol, binCol,
-        maxL1, broadcastProbe)
+    val best = mediaNearDupAgainstStored(spark, dir, suspects, idCol, binCol, maxL1)
       .groupBy(col("id_a"))
       .agg(min(struct(col("l1"), col("id_b"))).as("_b"))
       .select(col("id_a").as(idCol),

@@ -417,7 +417,7 @@ object Retrieval {
     // sides to identical rows); PlanContractsSpec pins the plan shapes.
     val postingRows = dfByTerm.values.sum
     val scored = decoded.withColumn("_idf", idfExpr)
-    Plans.maybeBroadcast(scored, Plans.underBroadcastGate(postingRows, 64L))
+    Plans.broadcastHint(scored, postingRows, 64L)
       .join(doclens, Seq("id"))
       .select(col("id"), col("dl").as("n_tokens"),
         when(col("tf") > 0L,

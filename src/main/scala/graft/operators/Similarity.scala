@@ -41,7 +41,7 @@ object Similarity {
     * tasks. At corpus scale the generator is [[bucketedTopK]]'s sign
     * buckets; this is the exact verifier shape. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, broadcastBuild: Boolean = true): DataFrame = {
+      threshold: Double): DataFrame = {
     val nPart = graft.functions.Plans.shufflePartitions(df)
     val a = df.select(col(idCol).as("id_a"), col(vecCol).as("vec_a")).repartition(nPart)
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vec_b"))
@@ -53,7 +53,7 @@ object Similarity {
     // in the projection — far cheaper than materializing every ordered
     // pair with both vectors attached.
     val sim = PortableRound.round4(cosine(col("vec_a"), col("vec_b")))
-    a.join(graft.functions.Plans.maybeBroadcast(b, broadcastBuild),
+    a.join(graft.functions.Plans.broadcastHint(b),
         when(col("id_a") < col("id_b"), sim).otherwise(lit(null)) >= threshold)
       .select(col("id_a"), col("id_b"), sim.as("cos_sim"))
   }
@@ -114,10 +114,9 @@ object Similarity {
     * width are IDENTICAL to the fixed-nBits operator (spec-asserted):
     * auto-sizing only picks the parameter. */
   def bucketedNearDupPairsAuto(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, targetBucket: Long = 64L,
-      broadcastBuild: Boolean = true): DataFrame =
+      threshold: Double, targetBucket: Long = 64L): DataFrame =
     bucketedNearDupPairs(df, idCol, vecCol, threshold,
-      autoSignBits(df, vecCol, targetBucket), broadcastBuild)
+      autoSignBits(df, vecCol, targetBucket))
 
   /** Sign-pattern bucket id from the leading `nBits` components:
     * bit j set iff vec[j] > 0. Narrow projection, no shuffle. */
@@ -205,11 +204,12 @@ object Similarity {
     * At 100 TB: bucket count (2^nBits) is chosen ≫ executor count, the
     * stream side repartitions explicitly (AQE would coalesce the
     * tiny-bytes/heavy-CPU verify stage), and the build side broadcasts
-    * while it fits — `broadcastBuild = false` degrades to a shuffled
-    * hash join on the bucket key, still never all-pairs. */
+    * unless the session turns broadcasting off
+    * (`spark.sql.autoBroadcastJoinThreshold` ≤ 0, see
+    * [[graft.functions.Plans.broadcastHint]]) — then the join degrades
+    * to a shuffled hash join on the bucket key, still never all-pairs. */
   def bucketedNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nBits: Int = 8,
-      broadcastBuild: Boolean = true): DataFrame = {
+      threshold: Double, nBits: Int = 8): DataFrame = {
     val nPart = graft.functions.Plans.shufflePartitions(df)
     val a = df.select(
       signBucket(col(vecCol), nBits).as("_bucket"),
@@ -223,7 +223,7 @@ object Similarity {
     // survivors are recomputed in the projection.
     val sim = PortableRound.round4(cosine(col("vec_a"), col("vec_b")))
     a.join(
-        graft.functions.Plans.maybeBroadcast(b, broadcastBuild),
+        graft.functions.Plans.broadcastHint(b),
         a("_bucket") === b("_bucket") &&
           (when(col("id_a") < col("id_b"), sim).otherwise(lit(null)) >= threshold))
       .select(col("id_a"), col("id_b"), sim.as("cos_sim"))
@@ -244,8 +244,7 @@ object Similarity {
     * negatives, which for HARD-negative mining is the tolerable end to
     * lose. */
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, anchorPred: Column, k: Int, nBits: Int = 8,
-      broadcastBuild: Boolean = true): DataFrame = {
+      labelCol: String, anchorPred: Column, k: Int, nBits: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // same stream-repartition + optional-broadcast discipline as
     // bucketedNearDupPairs: the cosine verify is tiny-bytes/CPU-heavy,
@@ -260,7 +259,7 @@ object Similarity {
       signBucket(col(vecCol), nBits).as("_bucket"),
       col(idCol).as("cand_id"), col(vecCol).as("vec_b"),
       col(labelCol).as("label_b"))
-    val b = graft.functions.Plans.maybeBroadcast(b0, broadcastBuild)
+    val b = graft.functions.Plans.broadcastHint(b0)
     val sim = PortableRound.round4(cosine(col("vec_a"), col("vec_b")))
     val rank = Window.partitionBy(col("anchor_id"))
       .orderBy(col("cos_sim").desc, col("cand_id").asc)
@@ -280,10 +279,10 @@ object Similarity {
     * stays ~targetBucket per anchor as the corpus grows instead of
     * n/2^nBits at a frozen width. */
   def hardNegativesAuto(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, anchorPred: Column, k: Int, targetBucket: Long = 64L,
-      broadcastBuild: Boolean = true): DataFrame =
+      labelCol: String, anchorPred: Column, k: Int,
+      targetBucket: Long = 64L): DataFrame =
     hardNegatives(df, idCol, vecCol, labelCol, anchorPred, k,
-      autoSignBits(df, vecCol, targetBucket), broadcastBuild)
+      autoSignBits(df, vecCol, targetBucket))
 
   /** IVF ANN with a DETERMINISTIC coarse quantizer: centroids are the
     * `nCentroids` lowest-id corpus vectors, and routing is by (rounded)

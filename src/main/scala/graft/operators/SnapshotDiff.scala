@@ -63,9 +63,8 @@ object SnapshotDiff {
     * is a map-side pass over the base plus a union of the batch-sized
     * upserts. */
   def applyChanges(base: DataFrame, changes: DataFrame, idCol: String,
-      deleteCol: String, broadcastChanges: Boolean = true): DataFrame = {
-    val keys = graft.functions.Plans.maybeBroadcast(
-      changes.select(col(idCol)), broadcastChanges)
+      deleteCol: String): DataFrame = {
+    val keys = graft.functions.Plans.broadcastHint(changes.select(col(idCol)))
     // a null delete flag must mean UPSERT, not silent deletion: the
     // key is removed from base unconditionally below, and !null is
     // null, so an unguarded filter would drop the row from the re-add

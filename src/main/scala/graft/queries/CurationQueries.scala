@@ -1880,20 +1880,10 @@ object CurationQueries {
         // rate at the artifact's default sizing) — the row-local bloom
         // is the per-arrival STREAM discipline, not the batch one.
         // Unlike q159's benchmark-sized holdout, THIS reference is half
-        // the corpus, so its digest sets broadcast only under the size
-        // gate (bm25TopKStored's discipline — parquet-metadata counts,
-        // ~48 B per hashed digest row): above the limit the probe
-        // falls back to Catalyst's shuffle join instead of forcing a
-        // corpus-sized build into every executor
-        // footer-metadata counts (driver-side, no job): the gate needs
-        // only the stored digest sets' row counts, and two count() jobs
-        // cost ~0.3 s of every gate invocation
-        val nRef = graft.functions.Plans.parquetRowCount(s, s"$sDir/roll") +
-          graft.functions.Plans.parquetRowCount(s, s"$sDir/exact")
+        // the corpus, so the probe's own size gate decides whether its
+        // digest sets broadcast
         val dupText = Dedup.dupSpansRollingAgainstStored(
-            s, sDir, arrivals, "doc_id", "text",
-            broadcastRef = graft.functions.Plans.underBroadcastGate(
-              nRef, graft.functions.Plans.hashedDigestRowBytes))
+            s, sDir, arrivals, "doc_id", "text")
           .filter(col("n_spans") >= 1)
           .select(col("doc_id"), lit(true).as("_dup_text"))
         arrivals

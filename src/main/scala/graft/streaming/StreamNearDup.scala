@@ -130,8 +130,8 @@ object StreamNearDup {
     * is the corpus's ~0.01% shadow — broadcast it while it fits,
     * pre-bucket it when it doesn't. */
   def screenAgainstIndex(stream: DataFrame, indexDir: String, idCol: String,
-      textCol: String, maxHamming: Int = 3, bandBits: Int = 8,
-      broadcastIndex: Boolean = true): Dataset[Collision] = {
+      textCol: String, maxHamming: Int = 3,
+      bandBits: Int = 8): Dataset[Collision] = {
     val spark = stream.sparkSession
     import spark.implicits._
     val bits = spark.read.parquet(s"$indexDir/params")
@@ -154,8 +154,7 @@ object StreamNearDup {
           shiftright(col("_csim"), j * bandBits).bitwiseAND(lit(mask)))
       .reduceOption(_ && _).getOrElse(lit(true))
     events
-      .join(graft.functions.Plans.maybeBroadcast(corpus, broadcastIndex),
-        Seq("bandId", "bandVal"))
+      .join(graft.functions.Plans.broadcastHint(corpus), Seq("bandId", "bandVal"))
       .filter(noEarlierAgreement)
       .withColumn("hamming",
         bit_count(col("sim").bitwiseXOR(col("_csim"))).cast("long"))
@@ -257,8 +256,7 @@ object StreamNearDup {
     * consumers aggregate shared counts / best match downstream (e.g. in
     * foreachBatch), exactly like [[Collision]] consumers. */
   def screenAgainstWinnowIndex(stream: DataFrame, indexDir: String,
-      idCol: String, textCol: String, maxDf: Int,
-      broadcastIndex: Boolean = true): Dataset[FpMatch] = {
+      idCol: String, textCol: String, maxDf: Int): Dataset[FpMatch] = {
     val spark = stream.sparkSession
     import spark.implicits._
     val p = spark.read.parquet(s"$indexDir/params").head
@@ -277,7 +275,7 @@ object StreamNearDup {
       .filter(col(textCol).isNotNull && col(idCol).cast("long").isNotNull)
       .select(col(idCol).cast("long").as("docId"),
         explode(Dedup.winnowFingerprintArray(col(textCol), kGram, w)).as("fp"))
-      .join(graft.functions.Plans.maybeBroadcast(kept, broadcastIndex), Seq("fp"))
+      .join(graft.functions.Plans.broadcastHint(kept), Seq("fp"))
       .select(col("docId"), col("matchId"), col("fp"))
       .as[FpMatch]
   }

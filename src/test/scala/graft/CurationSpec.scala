@@ -28,6 +28,11 @@ class CurationSpec extends SparkSpec {
     val bad = Decontaminate.contaminatedIds(corpus, "doc_id", "text", testSet, "text", 5)
       .as[Long].collect().sorted
     bad shouldBe Array(1L, 3L)
+    withBroadcastThreshold("-1") {
+      val off = Decontaminate.contaminatedIds(corpus, "doc_id", "text", testSet, "text", 5)
+      off.as[Long].collect().sorted shouldBe bad
+      off.queryExecution.executedPlan.toString should not include "BroadcastHashJoin"
+    }
   }
 
   test("contaminationFraction matches hand-computed per-doc overlap") {
@@ -584,8 +589,18 @@ class CurationSpec extends SparkSpec {
     Dedup.writeSubstringScreenArtifact(spark, ref, "text", k, dir)
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("doc_id").as[(Long, Long, Long, Long, Double)].collect().toSeq
-    val stored = rows(Dedup.dupSpansRollingAgainstStored(spark, dir, train, "doc_id", "text"))
+    def probe() = Dedup.dupSpansRollingAgainstStored(spark, dir, train, "doc_id", "text")
+    val stored = rows(probe())
     stored shouldBe rows(Dedup.dupSpansRollingAgainst(train, ref, "doc_id", "text", k))
+    // above the size gate (the digest sets × 48 B exceed 256 B) the
+    // probe drops the row-local bloom nomination for the shuffle-join
+    // screen (its collect_list regroup) — same rows
+    withBroadcastThreshold("256") {
+      val above = probe()
+      above.queryExecution.optimizedPlan.toString should include("collect_list")
+      rows(above) shouldBe stored
+    }
+    probe().queryExecution.optimizedPlan.toString should not include "collect_list"
     stored.count(_._2 > 0) should be >= 2 // planted contamination detected
     // the artifact ships hashes only — no benchmark text anywhere in it
     spark.read.parquet(s"$dir/exact").columns shouldBe Array("_h")

@@ -100,12 +100,27 @@ class PlanContractsSpec extends SparkSpec {
     // bucket (hash join), so pair enumeration is bucket-local — the
     // all-pairs BroadcastNestedLoopJoin shape is confined to the
     // verifier-only q29.
-    val pairs = graft.operators.Similarity.bucketedNearDupPairs(
+    def pairs() = graft.operators.Similarity.bucketedNearDupPairs(
       t(spark, dir, "embeddings"), "vec_id", "embedding", 0.4, nBits = 8)
-    val plan = pairs.queryExecution.executedPlan.toString
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      import spark.implicits._
+      df.as[(Long, Long, Double)].collect().sorted.toSeq
+    }
+    val on = pairs()
+    val plan = on.queryExecution.executedPlan.toString
     plan should include("BroadcastHashJoin")
     plan should not include "BroadcastNestedLoopJoin"
     plan should not include "CartesianProduct"
+    // broadcasting off: the hint drops and the bucket join shuffles —
+    // still a hash/sort-merge equi-join, never a nested loop; same rows
+    withBroadcastThreshold("-1") {
+      val off = pairs()
+      rows(off) shouldBe rows(on)
+      val offPlan = off.queryExecution.executedPlan.toString
+      offPlan should not include "BroadcastHashJoin"
+      offPlan should not include "BroadcastNestedLoopJoin"
+      offPlan should include regex "(ShuffledHashJoin|SortMergeJoin)"
+    }
   }
 
   test("semantic decontamination screen hash-joins on the bucket, benchmark broadcast") {

@@ -126,6 +126,14 @@ class MultimodalSpec extends SparkSpec {
     plan should not include "CartesianProduct"
     plan should not include "BroadcastNestedLoopJoin"
     plan should not include "HashAggregate"
+    // broadcasting off: the size gate fails, the band join shuffles
+    withBroadcastThreshold("-1") {
+      val off = Multimodal.mediaNearDupPairs(withBin, "doc_id", "media",
+        dim = 4, bandSize = 2, maxL1 = 50L)
+      off.orderBy("id_a", "id_b").as[(Long, Long, Long, Boolean)]
+        .collect().toSeq shouldBe got
+      off.queryExecution.executedPlan.toString should not include "BroadcastHashJoin"
+    }
   }
 
   test("probe registry enforces the exemplar contract: dims, id discipline, capacity") {

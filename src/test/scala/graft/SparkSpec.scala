@@ -20,4 +20,13 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Run `body` (build AND execute the frames inside it) under
+    * `spark.sql.autoBroadcastJoinThreshold = limit`. `"-1"` is Spark's
+    * broadcasting-off switch, which also drops every engine hint
+    * ([[graft.functions.Plans.broadcastHint]]). */
+  def withBroadcastThreshold[T](limit: String)(body: => T): T = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", limit)
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 }

@@ -269,9 +269,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("lshVerifiedPairs = candidates verified by exact jaccard") {
-    val got = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 16, 4, 0.5)
+    def verified() = Dedup.lshVerifiedPairs(docs, "doc_id", "text", 16, 4, 0.5)
+    val got = verified()
       .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
     got should contain((1L, 2L, 1.0)) // exact dups always survive
+    // broadcasting off: every build-side hint drops, the rows stay
+    withBroadcastThreshold("-1") {
+      val off = verified()
+      off.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)]
+        .collect().toSet shouldBe got
+      off.queryExecution.executedPlan.toString should not include "BroadcastHashJoin"
+    }
     // every verified pair must also be a raw candidate
     val cands = Dedup.minhashCandidates(docs, "doc_id", "text", 16, 4)
       .as[(Long, Long)].collect().toSet
@@ -1392,6 +1400,11 @@ class SnapshotDiffSpec extends SparkSpec {
     val got = SnapshotDiff.applyChanges(base, changes, "id", "del")
       .as[(Long, String, String)].collect().sortBy(_._1)
     got shouldBe Array((1L, "one", "a"), (2L, "two EDITED", "b"), (4L, "four", "d"))
+    withBroadcastThreshold("-1") {
+      val off = SnapshotDiff.applyChanges(base, changes, "id", "del")
+      off.as[(Long, String, String)].collect().sortBy(_._1) shouldBe got
+      off.queryExecution.executedPlan.toString should not include "BroadcastHashJoin"
+    }
     // deleting a key absent from base is a no-op, not an error
     val delMissing = Seq((9L, "x", "z", true)).toDF("id", "text", "tag", "del")
     SnapshotDiff.applyChanges(base, delMissing, "id", "del").count() shouldBe 3

@@ -108,6 +108,26 @@ class PlansHelpersSpec extends graft.SparkSpec {
       graft.functions.Plans.parquetRowCount(spark, dir)
   }
 
+  test("parquetRowCount skips hidden _/. directories as Spark's reader does, still fails on k=v") {
+    import java.nio.file.{Files, Paths}
+    val dir = tmpDir("plans_rowcount_hidden")
+    spark.range(500).repartition(2).write.mode("overwrite").parquet(dir)
+    // leftovers Spark's reader ignores: an interrupted write's
+    // _temporary (holding a real data file that must NOT count), a file
+    // sink's _spark_metadata, a dot-prefixed staging directory
+    val part = new java.io.File(dir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+    val tmp = Files.createDirectories(Paths.get(dir, "_temporary", "0"))
+    Files.copy(part, tmp.resolve(part.getFileName))
+    Files.createDirectories(Paths.get(dir, "_spark_metadata"))
+    Files.createDirectories(Paths.get(dir, ".staging"))
+    graft.functions.Plans.parquetRowCount(spark, dir) shouldBe 500L
+    // a partition directory beside the flat files is real drift
+    Files.createDirectories(Paths.get(dir, "k=1"))
+    an[IllegalArgumentException] should be thrownBy
+      graft.functions.Plans.parquetRowCount(spark, dir)
+  }
+
   test("shufflePartitions is volume-aware: floored at parallelism, capped at the session conf") {
     import graft.functions.Plans
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt

@@ -899,20 +899,25 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("simidx_stream").toString
     Dedup.writeSimhashIndex(spark, corpus.toDF("doc_id", "text"),
       "doc_id", "text", dir, bits = 16)
-    val in = MemoryStream[(Long, String)]
-    val out = StreamNearDup.screenAgainstIndex(
-      in.toDF().toDF("doc_id", "text"), dir, "doc_id", "text",
-      maxHamming = 3, bandBits = 4)
-    val q = out.toDF().writeStream.format("memory").queryName("t_idx_screen")
-      .outputMode(OutputMode.Append()).start()
-    in.addData(streamDocs.take(15): _*)
-    q.processAllAvailable()
-    in.addData(streamDocs.drop(15): _*)   // stateless: batches independent
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("t_idx_screen")
-      .select("docId", "dupOf", "hamming")
-      .as[(Long, Long, Long)].collect().toSet
+    // returns the screen's rows and its last micro-batch's physical plan
+    def screen(sink: String): (Set[(Long, Long, Long)], String) = {
+      val in = MemoryStream[(Long, String)]
+      val out = StreamNearDup.screenAgainstIndex(
+        in.toDF().toDF("doc_id", "text"), dir, "doc_id", "text",
+        maxHamming = 3, bandBits = 4)
+      val q = out.toDF().writeStream.format("memory").queryName(sink)
+        .outputMode(OutputMode.Append()).start()
+      in.addData(streamDocs.take(15): _*)
+      q.processAllAvailable()
+      in.addData(streamDocs.drop(15): _*)   // stateless: batches independent
+      q.processAllAvailable()
+      val plan = new java.io.ByteArrayOutputStream()
+      Console.withOut(plan)(q.explain())
+      q.stop()
+      (spark.table(sink).select("docId", "dupOf", "hamming")
+        .as[(Long, Long, Long)].collect().toSet, plan.toString)
+    }
+    val (got, _) = screen("t_idx_screen")
     // brute force: every (stream, corpus) pair within the hamming bound,
     // each exactly once (the first-agreeing-band filter's contract)
     val fp = Dedup.simhash((corpus ++ streamDocs).toDF("doc_id", "text"),
@@ -924,6 +929,11 @@ class StreamingSpec extends SparkSpec {
     } yield (b, c, h)).toSet
     got shouldBe expected
     got.size shouldBe spark.table("t_idx_screen").count()   // no pair dups
+    // broadcasting off: the index side's hint drops, the rows stay
+    val (off, offPlan) = withBroadcastThreshold("-1")(screen("t_idx_screen_off"))
+    off shouldBe got
+    offPlan should include("Join")
+    offPlan should not include "BroadcastHashJoin"
   }
 
   test("stream screen against the stored winnow index equals the batch screen") {

@@ -54,15 +54,7 @@ object ProfileQ169 {
       noop(Multimodal.mediaScreenCut(spark, mDir, arrivals, "doc_id", "media", 2000L))
     }
     time("substring probe (stored)") {
-      val nRef = spark.read.parquet(s"$sDir/roll").count() +
-        spark.read.parquet(s"$sDir/exact").count()
-      noop(Dedup.dupSpansRollingAgainstStored(spark, sDir, arrivals, "doc_id", "text",
-        broadcastRef = graft.functions.Plans.underBroadcastGate(
-          nRef, graft.functions.Plans.hashedDigestRowBytes)))
-    }
-    time("ref digest counts only") {
-      spark.read.parquet(s"$sDir/roll").count()
-      spark.read.parquet(s"$sDir/exact").count()
+      noop(Dedup.dupSpansRollingAgainstStored(spark, sDir, arrivals, "doc_id", "text"))
     }
     time("full gate") {
       SparkEntry.queries("q169_ingest_gate")(spark, dir).count()
