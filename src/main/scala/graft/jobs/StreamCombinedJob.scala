@@ -10,7 +10,7 @@ import org.apache.spark.sql.Row
 import graft.ml.MlPipeline
 import graft.operators.OneHot
 import graft.sinks.{KvSink, KvStore}
-import graft.streaming.{StreamJoin, StreamParse}
+import graft.streaming.{LocalCheckpointFileManager, StreamJoin, StreamParse}
 
 /** The reference's combined streaming pipeline composed end-to-end
   * (`pyspark/stream_combined.py`): two payload streams → lenient JSON
@@ -57,9 +57,13 @@ object StreamCombinedJob {
     * (stream_combined.py:227-256 without the driver collect). The row
     * key coalesces over the candidate event-time columns — on a
     * full-outer join either side may be null (the reference sketches the
-    * same coalesce for datetime←publish_timestamp, stream_stock.py:65). */
+    * same coalesce for datetime←publish_timestamp, stream_stock.py:65).
+    * Checkpoint and state-store files go through
+    * [[LocalCheckpointFileManager]] unless the session names its own
+    * `spark.sql.streaming.checkpointFileManagerClass`. */
   def writer(df: DataFrame, keyTsCols: Seq[String], families: Map[String, Seq[String]],
       store: KvStore, checkpointDir: String): DataStreamWriter[Row] = {
+    LocalCheckpointFileManager.installUnlessSet(df.sparkSession)
     val keyed = df.withColumn("row_key",
       KvSink.minuteKey(coalesce(keyTsCols.map(col): _*)))
     keyed.writeStream

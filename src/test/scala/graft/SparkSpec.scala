@@ -29,4 +29,12 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", limit)
     try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
+
+  /** Run `body` with session conf `key` set to `value` (`None`: unset),
+    * restoring the session's previous value afterwards. */
+  def withSessionConf[T](key: String, value: Option[String])(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -1,7 +1,13 @@
 package graft.jobs
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SQLContext
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,12 +15,61 @@ import org.apache.spark.sql.types._
 import graft.SparkSpec
 import graft.ml.MlPipeline
 import graft.sinks.InMemoryKvStore
+import graft.streaming.LocalCheckpointFileManager
 
 /** The reference's three job families composed end-to-end (SURVEY.md §3). */
 class JobsSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** Sets Spark's checkpoint-manager key to `cls`, or unsets it (`None`:
+    * `StreamCombinedJob.writer` installs the engine's default). */
+  private def withCheckpointManager[T](cls: Option[String])(body: => T): T =
+    withSessionConf(LocalCheckpointFileManager.ConfKey, cls)(body)
+  private val sparkDefaultManager = Some(classOf[FileContextBasedCheckpointFileManager].getName)
+
+  /** The speed layer's weather ⋈ stock join into [[InMemoryKvStore]].
+    * Both sides read one MemoryStream (split by payload field), so each
+    * `add` is exactly one micro-batch; the feed survives a restart, as
+    * in T7b. */
+  private class CombinedStream(implicit ctx: SQLContext) {
+    private val wSchema = StructType(Seq(
+      StructField("ts", TimestampType), StructField("temp", DoubleType)))
+    private val sSchema = StructType(Seq(
+      StructField("ts", TimestampType), StructField("close", DoubleType)))
+    private val feed = MemoryStream[String]
+    private def payloads(field: String) =
+      feed.toDF().filter(col("value").contains(s"\"$field\"")).withColumnRenamed("value", "payload")
+    def start(chk: String) = StreamCombinedJob.writer(
+      StreamCombinedJob.joined(
+        StreamCombinedJob.Side(payloads("temp"), wSchema, "ts", "weather"),
+        StreamCombinedJob.Side(payloads("close"), sSchema, "ts", "stock"))
+        .select("timestamp_weather", "timestamp_stock", "temp", "close"),
+      Seq("timestamp_weather", "timestamp_stock"),
+      Map("weather" -> Seq("temp"), "stock" -> Seq("close")),
+      InMemoryKvStore, chk).start()
+    /** `weather`/`stock`: (time of day on 2024-03-05, value). */
+    def add(weather: Seq[(String, Double)], stock: Seq[(String, Double)]): Unit =
+      feed.addData(
+        weather.map { case (t, v) => s"""{"ts":"2024-03-05 $t","temp":"$v"}""" } ++
+          stock.map { case (t, v) => s"""{"ts":"2024-03-05 $t","close":"$v"}""" })
+    def addPair(hour: Int, minute: Int): Unit =
+      add(Seq(f"$hour%02d:$minute%02d:00" -> minute), Seq(f"$hour%02d:$minute%02d:10" -> (100.0 + minute)))
+  }
+
+  /** Relative path → POSIX mode of every file and directory under `dir`,
+    * `.crc` sidecars included, checkpoint temp files (`.<name>.<uuid>.tmp`) not. */
+  private def checkpointTree(dir: String): Map[String, String] = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_ != root)
+      .filterNot(p => p.getFileName.toString.matches(".*\\.tmp(\\.crc)?"))
+      .map(p => root.relativize(p).toString ->
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))
+      .toMap
+    finally walk.close()
+  }
 
   test("batch aggregate job: fragmented live parquet → hourly stats + mode → KV rows") {
     InMemoryKvStore.clear()
@@ -209,5 +264,87 @@ class JobsSpec extends SparkSpec {
       metrics.sloViolations(names.head) shouldBe empty
       metrics.progresses.flatMap(_.watermark).max should startWith("2024-03-05")
     } finally spark.streams.removeListener(metrics)
+  }
+
+  test("checkpoints from Spark's default and the engine's local manager are interchangeable") {
+    // phase 1 under one manager, restart on the same checkpoint under the
+    // other: a weather row waits in join state across the restart and
+    // must still meet its stock row; nothing before it is re-emitted.
+    // Events sit two minutes apart, beyond the ±30 s join tolerance.
+    implicit val ctx: SQLContext = spark.sqlContext
+    def run(first: Option[String], second: Option[String]) = {
+      val chk = tmpDir("mgr_chk")
+      val s = new CombinedStream
+      InMemoryKvStore.clear()
+      withCheckpointManager(first) {
+        val q = s.start(chk)
+        for (m <- Seq(0, 2, 4)) { s.addPair(10, m); q.processAllAvailable() }
+        s.add(Seq("10:06:00" -> 6.0), Nil) // its stock row only arrives after the restart
+        q.processAllAvailable()
+        q.stop()
+      }
+      val phase1 = InMemoryKvStore.data.toMap
+      val tree1 = checkpointTree(chk)
+      InMemoryKvStore.clear()
+      withCheckpointManager(second) {
+        val q = s.start(chk)
+        s.add(Nil, Seq("10:06:10" -> 106.0))
+        q.processAllAvailable()
+        for (m <- Seq(8, 10)) { s.addPair(10, m); q.processAllAvailable() }
+        q.stop()
+      }
+      (phase1, InMemoryKvStore.data.toMap, tree1, checkpointTree(chk))
+    }
+    // a background snapshot would add files to one run only
+    val ((aRows1, aRows2, aTree1, aTree2), (bRows1, bRows2, bTree1, bTree2)) =
+      withSessionConf("spark.sql.streaming.stateStore.minDeltasForSnapshot", Some("1000")) {
+        (run(sparkDefaultManager, None), run(None, sparkDefaultManager))
+      }
+
+    def keys(minutes: Int*) = minutes.map(m => f"2024-03-05_10-$m%02d").toSet
+    aRows1.keySet shouldBe keys(0, 2, 4)
+    aRows2.keySet shouldBe keys(6, 8, 10) // no reprocessing
+    aRows2("2024-03-05_10-06") shouldBe Map( // no loss across the restart
+      "weather" -> Map("temp" -> "6.0"), "stock" -> Map("close" -> "106.0"))
+    bRows1 shouldBe aRows1
+    bRows2 shouldBe aRows2
+
+    // same files, .crc sidecars and modes whichever manager wrote them
+    aTree1.keys.exists(_.endsWith(".delta")) shouldBe true
+    aTree1.keys.exists(_.endsWith(".crc")) shouldBe true
+    bTree1 shouldBe aTree1
+    bTree2 shouldBe aTree2
+  }
+
+  test("the combined stream starts no shell process for checkpoints or state") {
+    // without libhadoop, Hadoop's local filesystem forks chmod/readlink
+    // through org.apache.hadoop.util.Shell; a JFR jdk.ProcessStart
+    // recording over ~20 micro-batches catches any such fork
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    implicit val ctx: SQLContext = spark.sqlContext
+    InMemoryKvStore.clear()
+    val s = new CombinedStream
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = Paths.get(tmpDir("spawn_jfr"), "run.jfr")
+    rec.start()
+    try withCheckpointManager(None) {
+      val q = s.start(tmpDir("spawn_chk"))
+      for (m <- 0 until 40 by 2) { s.addPair(11, m); q.processAllAvailable() }
+      q.stop()
+      q.recentProgress.count(_.numInputRows > 0) shouldBe 20
+    } finally {
+      rec.stop()
+      rec.dump(dump)
+      rec.close()
+    }
+    InMemoryKvStore.data.keySet.count(_.startsWith("2024-03-05_11-")) shouldBe 20
+    val shellForks = RecordingFile.readAllEvents(dump).asScala
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
+      .map(_.getString("command"))
+    shellForks shouldBe empty
   }
 }
