@@ -11,8 +11,7 @@ object Plans {
     * stages sized by [[shufflePartitions]] are CPU-heavy per byte
     * (quadratic pair enumeration/verification over kilobyte rows), so
     * partitions carry far more compute than their bytes suggest. */
-  val FanoutBytesPerPartitionKey = "spark.graft.fanout.bytesPerPartition"
-  val DefaultFanoutBytesPerPartition: Long = 16L * 1024 * 1024
+  val FanoutBytesPerPartition: Long = 16L * 1024 * 1024
 
   /** The engine's explicit-N fan-out for CPU-heavy, small-byte stages
     * (`repartition(n)` is exempt from AQE coalescing — byte-based
@@ -20,7 +19,7 @@ object Plans {
     * every operator agrees.
     *
     * VOLUME-AWARE (round-16, guide §2): N = clamp(estimated input
-    * bytes / [[FanoutBytesPerPartitionKey]],
+    * bytes / [[FanoutBytesPerPartition]],
     * floor = min(defaultParallelism, cap),
     * cap = `spark.sql.shuffle.partitions`) instead of the session
     * constant alone. The floor keeps every core busy (these stages are
@@ -36,18 +35,15 @@ object Plans {
     val sess = df.sparkSession
     val cap = sess.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val floor = math.min(cap, sess.sparkContext.defaultParallelism)
-    val perPart = sess.conf
-      .get(FanoutBytesPerPartitionKey, DefaultFanoutBytesPerPartition.toString)
-      .toLong
     // a streaming frame has no batch optimizedPlan (checkForBatch
     // throws) and no meaningful size estimate — cap, as before round 16
     if (df.isStreaming) return cap
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     // > 1 PiB = "no real estimate" (unknown leaves report
     // spark.sql.defaultSizeInBytes, Long.MaxValue by default)
-    if (bytes <= 0 || bytes > BigInt(1L << 50) || perPart <= 0) cap
-    else math.max(floor.toLong,
-      math.min(cap.toLong, (bytes.toLong + perPart - 1) / perPart)).toInt
+    if (bytes <= 0 || bytes > BigInt(1L << 50)) cap
+    else math.max(floor.toLong, math.min(cap.toLong,
+      (bytes.toLong + FanoutBytesPerPartition - 1) / FanoutBytesPerPartition)).toInt
   }
 
   // THE broadcast decision reads the session here and nowhere else: no
@@ -84,46 +80,5 @@ object Plans {
   def underBroadcastGate(nRows: Long, bytesPerRow: Long): Boolean = {
     val limit = broadcastLimit
     limit > 0 && nRows * bytesPerRow <= limit
-  }
-
-  /** Driver-side parquet row count: sum the footer record counts of a
-    * stored artifact's files without scheduling a Spark job. The
-    * broadcast GATES only need the artifact's row count, and a
-    * `count()` job costs two scheduler round trips per gate read —
-    * measured 0.30 s of the q169 ingest gate's warm invocation for two
-    * ~40 k-row digest sets whose footers answer in milliseconds.
-    * Reads the files on EVERY call (nothing cached across runs); flat
-    * artifact directories only (the stored digest/posting layouts —
-    * no partition subdirectories). Hidden `_`/`.` entries are skipped,
-    * files and directories alike, exactly as Spark's reader skips them:
-    * commit markers, and the `_temporary` / `_spark_metadata`
-    * directories an interrupted write or a file sink leaves behind. */
-  def parquetRowCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    // Fail fast on layout drift (round-15 advice): a partitioned or
-    // unexpectedly-laid-out artifact would silently UNDERCOUNT here,
-    // and an undercount feeds the broadcast gate — wrongly forcing a
-    // corpus-sized broadcast build is exactly the failure the gate
-    // exists to prevent. Data files and hidden entries only.
-    val visible = fs.listStatus(p).filterNot { st =>
-      val name = st.getPath.getName
-      name.startsWith("_") || name.startsWith(".")
-    }
-    val rogue = visible.filter(st =>
-      st.isDirectory || !st.getPath.getName.endsWith(".parquet"))
-    require(rogue.isEmpty,
-      s"parquetRowCount($path): flat parquet artifact expected, found " +
-        rogue.map(_.getPath.getName).take(3).mkString(", ") +
-        " — a partitioned/drifted layout would undercount the broadcast gate")
-    visible.iterator
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
   }
 }

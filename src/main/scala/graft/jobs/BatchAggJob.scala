@@ -13,13 +13,13 @@ import graft.sources.SchemaReader
   * (`pyspark/batch_stock.py` / `batch_openweather.py` / `batch_tomtom.py`):
   * glob-enumerate live parquet → schema-coerced read → timezone-shifted
   * time features → hourly avg/count aggregates (+ optional per-hour mode
-  * of a categorical column, joined back on the hour keys) → sort →
-  * wide-column KV write keyed `"{date}_{hour}"`.
+  * of a categorical column, joined back on the hour keys) → wide-column
+  * KV write keyed `"{date}_{hour}"` ([[aggregate]] adds the sort).
   *
   * Differences from the reference, per SURVEY.md §4: one multi-path
-  * vectorized scan instead of a per-file union loop, and the KV write
-  * runs on executors via foreachPartition instead of a driver-side
-  * collect loop — same row-key/family/batch contract, no driver
+  * vectorized scan per footer shape instead of a per-file union loop,
+  * and the KV write runs on executors via foreachPartition instead of a
+  * driver-side collect loop — same row-key/family/batch contract, no driver
   * materialization.
   */
 object BatchAggJob {
@@ -32,10 +32,8 @@ object BatchAggJob {
       tz: Option[String] = None, // e.g. America/New_York (batch_stock.py:71)
       skew: Option[String] = None) // e.g. "INTERVAL 20 minutes" (batch_stock.py:72)
 
-  /** Build the aggregate frame (pure plan — no side effects). */
-  /** The aggregate WITHOUT the query-facing global sort — the KV write
-    * path uses this (the store is keyed; ordering is meaningless there
-    * and the sort is a full range exchange). */
+  /** The aggregate frame (pure plan) WITHOUT the query-facing sort, for
+    * the keyed KV write: the sort is a range exchange plus a job. */
   def aggregateUnsorted(spark: SparkSession, paths: Seq[String], cfg: Config): DataFrame = {
     val raw = SchemaReader.read(spark, cfg.schema, paths)
     val shifted = (cfg.tz, cfg.skew) match {
@@ -68,7 +66,7 @@ object BatchAggJob {
     * number of aggregate rows written — counted with an accumulator
     * inside the same foreachPartition pass, so the pipeline executes
     * exactly once (a trailing count() would re-run the whole
-    * read→shuffle→sort plan). */
+    * read→aggregate plan). */
   def run(spark: SparkSession, paths: Seq[String], cfg: Config,
       store: KvStore, family: String = "stats", batchSize: Int = 5000): Long = {
     val agg = aggregateUnsorted(spark, paths, cfg)

@@ -1239,8 +1239,8 @@ object Dedup {
     val meta = spark.read.parquet(s"$dir/meta").head()
     val k = meta.getAs[Number]("k").intValue()
     val docs = df.filter(col(textCol).isNotNull)
-    val nRef = Plans.parquetRowCount(spark, s"$dir/roll") +
-      Plans.parquetRowCount(spark, s"$dir/exact")
+    val nRef = Seq("roll", "exact")
+      .flatMap(a => graft.sources.SchemaReader.footers(spark, s"$dir/$a")).map(_.rows).sum
     val verified =
       if (Plans.underBroadcastGate(nRef, 48L)) {
         // ROW-LOCAL bloom nomination (round 16, guide §2.4): under the

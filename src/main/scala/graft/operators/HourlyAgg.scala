@@ -10,7 +10,8 @@ import graft.functions.{ExactAgg, PortableRound, TimeOps}
   * Reference shape: `groupBy(date, hour).agg(count, round(avg(x),2)×N)`
   * then ascending sort (`pyspark/batch_stock.py:76-85`, weather ×9
   * `batch_openweather.py:91-100`). Catalyst plans this as partial
-  * HashAggregate → shuffle on (date,hour) → final HashAggregate → sort —
+  * HashAggregate → shuffle on (date,hour) → final HashAggregate (callers
+  * that show the rows add the sort; a keyed KV write needs none) —
   * map-side combine means the shuffle carries one row per (date,hour)
   * per task, not the raw events, so the shape holds at 100 TB (output
   * cardinality = dates×24, tiny regardless of input size).
@@ -18,8 +19,8 @@ import graft.functions.{ExactAgg, PortableRound, TimeOps}
 object HourlyAgg {
 
   /** Derive (date, hour) keys from `tsCol` and attach rounded avg + the
-    * group count, ascending-sorted — the `batch_stock` hourly-stats
-    * query shape. */
+    * group count — the `batch_stock` hourly-stats query shape, unsorted
+    * (callers that need `(date, hour)` order add it). */
   def hourlyStats(df: DataFrame, tsCol: String, measures: Seq[String]): DataFrame = {
     val keyed = df
       .withColumn("date", TimeOps.dateKey(col(tsCol)))
@@ -35,7 +36,6 @@ object HourlyAgg {
         }
     keyed.groupBy(col("date"), col("hour"))
       .agg(aggs.head, aggs.tail: _*)
-      .orderBy(asc("date"), asc("hour"))
   }
 
   /** Conditional (null-filtered) grouped average, re-joined onto the base

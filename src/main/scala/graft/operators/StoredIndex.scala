@@ -293,9 +293,8 @@ object StoredIndex {
     * live-name gap is one rename wide (vs a whole recursive delete in
     * the delete-then-rename form), a crash inside the gap leaves BOTH
     * a complete `_tmp` and a rollback `_old`, and the old copy is only
-    * deleted after the new one holds the live name. */
-  def swapRewrite(spark: SparkSession, path: String)(
-      write: String => Unit): Unit = {
+    * deleted after the new one holds the live name. Returns `write`'s. */
+  def swapRewrite[A](spark: SparkSession, path: String)(write: String => A): A = {
     val p = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "_old")
@@ -303,11 +302,12 @@ object StoredIndex {
     recoverSwap(fs, p)
     fs.delete(tmp, true) // an incomplete tmp from a crash DURING write
     fs.delete(old, true) // a rollback the prior swap never cleaned
-    write(tmp.toString)
+    val result = write(tmp.toString)
     if (fs.exists(p))
       require(fs.rename(p, old), s"rename $path -> $old failed")
     require(fs.rename(tmp, p), s"rename $tmp -> $path failed")
     fs.delete(old, true)
+    result
   }
 
   /** Enforce the append-only id discipline: all batch ids must exceed

@@ -21,7 +21,8 @@ object BatchQueries {
     * (`batch_stock.py:76-85` shape). */
   private val q01 = Q(
     "q01_hourly_agg",
-    (s, dir) => HourlyAgg.hourlyStats(t(s, dir, "events"), "ts", Seq("value")),
+    (s, dir) => HourlyAgg.hourlyStats(t(s, dir, "events"), "ts", Seq("value"))
+      .orderBy("date", "hour"),
     Some(s"""SELECT CAST(ts AS DATE) AS date, CAST(hour(ts) AS BIGINT) AS hour,
       count(*) AS n,
       ${ExactAgg.avg2Sql("value")} AS avg_value, ${ExactAgg.sum2Sql("value")} AS sum_value,

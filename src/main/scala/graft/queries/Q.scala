@@ -63,9 +63,11 @@ object Artifacts {
 object Tables {
   import org.apache.spark.sql.functions.expr
   import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+  import graft.sources.SchemaReader
 
-  /** Read a testdata table, normalizing `events.ts` to a session-tz
-    * TIMESTAMP regardless of how the driver generated the parquet:
+  /** Read a testdata table under its footer schema (no inference job),
+    * normalizing `events.ts` to a session-tz TIMESTAMP regardless of how
+    * the driver generated the parquet:
     *  - TIMESTAMP(NANOS): Spark 4 reads it only via the nanos-as-long
     *    legacy conf (set here at runtime — it is a dynamic SQL conf);
     *    rebuild a µs-truncated timestamp. All engine queries use
@@ -80,7 +82,8 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => () }
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(SchemaReader.unionSchema(SchemaReader.footers(spark, path))).parquet(path)
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
     else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)

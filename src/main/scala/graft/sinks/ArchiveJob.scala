@@ -1,10 +1,13 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, lit}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+
+import graft.operators.StoredIndex
+import graft.sources.SchemaReader
 
 /** Live→historical archival rotation — capabilities S5/S6 and the merge
   * job lifecycle (SURVEY.md §3.2).
@@ -82,27 +85,40 @@ object ArchiveJob {
   private def parquetOf(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Seq[String] =
     statuses.map(_.getPath).filter(_.getName.endsWith(".parquet")).map(_.toString)
 
-  /** Returns (archived path, row count). */
-  def run(spark: SparkSession, liveDir: String, historicalDir: String,
-      prefix: String, date: LocalDate = LocalDate.now()): (String, Long) = {
+  private def footerRows(spark: SparkSession, dir: String): Long =
+    SchemaReader.footers(spark, dir).map(_.rows).sum
+
+  /** The rotation both layouts share: snapshot live/ once, refuse a
+    * non-flat layout, read the files under the union of their footer
+    * schemas (a column only some carry is archived, not dropped; a type
+    * conflict fails before anything is written), let `archive` write and
+    * verify (it gets the footer row count), then delete exactly the
+    * files read plus write-marker FILES; marker DIRS stay — see
+    * [[requireFlatLayout]]. Returns the rows archived. */
+  private def rotate(spark: SparkSession, liveDir: String)(
+      archive: (DataFrame, Long) => Unit): Long = {
     val snapshot = snapshotFiles(spark, liveDir)
     requireFlatLayout(snapshot, liveDir)
     val dataFiles = parquetOf(snapshot)
-    val dest = s"$historicalDir/$prefix-${date.format(stampFmt)}.parquet"
-    if (dataFiles.isEmpty) return (dest, 0L)
-    val df = spark.read.parquet(dataFiles: _*)
-    val expected = df.count()
-    df.write.mode("overwrite").parquet(dest)
-
-    // verify before destroying the source (hardening vs merge_stock.py:93)
-    val written = spark.read.parquet(dest).count()
-    require(written == expected, s"archive verify failed: wrote $written, expected $expected")
-
+    if (dataFiles.isEmpty) return 0L
+    val footers = dataFiles.flatMap(SchemaReader.footers(spark, _))
+    val expected = footers.map(_.rows).sum
+    archive(spark.read.schema(SchemaReader.unionSchema(footers)).parquet(dataFiles: _*), expected)
     val fs = new Path(liveDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // exactly the files read, plus write-marker FILES (flat layout
-    // enforced above); marker DIRS stay — see requireFlatLayout
     snapshot.filterNot(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
-    (dest, expected)
+    expected
+  }
+
+  /** Returns (archived path, row count). */
+  def run(spark: SparkSession, liveDir: String, historicalDir: String,
+      prefix: String, date: LocalDate = LocalDate.now()): (String, Long) = {
+    val dest = s"$historicalDir/$prefix-${date.format(stampFmt)}.parquet"
+    (dest, rotate(spark, liveDir) { (df, expected) =>
+      df.write.mode("overwrite").parquet(dest)
+      // verify before destroying the source (hardening vs merge_stock.py:93)
+      val written = footerRows(spark, dest)
+      require(written == expected, s"archive verify failed: wrote $written, expected $expected")
+    })
   }
 
   /** Date-partitioned archival — the 100 TB layout the single dated
@@ -125,110 +141,99 @@ object ArchiveJob {
   def runPartitioned(spark: SparkSession, liveDir: String, historicalDir: String,
       dateCol: String, sortCol: String): Long = {
     import org.apache.spark.sql.functions.{col, to_date}
-    val snapshot = snapshotFiles(spark, liveDir)
-    requireFlatLayout(snapshot, liveDir)
-    val dataFiles = parquetOf(snapshot)
-    if (dataFiles.isEmpty) return 0L
-    val df = spark.read.parquet(dataFiles: _*)
-    val expected = df.count()
-    val keyed = df.withColumn("date_key", to_date(col(dateCol)))
-    val affected = keyed.select("date_key").distinct().collect().map(_.get(0))
-    // null date_keys (null or unparseable dateCol) land in the default
-    // partition; `isin(null)` never matches them, which would make the
-    // post-append verify under-count `after` and throw AFTER a successful
-    // append (live files kept, re-run double-appends). Match them with an
-    // explicit isNull arm instead.
-    val (nullKeys, realKeys) = affected.partition(_ == null)
-    def affectedPred: org.apache.spark.sql.Column = {
-      val base =
-        if (realKeys.isEmpty) lit(false) else col("date_key").isin(realKeys: _*)
-      if (nullKeys.nonEmpty) base || col("date_key").isNull else base
+    rotate(spark, liveDir) { (df, expected) =>
+      val keyed = df.withColumn("date_key", to_date(col(dateCol)))
+      val affected = keyed.select("date_key").distinct().collect().map(_.get(0))
+      // null date_keys (null or unparseable dateCol) land in the default
+      // partition; `isin(null)` never matches them, which would make the
+      // post-append verify under-count `after` and throw AFTER a successful
+      // append (live files kept, re-run double-appends). Match them with an
+      // explicit isNull arm instead.
+      val (nullKeys, realKeys) = affected.partition(_ == null)
+      def affectedPred: org.apache.spark.sql.Column = {
+        val base =
+          if (realKeys.isEmpty) lit(false) else col("date_key").isin(realKeys: _*)
+        if (nullKeys.nonEmpty) base || col("date_key").isNull else base
+      }
+      def affectedCount(): Long = {
+        val fs = new Path(historicalDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(new Path(historicalDir))) 0L
+        else spark.read.parquet(historicalDir).filter(affectedPred).count()
+      }
+      val prior = affectedCount()
+      keyed.sortWithinPartitions(sortCol)
+        .write.mode("append")
+        .partitionBy("date_key")
+        .parquet(historicalDir)
+      val after = affectedCount()
+      require(after == prior + expected,
+        s"partitioned archive verify failed: affected partitions hold " +
+          s"$after rows, expected $prior prior + $expected new")
     }
-    def affectedCount(): Long = {
-      val fs = new Path(historicalDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new Path(historicalDir))) 0L
-      else spark.read.parquet(historicalDir).filter(affectedPred).count()
+  }
+
+  /** Targeted deletion: rewrite a parquet dir WITHOUT the rows matching
+    * `predicate` (the right-to-be-forgotten / bad-source purge shape —
+    * parquet files are immutable, so deletion is a filtered rewrite).
+    * Same crash-safe swap as [[compact]]; the survivors are verified
+    * (surviving + deleted = original) before it. Returns (rows deleted,
+    * rows kept). For hive-partitioned archives run it per partition
+    * path — or prune first and rewrite only partitions that can contain
+    * matches. */
+  def deleteWhere(spark: SparkSession, dir: String,
+      predicate: org.apache.spark.sql.Column): (Long, Long) = {
+    // maintenance op: `dir` must be QUIESCENT — the final swap replaces
+    // the whole directory, so files arriving mid-rewrite would be lost
+    // (the live-ingest rotations above snapshot their file list instead)
+    StoredIndex.swapRewrite(spark, dir) { tmp =>
+      val df = spark.read.parquet(dir)
+      val total = df.count()
+      df.filter(!coalesce(predicate, lit(false))).write.mode("overwrite").parquet(tmp)
+      val kept = footerRows(spark, tmp)
+      val matched = df.filter(coalesce(predicate, lit(false))).count()
+      require(kept + matched == total,
+        s"deleteWhere verify failed: kept $kept + deleted $matched != $total")
+      (matched, kept)
     }
-    val prior = affectedCount()
-    keyed.sortWithinPartitions(sortCol)
-      .write.mode("append")
-      .partitionBy("date_key")
-      .parquet(historicalDir)
-    val after = affectedCount()
-    require(after == prior + expected,
-      s"partitioned archive verify failed: affected partitions hold " +
-        s"$after rows, expected $prior prior + $expected new")
-    val fs = new Path(liveDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // exactly the files read, plus write-marker FILES (flat layout
-    // enforced above); marker DIRS stay — see requireFlatLayout
-    snapshot.filterNot(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
-    expected
   }
 
   /** Small-file compaction: rewrite a parquet dir into ~`targetRows`-row
     * files. Long-running ingestion accretes one file per micro-batch /
     * task; at archive scale the resulting millions of KB-files dominate
     * job startup (footer reads, scheduling, NameNode/liststore load), so
-    * periodic compaction is a first-class maintenance op. Writes to
-    * `<dir>.compact-tmp`, verifies the row count, then swaps (delete +
-    * rename — verify happens BEFORE the source is destroyed, matching
-    * [[run]]'s discipline; a crash between the two leaves the data
-    * intact in the tmp dir). Returns (files before, files after, rows).
+    * periodic compaction is a first-class maintenance op. The rewrite
+    * goes through [[StoredIndex.swapRewrite]]: written and row-count
+    * verified in `<dir>_tmp` before the source is touched, then swapped
+    * in, and a run that finds `dir` missing after a crash mid-swap
+    * finishes that swap first. Returns (files before, files after,
+    * rows).
     *
     * Operates on ONE leaf directory: for a hive-partitioned archive,
     * compact each partition path individually — rewriting the root
     * would fold the partition column into the data files and destroy
     * the layout (guarded below). */
-  /** Targeted deletion: rewrite a parquet dir WITHOUT the rows matching
-    * `predicate` (the right-to-be-forgotten / bad-source purge shape —
-    * parquet files are immutable, so deletion is a filtered rewrite).
-    * Same crash-safe order as [[compact]]: write the survivors to a tmp
-    * dir, verify surviving + deleted = original, then swap. Returns
-    * (rows deleted, rows kept). For hive-partitioned archives run it
-    * per partition path — or prune first and rewrite only partitions
-    * that can contain matches. */
-  def deleteWhere(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): (Long, Long) = {
-    // maintenance op: `dir` must be QUIESCENT — the final swap replaces
-    // the whole directory, so files arriving mid-rewrite would be lost
-    // (the live-ingest rotations above snapshot their file list instead)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val df = spark.read.parquet(dir)
-    val total = df.count()
-    val tmp = s"$dir.delete-tmp"
-    df.filter(!coalesce(predicate, lit(false))).write.mode("overwrite").parquet(tmp)
-    val kept = spark.read.parquet(tmp).count()
-    val matched = df.filter(coalesce(predicate, lit(false))).count()
-    require(kept + matched == total,
-      s"deleteWhere verify failed: kept $kept + deleted $matched != $total")
-    fs.delete(new Path(dir), true)
-    require(fs.rename(new Path(tmp), new Path(dir)), s"deleteWhere rename failed for $dir")
-    (matched, kept)
-  }
-
   def compact(spark: SparkSession, dir: String, targetRows: Long): (Int, Int, Long) = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partitionDirs = Option(fs.globStatus(new Path(s"$dir/*=*")))
-      .getOrElse(Array.empty).filter(_.isDirectory)
-    require(partitionDirs.isEmpty,
-      s"$dir is hive-partitioned (${partitionDirs.head.getPath.getName}, ...); " +
-        "compact each partition directory instead")
     def parquetFiles(p: String): Int =
       Option(fs.globStatus(new Path(s"$p/*.parquet"))).map(_.length).getOrElse(0)
-    val before = parquetFiles(dir)
-    val df = spark.read.parquet(dir)
-    val rows = df.count()
-    val nFiles = math.max(1, math.ceil(rows.toDouble / targetRows).toInt)
-    val tmp = s"$dir.compact-tmp"
-    // repartition(n) (round-robin) balances rows across exactly n files;
-    // coalesce(n) would skip the shuffle but inherits upstream skew and
-    // can't split large partitions.
-    df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
-    val written = spark.read.parquet(tmp).count()
-    require(written == rows, s"compact verify failed: wrote $written, expected $rows")
-    fs.delete(new Path(dir), true)
-    require(fs.rename(new Path(tmp), new Path(dir)), s"compact rename failed for $dir")
+    val (before, rows) = StoredIndex.swapRewrite(spark, dir) { tmp =>
+      val partitionDirs = Option(fs.globStatus(new Path(s"$dir/*=*")))
+        .getOrElse(Array.empty).filter(_.isDirectory)
+      require(partitionDirs.isEmpty,
+        s"$dir is hive-partitioned (${partitionDirs.head.getPath.getName}, ...); " +
+          "compact each partition directory instead")
+      val df = spark.read.parquet(dir)
+      val rows = df.count()
+      val nFiles = math.max(1, math.ceil(rows.toDouble / targetRows).toInt)
+      // repartition(n) (round-robin) balances rows across exactly n files;
+      // coalesce(n) would skip the shuffle but inherits upstream skew and
+      // can't split large partitions.
+      df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
+      val written = footerRows(spark, tmp)
+      require(written == rows, s"compact verify failed: wrote $written, expected $rows")
+      (parquetFiles(dir), rows)
+    }
     (before, parquetFiles(dir), rows)
   }
 }

@@ -3,7 +3,13 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
+import graft.streaming.StreamParse
 
 /** Schema-coerced, drift-tolerant parquet reader (capabilities S1–S4,
   * SURVEY.md §2.1).
@@ -16,12 +22,10 @@ import org.apache.spark.sql.types.StructType
   * (`pyspark/batch_stock.py:35`).
   *
   * Spark-first re-expression: the per-file union loop defeats
-  * FileSourceScanExec's multi-file parallelism, so the default here is a
-  * SINGLE multi-path vectorized scan (one codegen'd stage, schema/filter
-  * pushdown intact); the per-file `unionByName` fold remains as the
-  * fallback for structurally drifted fragment sets. At 100 TB the single
-  * scan is the only viable shape — one scan node, split planning by
-  * `spark.sql.files.maxPartitionBytes`, no N-way union of N scans.
+  * FileSourceScanExec's multi-file parallelism, so [[read]] unions one
+  * multi-path vectorized scan per footer shape — for agreeing fragments
+  * a SINGLE scan, the only viable shape at 100 TB (split planning by
+  * `spark.sql.files.maxPartitionBytes`, no N-way union of N scans).
   */
 object SchemaReader {
 
@@ -47,25 +51,71 @@ object SchemaReader {
     }.toSeq: _*)
   }
 
-  /** Fast path (default): one multi-path scan. Requires fragments that
-    * parquet's schema merge can reconcile; the declared schema is pushed
-    * into the scan so column pruning happens at the reader. */
-  def read(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame = {
-    // glob() legitimately returns Seq.empty on no match; without this
-    // the error is a misleading "unable to infer schema", not the real
-    // empty-input condition (readTolerant already guards)
-    require(paths.nonEmpty, "read: no input paths")
-    coerce(spark.read.parquet(paths: _*), schema)
+  /** One parquet file's footer: its Spark schema and record count. */
+  private[graft] case class Footer(path: String, schema: StructType, rows: Long)
+
+  /** THE footer walk every parquet source takes its schema and row
+    * counts from: on the driver, no Spark job (inference costs one per
+    * read), O(files), nothing cached. `path` is a file or a flat
+    * directory of part files: `_`/`.` entries are skipped as Spark's
+    * reader skips them, any other subdirectory fails (a partitioned
+    * layout would drop its partition column and undercount). Spark's own
+    * converter over the session conf gives the schema inference gives,
+    * `nanosAsLong` included. */
+  private[graft] def footers(spark: SparkSession, path: String): Seq[Footer] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    val top = fs.getFileStatus(new Path(path))
+    val files =
+      if (!top.isDirectory) Seq(top)
+      else {
+        val visible = fs.listStatus(top.getPath).toSeq
+          .filterNot(st => "_.".contains(st.getPath.getName.head))
+        val dirs = visible.filter(_.isDirectory).map(_.getPath.getName)
+        require(dirs.isEmpty, s"$path: flat parquet directory expected, found " +
+          s"subdirectories ${dirs.take(3).mkString(", ")} (a partitioned layout)")
+        visible.sortBy(_.getPath.getName)
+      }
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    files.map { st =>
+      // options from `conf`: the one-argument open parses a new Configuration per file
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+        HadoopReadOptions.builder(conf, st.getPath).build())
+      try Footer(st.getPath.toString, ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(st.getPath, r.getFooter), converter), r.getRecordCount)
+      finally r.close()
+    }
   }
 
-  /** Drift-tolerant path — capability S3: per-file read + coercion +
-    * `unionByName(allowMissingColumns = true)` fold
-    * (`batch_stock.py:18-36`, `ML_tomtom.py:31-49`). Use only when
-    * fragments disagree structurally. */
-  def readTolerant(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame = {
-    require(paths.nonEmpty, "readTolerant: no input paths")
-    val frames = paths.map(p => coerce(spark.read.parquet(p), schema))
-    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+  /** Every column of `footers` by name, in first-seen order (files
+    * without one read it as null); a type that differs between files
+    * fails, naming two of them. */
+  private[graft] def unionSchema(footers: Seq[Footer]): StructType = {
+    val seen = scala.collection.mutable.LinkedHashMap.empty[String, (StructField, String)]
+    for (f <- footers; field <- f.schema.fields) seen.get(field.name) match {
+      case None => seen(field.name) = (field, f.path)
+      case Some((first, from)) =>
+        require(DataType.equalsIgnoreNullability(first.dataType, field.dataType),
+          s"column '${field.name}' is ${first.dataType.simpleString} in $from " +
+            s"but ${field.dataType.simpleString} in ${f.path}")
+    }
+    StructType(seen.values.map(_._1).toSeq)
+  }
+
+  /** Capability S3 (`batch_stock.py:18-36`): parquet fragments (files or
+    * flat part-file directories) as the declared `schema`, one multi-path
+    * scan per footer schema (declared columns only, any order), each
+    * [[coerce]]d, folded with `unionByName`. Agreeing fragments (junk
+    * columns and column order aside) are one scan. */
+  def read(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame = {
+    val files = paths.flatMap(footers(spark, _))
+    require(files.nonEmpty, s"read: no parquet files in [${paths.mkString(", ")}]")
+    val names = schema.fieldNames.toSet
+    def declared(f: Footer): StructType = StructType(f.schema.fields.filter(c => names(c.name)))
+    files.groupBy(f => declared(f).fields.map(c => (c.name, c.dataType.catalogString)).sorted.toSeq)
+      .values.toSeq
+      .map(g => coerce(spark.read.schema(declared(g.head)).parquet(g.map(_.path): _*), schema))
+      .reduce(_.unionByName(_))
   }
 
   /** CSV with the same lenient-parse-then-coerce contract as the stream
@@ -97,21 +147,8 @@ object SchemaReader {
     * presence only), then declared-type coercion. Malformed lines
     * surface as all-null rows rather than failures, matching the
     * streaming payload parser's degradation. */
-  def readJson(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame = {
-    // atomic fields relax to string (lenient scalar coercion); nested
-    // struct/array/map fields keep their real type — a string field
-    // cannot be try_cast to a complex type, so the all-string form
-    // failed ANALYSIS for any nested schema (same fix as
-    // streaming.StreamParse.lenientSchema; PERMISSIVE json already
-    // nulls malformed nested values on its own)
-    import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructField}
-    val stringly = StructType(schema.fields.map {
-      case f @ StructField(_, _: StructType | _: ArrayType | _: MapType, _, _) =>
-        f.copy(nullable = true)
-      case f => StructField(f.name, StringType)
-    })
-    coerce(spark.read.schema(stringly).json(paths: _*), schema)
-  }
+  def readJson(spark: SparkSession, schema: StructType, paths: Seq[String]): DataFrame =
+    coerce(spark.read.schema(StreamParse.lenientSchema(schema)).json(paths: _*), schema)
 
   /** ORC with the declared-schema coercion contract — same columnar
     * scan/pushdown properties as parquet (ORC is the other common

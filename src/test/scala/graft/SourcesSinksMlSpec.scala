@@ -26,22 +26,99 @@ class SchemaReaderSpec extends SparkSpec {
     row.isNullAt(2) shouldBe true
   }
 
-  test("readTolerant unions structurally drifted fragments; glob enumerates them") {
+  /** (id, price, note) rows of `read` over `paths`, by id. */
+  private def rows(paths: Seq[String]): Seq[(Int, Option[Double], Option[String])] =
+    SchemaReader.read(spark, schema, paths).orderBy("id").collect().toSeq.map(r =>
+      (r.getInt(0), Option(r.get(1)).map(_.asInstanceOf[Double]), Option(r.getString(2))))
+
+  test("read keeps a column only one fragment carries, in either path order") {
     val dir = tmpDir("frags")
     Seq((1, 10.0)).toDF("id", "price").write.parquet(s"$dir/part1.parquet")
     Seq((2, "hello")).toDF("id", "note").write.parquet(s"$dir/part2.parquet")
+    Seq((3, 30.0, "there")).toDF("id", "price", "note").write.parquet(s"$dir/part3.parquet")
 
-    val paths = SchemaReader.glob(spark, s"$dir/*.parquet")
-    paths should have length 2
+    val paths = SchemaReader.glob(spark, s"$dir/*.parquet").sorted
+    paths should have length 3
+    val expected = Seq((1, Some(10.0), None), (2, None, Some("hello")), (3, Some(30.0), Some("there")))
+    rows(paths) shouldBe expected
+    rows(paths.reverse) shouldBe expected
+    rows(paths.take(2)) shouldBe expected.take(2)
+    rows(paths.take(2).reverse) shouldBe expected.take(2)
+  }
 
-    val got = SchemaReader.readTolerant(spark, schema, paths.sorted)
-      .orderBy("id").collect()
-    got(0).getInt(0) shouldBe 1
-    got(0).getDouble(1) shouldBe 10.0
-    got(0).isNullAt(2) shouldBe true
-    got(1).getInt(0) shouldBe 2
-    got(1).isNullAt(1) shouldBe true
-    got(1).getString(2) shouldBe "hello"
+  test("read coerces an INT/DOUBLE type drift of price across fragments") {
+    val dir = tmpDir("frags_types")
+    Seq((1, 10)).toDF("id", "price").write.parquet(s"$dir/a.parquet")
+    Seq((2, 2.5)).toDF("id", "price").write.parquet(s"$dir/b.parquet")
+    val paths = Seq(s"$dir/a.parquet", s"$dir/b.parquet")
+    val expected = Seq((1, Some(10.0), None), (2, Some(2.5), None))
+    rows(paths) shouldBe expected
+    rows(paths.reverse) shouldBe expected
+  }
+
+  test("read plans one scan when fragments agree up to column order and junk") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val dir = tmpDir("frags_agree")
+    Seq((1, 1.5, "a")).toDF("id", "price", "note").write.parquet(s"$dir/a.parquet")
+    Seq((2.5, "b", 2, "junk")).toDF("price", "note", "id", "UNNAMED_FIELD")
+      .write.parquet(s"$dir/b.parquet")
+    val got = SchemaReader.read(spark, schema, Seq(s"$dir/a.parquet", s"$dir/b.parquet"))
+    got.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r } should have length 1
+    got.orderBy("id").collect().map(r => (r.getInt(0), r.getDouble(1), r.getString(2))) shouldBe
+      Array((1, 1.5, "a"), (2, 2.5, "b"))
+  }
+
+  test("footer schema equals Spark's inferred schema for every testdata table") {
+    // a fixture of every column family the engine stores, plus whatever
+    // generated testdata this checkout holds under target/testdata
+    val fixture = tmpDir("footer_types")
+    spark.range(3).selectExpr("id", "cast(id AS int) AS i", "cast(id AS short) AS s",
+      "cast(id AS decimal(12, 2)) AS d", "cast(id AS float) AS f", "cast(id AS string) AS str",
+      "cast(cast(id AS string) AS binary) AS bin", "date_add(date'2024-03-05', cast(id AS int)) AS dt",
+      "timestamp_micros(id) AS ts", "cast(timestamp_micros(id) AS timestamp_ntz) AS ntz",
+      "array(id, id) AS arr", "map('k', id) AS m", "named_struct('a', id, 'b', array('x')) AS st",
+      "id % 2 = 0 AS flag")
+      .repartition(2).write.parquet(s"$fixture/types.parquet")
+    // TIMESTAMP(NANOS), which Spark cannot write and reads as long only
+    // under nanosAsLong: written with parquet's own example writer
+    locally {
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.hadoop.util.HadoopOutputFile
+      val nanos = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message m { required binary user (STRING); required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$fixture/nanos.parquet/part-0.parquet"),
+        spark.sparkContext.hadoopConfiguration)).withType(nanos).build()
+      try w.write(new SimpleGroupFactory(nanos).newGroup()
+        .append("user", "u1").append("ts", 1700000000000000123L))
+      finally w.close()
+    }
+    val tables = Seq(s"$fixture/types.parquet", s"$fixture/nanos.parquet") ++
+      SchemaReader.glob(spark, "target/testdata/*/*.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // as Tables.t reads
+    for (t <- tables) withClue(s"$t: ") {
+      val footers = SchemaReader.footers(spark, t)
+      footers should not be empty
+      spark.read.schema(SchemaReader.unionSchema(footers)).parquet(t).schema shouldBe
+        spark.read.parquet(t).schema
+    }
+    SchemaReader.footers(spark, s"$fixture/nanos.parquet").head.schema("ts").dataType shouldBe
+      LongType
+  }
+
+  test("Tables.t and read build their frames without a Spark job") {
+    val dir = tmpDir("nojobs")
+    Seq((1, 1.0, "a")).toDF("id", "price", "note").repartition(1)
+      .write.parquet(s"$dir/orders.parquet")
+    Seq((2, 2.0)).toDF("id", "price").write.parquet(s"$dir/more.parquet")
+    val (t, tJobs) = jobsDuring(graft.queries.Tables.t(spark, dir, "orders"))
+    tJobs shouldBe 0
+    t.schema.fieldNames shouldBe Array("id", "price", "note")
+    val (r, rJobs) = jobsDuring(
+      SchemaReader.read(spark, schema, Seq(s"$dir/orders.parquet", s"$dir/more.parquet")))
+    rJobs shouldBe 0
+    r.count() shouldBe 2
   }
 
   test("readCsv parses leniently and coerces to the declared schema") {
@@ -134,6 +211,10 @@ class EventsTsEncodingDriftSpec extends SparkSpec {
     val loaded = dirs.map(d => Tables.t(spark, d, "events"))
     // all three normalize to TIMESTAMP (never NTZ, never long)
     loaded.foreach(_.schema("ts").dataType shouldBe TimestampType)
+    // the footer walk decides each encoding's schema as inference does
+    for (p <- dirs.map(d => s"$d/events.parquet"))
+      spark.read.schema(SchemaReader.unionSchema(SchemaReader.footers(spark, p)))
+        .parquet(p).schema shouldBe spark.read.parquet(p).schema
 
     // unix_micros-based operators must run and agree across encodings
     val sessions = loaded.map(df =>
@@ -282,6 +363,49 @@ class ArchiveJobSpec extends SparkSpec {
     spark.read.parquet(hist).filter(col("date_key").isNull).count() shouldBe 2
   }
 
+  test("run and runPartitioned archive a column only some live fragments carry") {
+    val root = tmpDir("archive_union")
+    // two appends into one flat live/ dir, the second with an extra column
+    def land(live: String): Unit = {
+      Seq((1, "2024-03-05 10:00:00")).toDF("id", "ts_s")
+        .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
+        .coalesce(1).write.parquet(live)
+      Seq(("x", "2024-03-05 11:00:00", 2)).toDF("note", "ts_s", "id")
+        .withColumn("ts", to_timestamp(col("ts_s"))).drop("ts_s")
+        .coalesce(1).write.mode("append").parquet(live)
+    }
+    def notes(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id").select("note").collect().map(r => Option(r.getString(0))).toSeq
+
+    land(s"$root/live")
+    val (dest, n) = ArchiveJob.run(spark, s"$root/live", s"$root/hist", "stock")
+    n shouldBe 2
+    notes(spark.read.parquet(dest)) shouldBe Seq(None, Some("x"))
+    SchemaReader.glob(spark, s"$root/live/*") shouldBe empty
+
+    land(s"$root/live2")
+    ArchiveJob.runPartitioned(spark, s"$root/live2", s"$root/hist2", "ts", "id") shouldBe 2
+    notes(spark.read.parquet(s"$root/hist2")) shouldBe Seq(None, Some("x"))
+    SchemaReader.glob(spark, s"$root/live2/*") shouldBe empty
+  }
+
+  test("run fails on a live type conflict before writing, live intact") {
+    val root = tmpDir("archive_conflict")
+    val live = s"$root/live"
+    Seq((1, 10)).toDF("id", "price").coalesce(1).write.parquet(live)
+    Seq((2, 2.5)).toDF("id", "price").coalesce(1).write.mode("append").parquet(live)
+    val before = SchemaReader.glob(spark, s"$live/*.parquet")
+    before should have length 2
+    val e = the[IllegalArgumentException] thrownBy
+      ArchiveJob.run(spark, live, s"$root/hist", "stock")
+    e.getMessage should include ("'price'")
+    before.foreach(f => e.getMessage should include (f))
+    an[IllegalArgumentException] should be thrownBy
+      ArchiveJob.runPartitioned(spark, live, s"$root/hist", "id", "id")
+    SchemaReader.glob(spark, s"$live/*.parquet") shouldBe before
+    SchemaReader.glob(spark, s"$root/hist") shouldBe empty
+  }
+
   test("compact rewrites many small files into few, preserving rows") {
     val dir = s"${tmpDir("compact")}/data"
     // 10 single-row files (range partitioning on 10 distinct keys is 1:1)
@@ -302,6 +426,21 @@ class ArchiveJobSpec extends SparkSpec {
       .write.partitionBy("p").parquet(part)
     an[IllegalArgumentException] should be thrownBy
       ArchiveJob.compact(spark, part, 5L)
+  }
+
+  test("compact and deleteWhere finish a swap that crashed between its renames") {
+    val dir = s"${tmpDir("swap_crash")}/data"
+    (1 to 6).toDF("id").repartition(3).write.parquet(dir)
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the crash leaves the complete replacement under <dir>_tmp and no <dir>
+    def crash(): Unit = fs.rename(new Path(dir), new Path(s"${dir}_tmp"))
+    crash()
+    ArchiveJob.compact(spark, dir, targetRows = 10L)._3 shouldBe 6
+    crash()
+    ArchiveJob.deleteWhere(spark, dir, col("id") > 4) shouldBe ((2L, 4L))
+    spark.read.parquet(dir).as[Int].collect().sorted shouldBe (1 to 4).toArray
+    fs.exists(new Path(s"${dir}_tmp")) shouldBe false
   }
 
   test("deleteWhere purges matching rows; null predicates keep the row") {

@@ -30,6 +30,33 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
+  /** Spark jobs that `body` starts on this thread, e.g. while it builds
+    * a DataFrame. Listener events arrive asynchronously but in order, so
+    * a marker job started after `body` flushes every earlier one. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.spec.jobsDuring"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, "end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      var jobs = 0
+      var next = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (next == tag) { jobs += 1; next = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS) }
+      assert(next == "end", "the marker job never reached the listener")
+      (out, jobs)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Run `body` with session conf `key` set to `value` (`None`: unset),
     * restoring the session's previous value afterwards. */
   def withSessionConf[T](key: String, value: Option[String])(body: => T): T = {

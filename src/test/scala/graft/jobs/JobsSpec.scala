@@ -100,6 +100,43 @@ class JobsSpec extends SparkSpec {
     InMemoryKvStore.data("2024-03-05_11")("weather")("mode_cond") shouldBe "snow"
   }
 
+  test("the KV job writes the hourly aggregate unsorted: no Sort, no range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    InMemoryKvStore.clear()
+    val live = s"${tmpDir("kv_unsorted")}/live"
+    Seq((ts("2024-03-05 10:05:00"), 10.0), (ts("2024-03-05 11:35:00"), 20.0))
+      .toDF("ts", "temp").write.parquet(live)
+    val schema = StructType(Seq(StructField("ts", TimestampType), StructField("temp", DoubleType)))
+    // the plan KvSink.writeBatch runs, as its foreachPartition action
+    // reports it once the listener bus delivers the event
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (action == "foreachPartition") writes.add(qe)
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val written = try {
+      BatchAggJob.run(spark, Seq(live),
+        BatchAggJob.Config(schema, "ts", Seq("temp"), tz = Some("America/New_York"),
+          skew = Some("INTERVAL 20 minutes")),
+        InMemoryKvStore) shouldBe 2
+      writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    written should not be null
+    object plans extends AdaptiveSparkPlanHelper
+    val plan = written.executedPlan
+    plans.collect(plan) { case e: ShuffleExchangeExec => e } should not be empty // the aggregate's
+    plans.collect(plan) { case s: SortExec => s } shouldBe empty
+    plans.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    } shouldBe empty
+  }
+
   test("day cycle: live ingest → batch KV → archive rotation → next day lands clean") {
     // The reference's operational loop (SURVEY §3.1 + §3.2) chained
     // over one directory tree: aggregate the live folder to the KV

@@ -90,25 +90,27 @@ class OovVocabSpec extends SparkSpec {
 }
 
 class PlansHelpersSpec extends graft.SparkSpec {
-  test("parquetRowCount (footer metadata, no job) equals count() on a stored artifact") {
+  import graft.sources.SchemaReader.footers
+
+  private def footerRows(dir: String): Long = footers(spark, dir).map(_.rows).sum
+
+  test("footer walk row counts (no job) equal count() on a stored artifact") {
     val dir = tmpDir("plans_rowcount")
     spark.range(1234).selectExpr("id", "id * 2 AS v")
       .repartition(3).write.mode("overwrite").parquet(dir)
-    graft.functions.Plans.parquetRowCount(spark, dir) shouldBe
-      spark.read.parquet(dir).count()
+    footerRows(dir) shouldBe spark.read.parquet(dir).count()
   }
 
-  test("parquetRowCount fails fast on a partitioned/drifted layout (round-15 advice)") {
+  test("footer walk fails fast on a partitioned layout (round-15 advice)") {
     val dir = tmpDir("plans_rowcount_part")
     spark.range(100).selectExpr("id", "id % 3 AS p")
       .write.mode("overwrite").partitionBy("p").parquet(dir)
     // subdirectories mean the flat sum would silently UNDERCOUNT and
     // mis-gate a broadcast — must be an error, not a wrong number
-    an[IllegalArgumentException] should be thrownBy
-      graft.functions.Plans.parquetRowCount(spark, dir)
+    an[IllegalArgumentException] should be thrownBy footerRows(dir)
   }
 
-  test("parquetRowCount skips hidden _/. directories as Spark's reader does, still fails on k=v") {
+  test("footer walk skips _/. dirs as Spark's reader does, fails on k=v") {
     import java.nio.file.{Files, Paths}
     val dir = tmpDir("plans_rowcount_hidden")
     spark.range(500).repartition(2).write.mode("overwrite").parquet(dir)
@@ -121,31 +123,35 @@ class PlansHelpersSpec extends graft.SparkSpec {
     Files.copy(part, tmp.resolve(part.getFileName))
     Files.createDirectories(Paths.get(dir, "_spark_metadata"))
     Files.createDirectories(Paths.get(dir, ".staging"))
-    graft.functions.Plans.parquetRowCount(spark, dir) shouldBe 500L
+    footerRows(dir) shouldBe 500L
     // a partition directory beside the flat files is real drift
     Files.createDirectories(Paths.get(dir, "k=1"))
-    an[IllegalArgumentException] should be thrownBy
-      graft.functions.Plans.parquetRowCount(spark, dir)
+    an[IllegalArgumentException] should be thrownBy footerRows(dir)
   }
 
   test("shufflePartitions is volume-aware: floored at parallelism, capped at the session conf") {
     import graft.functions.Plans
-    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val floor = math.min(cap, spark.sparkContext.defaultParallelism)
-    // tiny in-memory frame → floor (never below core parallelism: the
-    // sized stages are CPU-bound)
-    Plans.shufflePartitions(spark.range(10).toDF()) shouldBe floor
-    // a parquet scan large enough to exceed floor×bytesPerPartition
-    // under a tiny per-partition target ramps with volume, capped
-    val dir = tmpDir("plans_fanout")
-    spark.range(200000).selectExpr("id", "repeat('x', 64) AS pad")
-      .write.mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir)
-    spark.conf.set(Plans.FanoutBytesPerPartitionKey, "1024")
-    try {
-      Plans.shufflePartitions(scan) shouldBe cap // bytes/1KB ≫ cap
-      spark.conf.set(Plans.FanoutBytesPerPartitionKey, Long.MaxValue.toString)
-      Plans.shufflePartitions(scan) shouldBe floor // one huge partition target → floor
-    } finally spark.conf.unset(Plans.FanoutBytesPerPartitionKey)
+    // spark.range(n) estimates 8 bytes a row and runs nothing here, so
+    // input size alone walks the fan-out through its three regimes
+    val rowsPerPart = Plans.FanoutBytesPerPartition / 8
+    def fanout(rows: Long) = Plans.shufflePartitions(spark.range(rows).toDF())
+    val parallelism = spark.sparkContext.defaultParallelism
+    withSessionConf("spark.sql.shuffle.partitions", Some((parallelism + 8).toString)) {
+      // tiny input → floor (never below core parallelism: the sized
+      // stages are CPU-bound)
+      fanout(10) shouldBe parallelism
+      fanout(rowsPerPart * parallelism) shouldBe parallelism
+      // in between, one partition per FanoutBytesPerPartition of input
+      fanout(rowsPerPart * (parallelism + 3)) shouldBe parallelism + 3
+      fanout(rowsPerPart * (parallelism + 3) + 1) shouldBe parallelism + 4
+      // above the cap → the session's shuffle partitions
+      fanout(rowsPerPart * (parallelism + 100)) shouldBe parallelism + 8
+      // an estimate past 1 PiB is "unknown" → cap
+      fanout(Long.MaxValue / 16) shouldBe parallelism + 8
+    }
+    // a session cap below core parallelism also bounds the floor
+    withSessionConf("spark.sql.shuffle.partitions", Some("1")) {
+      fanout(10) shouldBe 1
+    }
   }
 }
