@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableRound
+import graft.sources.SchemaReader
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -145,8 +146,6 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     import org.apache.spark.sql.expressions.Window
-    val spark = corpus.sparkSession
-    import spark.implicits._
 
     val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
     // Quantizer training economics: a COARSE quantizer doesn't need
@@ -166,19 +165,11 @@ object Similarity {
     train.unpersist(blocking = false) // fit is eager; sample no longer needed
     val indexed = model.transform(featured).drop("_feat")
 
-    // query → nProbe nearest cells by L2 (k-means' own metric); the
-    // centers frame is centroids-sized, the probe list queries×nProbe
-    val centers = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("_cell", "_center")
-    val probeRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("_d2").asc, col("_cell").asc)
-    val probes = queries
-      .select(col(qIdCol).as("query_id"), col(qVecCol).as("_qvec"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_d2", l2sq(asDouble(col("_qvec")), col("_center")))
-      .withColumn("_pr", row_number().over(probeRank))
-      .filter(col("_pr") <= nProbe)
-      .select("query_id", "_qvec", "_cell")
+    // query → nProbe nearest cells by L2 (k-means' own metric), a
+    // per-row kernel over the model's centroids; queries×nProbe rows
+    val centers = model.clusterCenters.toSeq.map(_.toArray.toSeq.map(Double.box))
+    val probes = probeCells(queries, qIdCol, qVecCol, nProbe)(v =>
+      array_sort(l2Cells(v, centers)))
 
     val hitRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
@@ -294,11 +285,13 @@ object Similarity {
     * oracle-checkable. [[ivfTopK]] (trained quantizer) stays the
     * production variant; this one pins down the probe/rank semantics.
     *
-    * Plan shape: centroid list is nCentroids rows (broadcast); cell
-    * assignment is a broadcast cross product partial-aggregated to ONE
-    * row per corpus vector via max_by — only corpus-sized data ever
-    * shuffles. Tie-breaks everywhere (affinity ties → lowest cell, score
-    * ties → lowest id) keep it deterministic on both engines. */
+    * Plan shape: the centroids are held on the driver ([[detCenters]])
+    * and both routing steps are per-row kernels over them — cell
+    * assignment a narrow projection of the corpus, the probe list a
+    * narrow projection of the (broadcast) queries — so only the probed
+    * hits shuffle, into the per-query rank window. Tie-breaks everywhere
+    * (affinity ties → lowest cell, score ties → lowest id) keep it
+    * deterministic on both engines. */
   def ivfTopKDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
@@ -318,52 +311,102 @@ object Similarity {
       .drop("_r")
   }
 
-  /** Deterministic coarse-quantizer centroids: the `nCentroids`
-    * lowest-id corpus vectors, numbered 0..n-1 by id order. Tiny frame —
-    * always broadcast by callers. */
+  /** Deterministic coarse-quantizer centroids, held on the driver: one
+    * ordered-limit collect of the `nCentroids` lowest-id corpus vectors,
+    * numbered by position (centroid i is cell i). Model-sized:
+    * nCentroids × dim doubles (docs/TUNING.md, "Embedding ANN"). */
   private def detCenters(corpus: DataFrame, idCol: String, vecCol: String,
-      nCentroids: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    corpus
-      .orderBy(col(idCol)).limit(nCentroids)
-      .select(col(idCol).as("_cid"), asDouble(col(vecCol)).as("_center"))
-      .withColumn("_cell", row_number().over(Window.orderBy(col("_cid"))) - 1)
-      .select("_cell", "_center")
+      nCentroids: Int): Seq[Seq[java.lang.Double]] =
+    corpus.orderBy(col(idCol)).limit(nCentroids)
+      .select(asDouble(col(vecCol))).collect()
+      .map(_.getSeq[java.lang.Double](0)).toSeq
+
+  /** Stored centroids (`dir/centers`), read on the driver with no Spark
+    * job, numbered as the writers number them. Every page is read, so a
+    * missing or corrupt artifact fails here. */
+  private def storedCenters(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Seq[Seq[java.lang.Double]] = {
+    val rows = SchemaReader.collectArtifact(spark, s"$dir/centers")
+      .map(r => (r.getAs[Int]("cell"), r.getAs[Seq[java.lang.Double]]("center")))
+      .sortBy(_._1)
+    require(rows.nonEmpty && rows.map(_._1) == rows.indices,
+      s"$dir/centers: expected cells 0..n-1, found ${rows.map(_._1).take(5).mkString(", ")}")
+    rows.map(_._2)
   }
 
-  /** Rounded spherical (cosine) affinity between a `_v` vector and a
-    * `_center` centroid — the routing metric all deterministic-IVF
-    * steps share, rounded so both engines rank identically. */
-  private def detAff: Column = PortableRound.round4(cosine(col("_v"), col("_center")))
+  /** Routing kernels, per row over the literal centroid array: one
+    * struct per centroid whose order IS the routing order, and a `cell`
+    * field. Deterministic family: (rounded cosine affinity, -cell) —
+    * highest affinity first from the top, a null affinity (zero-norm
+    * vector) below every number, ties → lowest cell. */
+  private def detAffs(v: Column, centers: Seq[Seq[java.lang.Double]]): Column =
+    transform(typedLit(centers), (c, i) => struct(
+      PortableRound.round4(cosine(v, c)).as("aff"), (-i).as("neg"), i.as("cell")))
 
-  /** Cell assignment: argmax affinity per corpus vector (ties → lowest
-    * cell) — max over (affinity, -cell). The broadcast cross product
-    * partial-aggregates map-side, so only corpus-sized data shuffles. */
-  private def detAssign(corpus: DataFrame, idCol: String, vecCol: String,
-      centers: DataFrame): DataFrame =
+  /** Trained families: (squared L2, cell) — k-means' own metric,
+    * nearest first from the bottom, ties → lowest cell. */
+  private def l2Cells(v: Column, centers: Seq[Seq[java.lang.Double]]): Column =
+    transform(typedLit(centers), (c, i) => struct(l2sq(v, c).as("d2"), i.as("cell")))
+
+  /** Cell assignment: a narrow projection, the argmax of [[detAffs]]. */
+  private[operators] def detAssign(corpus: DataFrame, idCol: String, vecCol: String,
+      centers: Seq[Seq[java.lang.Double]]): DataFrame =
     corpus
       .select(col(idCol).as("_id"), asDouble(col(vecCol)).as("_v"))
-      .crossJoin(broadcast(centers))
-      .select(col("_id"), col("_v"), col("_cell"), detAff.as("_aff"))
-      .groupBy(col("_id"))
-      .agg(max_by(struct(col("_cell"), col("_v")),
-        struct(col("_aff"), -col("_cell"))).as("_m"))
-      .select(col("_id"), col("_m._cell").as("_cell"), col("_m._v").as("_v"))
+      .withColumn("_cell", array_max(detAffs(col("_v"), centers)).getField("cell"))
 
-  /** Per-query probe list: the `nProbe` best cells by affinity (ties →
-    * lowest cell), carrying the query vector along. */
-  private def detProbes(queries: DataFrame, qIdCol: String, qVecCol: String,
-      centers: DataFrame, nProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** Probe list: one (query_id, _qvec, _cell) row per cell among the
+    * first `nProbe` of `ranked(query vector)`, a kernel array in probe
+    * order. */
+  private def probeCells(queries: DataFrame, qIdCol: String, qVecCol: String,
+      nProbe: Int)(ranked: Column => Column): DataFrame =
     queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_v"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_aff", detAff)
-      .withColumn("_pr", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("_aff").desc, col("_cell").asc)))
-      .filter(col("_pr") <= nProbe)
-      .select(col("query_id"), col("_v").as("_qvec"), col("_cell"))
+      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qvec"))
+      .select(col("query_id"), col("_qvec"),
+        explode(slice(ranked(col("_qvec")), 1, math.max(nProbe, 0))).as("_p"))
+      .select(col("query_id"), col("_qvec"), col("_p.cell").as("_cell"))
+
+  /** The `nProbe` best cells by affinity (descending, nulls last, ties →
+    * lowest cell). */
+  private[operators] def detProbes(queries: DataFrame, qIdCol: String, qVecCol: String,
+      centers: Seq[Seq[java.lang.Double]], nProbe: Int): DataFrame =
+    probeCells(queries, qIdCol, qVecCol, nProbe)(v =>
+      sort_array(detAffs(v, centers), asc = false))
+
+  /** Write cell-tagged `rows` under `dir/data`, one `cell=` directory per
+    * cell, and return their max id, observed during the write (no job of
+    * its own). Ids that do not cast to long fail here, before the meta
+    * is written. */
+  private def writeCells(rows: DataFrame, idCol: String, dir: String): Long = {
+    val seen = org.apache.spark.sql.Observation()
+    rows.observe(seen, max(col(idCol).cast("long")).as("max_id"))
+      .repartition(col("cell"))  // cluster rows by the partition column first:
+      // without it every task opens a file per cell it sees (tasks x
+      // cells small files — the classic partitioned-write fanout)
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
+    val maxId = seen.get("max_id")
+    require(maxId != null, s"cannot derive a max id from '$idCol': ids " +
+      "that do not cast to long — refusing to write the index meta")
+    maxId.asInstanceOf[Long]
   }
+
+  /** Write driver-held centroids as `dir/centers` (cell int, center
+    * array<double>), `center` typed as the corpus vectors cast. */
+  private def writeCenters(corpus: DataFrame, vecCol: String, dir: String,
+      centers: Seq[Seq[java.lang.Double]]): Unit = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val schema = StructType(Seq(StructField("cell", IntegerType, nullable = false),
+      corpus.select(asDouble(col(vecCol)).as("center")).schema.head))
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(centers.zipWithIndex
+      .map { case (c, i) => org.apache.spark.sql.Row(i, c) }: _*), schema)
+      .write.mode("overwrite").parquet(s"$dir/centers")
+  }
+
+  /** A stored index's cell-partitioned `dir/data` under its footer
+    * schema plus the `cell` partition column: no inference job. */
+  private def storedCells(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    SchemaReader.readPartitioned(spark, s"$dir/data",
+      org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType))
 
   /** Persist a DETERMINISTIC-quantizer IVF index: cell assignment as in
     * [[ivfTopKDeterministic]], corpus written PARTITIONED BY CELL
@@ -371,23 +414,18 @@ object Similarity {
     * `dir/centers`. The closed-form twin of [[writeIvfIndex]]: identical
     * stored layout, but every step is SQL-expressible, so a probe of the
     * stored index hash-checks against DuckDB (q84) instead of only a
-    * recall test. */
+    * recall test. An empty corpus fails before anything is written. */
   def writeIvfIndexDeterministic(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int): Unit = {
+    val centers = detCenters(corpus, idCol, vecCol, nCentroids)
+    require(centers.nonEmpty, s"cannot index an empty corpus into $dir")
     // single-writer: a rebuild racing a locked append would overwrite
     // data the append's meta watermark already claims is indexed
     StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val centers = detCenters(corpus, idCol, vecCol, nCentroids)
-      detAssign(corpus, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      centers.select(col("_cell").as("cell"), col("_center").as("center"))
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      writeMaxIdMeta(corpus.sparkSession, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+      val maxId = writeCells(detAssign(corpus, idCol, vecCol, centers)
+        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), idCol, dir)
+      writeCenters(corpus, vecCol, dir, centers)
+      StoredIndex.writeMaxIdMeta(corpus.sparkSession, dir, maxId)
     }
   }
 
@@ -413,22 +451,21 @@ object Similarity {
     * probed `cell=` directories are read — at 100 TB a probe costs
     * nProbe/nCentroids of the corpus in I/O (`PartitionFilters`
     * asserted in PlanContractsSpec). Semantics identical to
-    * [[ivfTopKDeterministic]] over the same corpus. */
+    * [[ivfTopKDeterministic]] over the same corpus. Building the frame
+    * runs one Spark job, the probe collect. */
   def probeIvfIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
       dir: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
     // The probed cell set is tiny (≤ |queries| × nProbe); materializing
     // it as literals is what turns the probe into directory-level
     // partition pruning on the data scan — the stored-index payoff.
     val (probes, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, centers, nProbe))
+      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe))
     val hitRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
+    storedCells(spark, dir)
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),
@@ -471,13 +508,14 @@ object Similarity {
       model.clusterCenters.zipWithIndex.toSeq
         .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center")
         .write.mode("overwrite").parquet(s"$dir/centers")
-      writeMaxIdMeta(spark, dir,
+      StoredIndex.writeMaxIdMeta(spark, dir,
         StoredIndex.requiredMaxId(corpus, idCol))
     }
   }
 
-  /** Probe a persisted IVF index: nearest `nProbe` cells per query are
-    * computed from the (tiny) stored centroids on the driver, and the
+  /** Probe a persisted IVF index: nearest `nProbe` cells per query
+    * (squared L2, ties → lowest cell) over the (tiny) driver-held
+    * stored centroids, and the
     * data scan filters on the PARTITION column — only the probed cell
     * directories are read (`PartitionFilters`, asserted in
     * SimilaritySpec). nProbe = nCentroids degenerates to exact
@@ -487,39 +525,16 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
-    val centers = spark.read.parquet(s"$dir/centers")
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    // typed widening cast, NOT toString parsing: float→double must route
-    // queries exactly as the append path's cast did, and a null element
-    // must surface as a null, not a NumberFormatException
-    val qs = queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qv"))
-      .collect()
-      .map(r => (r.get(0), r.getSeq[Double](1).toArray))
     // PER-QUERY probe cells: each query joins only ITS OWN nProbe cells
     // (a union-of-all-cells cross join would score every query
     // near-brute-force in a batch and make results depend on what else
-    // was in the batch). The collected rows drive BOTH the partition
-    // filter and the join, so nothing is evaluated twice.
-    val probeRows = qs.flatMap { case (qid, qv) =>
-      centers.sortBy { case (_, c) =>
-        var d = 0.0; var i = 0
-        while (i < c.length) { val t = qv(i) - c(i); d += t * t; i += 1 }
-        d
-      }.take(nProbe).map { case (cell, _) => Row(qid, qv.toSeq, cell) }
-    }
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*),
-      StructType(Seq(
-        StructField("query_id", queries.schema(qIdCol).dataType),
-        StructField("_qvec", ArrayType(DoubleType)),
-        StructField("_cell", IntegerType))))
-    val probedCells = probeRows.map(_.getInt(2)).distinct.toSeq
+    // was in the batch)
+    val centers = storedCenters(spark, dir)
+    val (probes, probedCells) = materializeProbes(spark,
+      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers))))
     val hitRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
+    storedCells(spark, dir)
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),
@@ -697,20 +712,6 @@ object Similarity {
     else PortableRound.round4(s)
   }
 
-  /** The interpreted composition [[adcScore]] replaced (a zip_with
-    * lookup array + aggregate fold per corpus row × query) — the
-    * parity reference SimilaritySpec pins [[graft.functions.AdcLookupSum]]
-    * against. */
-  private[graft] def adcScoreComposed(codesCol: String, m: Int, k: Int,
-      rounded: Boolean): Column = {
-    val lookups = zip_with(col(codesCol), sequence(lit(0), lit(m - 1)),
-      (c, j) => element_at(col("_tab"), (j * lit(k) + c + 1).cast("int")))
-    if (rounded)
-      aggregate(lookups, lit(0L), (acc, d) => acc + d).cast("double") / 10000.0
-    else
-      PortableRound.round4(aggregate(lookups, lit(0.0), (acc, d) => acc + d))
-  }
-
   /** The flat m*k ADC lookup table for a query vector column: entry
     * j*k + c = ||q_sub_j − centroid[j][c]||², 4-dp-scaled longs in
     * rounded mode. */
@@ -864,46 +865,26 @@ object Similarity {
     * write→probe round trip is oracle-checkable (q88). */
   def writeIvfPqIndexDeterministic(corpus: DataFrame, idCol: String,
       vecCol: String, dir: String, nCentroids: Int, m: Int, k: Int): Unit = {
+    val centers = detCenters(corpus, idCol, vecCol, nCentroids)
+    require(centers.nonEmpty, s"cannot index an empty corpus into $dir")
+    val model = pqModelDeterministic(corpus, idCol, vecCol, m, k)
     // single-writer: a rebuild racing a locked append would overwrite
     // data the append's meta watermark already claims is indexed
     StoredIndex.withAppendLock(corpus.sparkSession, dir) {
       val spark = corpus.sparkSession
       import spark.implicits._
-      val centers = detCenters(corpus, idCol, vecCol, nCentroids)
-      val model = pqModelDeterministic(corpus, idCol, vecCol, m, k)
       val assigned = detAssign(corpus, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
-      pqEncode(assigned, "_vec", model, rounded = true)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      centers.select(col("_cell").as("cell"), col("_center").as("center"))
-        .write.mode("overwrite").parquet(s"$dir/centers")
+      val maxId = writeCells(pqEncode(assigned, "_vec", model, rounded = true)
+        .select(col(idCol), col("codes"), col("cell")), idCol, dir)
+      writeCenters(corpus, vecCol, dir, centers)
       val cb = for { j <- 0 until m; c <- 0 until k }
         yield (j, c, model.centroids(j)(c).toSeq)
       cb.toDF("j", "code", "center")
         .write.mode("overwrite").parquet(s"$dir/codebook")
-      writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+      StoredIndex.writeMaxIdMeta(spark, dir, maxId)
     }
   }
-
-  // Max-id meta + append-only id-discipline validation are shared
-  // across all stored index families — see [[StoredIndex]].
-  private def writeMaxIdMeta(spark: org.apache.spark.sql.SparkSession,
-      dir: String, maxId: Long): Unit =
-    StoredIndex.writeMaxIdMeta(spark, dir, maxId)
-
-  /** [[StoredIndex.guardedAppend]] with the fail-fast prepare phase:
-    * stored-geometry reads (centers, codebooks) run before the meta is
-    * marked pending, so a missing/corrupt stored artifact cannot strand
-    * the index in pending. */
-  private def guardedAppendPrepared[A](spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, idCol: String)(prepare: => A)(
-      write: A => Unit): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol)(prepare)(write)
 
   /** Incremental ingest into a stored deterministic IVF index: assign a
     * NEW batch of vectors to cells through the STORED coarse centroids
@@ -921,14 +902,10 @@ object Similarity {
     * fast instead of silently corrupting probe results. */
   def appendToIvfIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // localCheckpoint is EAGER: the centroids-sized frame is fully
-      // read here, so a corrupt (not just missing) stored artifact
-      // fails before the meta goes pending — read.parquet alone only
-      // validates footers and would defer page reads into the write
-      spark.read.parquet(s"$dir/centers")
-        .select(col("cell").as("_cell"), col("center").as("_center"))
-        .localCheckpoint()
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+      // the driver read decodes every page, so a corrupt (not just
+      // missing) stored artifact fails before the meta goes pending
+      storedCenters(spark, dir)
     } { centers =>
       detAssign(batch, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
@@ -946,22 +923,11 @@ object Similarity {
     * projections). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // localCheckpoint is EAGER: the centroids-sized frame is fully
-      // read here, so a corrupt (not just missing) stored artifact
-      // fails before the meta goes pending — read.parquet alone only
-      // validates footers and would defer page reads into the write
-      spark.read.parquet(s"$dir/centers")
-        .select(col("cell").as("_cell"), col("center").as("_center"))
-        .localCheckpoint()
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+      storedCenters(spark, dir) // eager: see appendToIvfIndexDeterministic
     } { centers =>
-      val carried = batch.columns.map(col) :+ col("_cell").as("cell")
-      batch.withColumn("_v", asDouble(col(vecCol)))
-        .crossJoin(broadcast(centers))
-        .withColumn("_d2", l2sq(col("_v"), col("_center")))
-        .groupBy(col(idCol))
-        .agg(min_by(struct(carried: _*), struct(col("_d2"), col("_cell"))).as("_m"))
-        .select(col("_m.*"))
+      batch.withColumn("cell",
+          array_min(l2Cells(asDouble(col(vecCol)), centers)).getField("cell"))
         .repartition(col("cell"))
         .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
     }
@@ -970,15 +936,14 @@ object Similarity {
     * bounded driver pull (the stored-centroid class). */
   private def loadPqCodebook(spark: org.apache.spark.sql.SparkSession,
       dir: String): PqModel = {
-    val cbRows = spark.read.parquet(s"$dir/codebook")
-      .select(col("j"), col("code"), col("center").cast("array<double>"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+    val cbRows = SchemaReader.collectArtifact(spark, s"$dir/codebook")
+      .map(r => (r.getAs[Int]("j"), r.getAs[Int]("code"),
+        r.getAs[Seq[Double]]("center").toArray))
     val m = cbRows.map(_._1).max + 1
     val k = cbRows.map(_._2).max + 1
     val byJ = cbRows.groupBy(_._1)
     PqModel(m, k, cbRows.head._3.length,
-      Array.tabulate(m)(j => byJ(j).sortBy(_._2).map(_._3)))
+      Array.tabulate(m)(j => byJ(j).sortBy(_._2).map(_._3).toArray))
   }
 
   /** TRAINED twin of [[writeIvfPqIndexDeterministic]]: k-means coarse
@@ -1022,14 +987,14 @@ object Similarity {
         yield (j, c, pq.centroids(j)(c).toSeq)
       cb.toDF("j", "code", "center")
         .write.mode("overwrite").parquet(s"$dir/codebook")
-      writeMaxIdMeta(spark, dir,
+      StoredIndex.writeMaxIdMeta(spark, dir,
         StoredIndex.requiredMaxId(corpus, idCol))
     }
   }
 
   /** Probe a TRAINED composed index: L2 routing to the `nProbe` nearest
     * stored coarse centers (k-means' own metric, like [[probeIvfIndex]])
-    * — computed distributed against the broadcast centers frame — then
+    * — a per-row kernel over the driver-held centers — then
     * the partition-pruned codes scan is ADC-scored per (query, cell).
     * Returns `(query_id, idCol, d2_approx)` ascending, ties → lowest
     * id. */
@@ -1039,23 +1004,14 @@ object Similarity {
       topK: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val model = loadPqCodebook(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
-    val probeRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("_d2").asc, col("_cell").asc)
-    val probes = queries
-      .select(col(qIdCol).as("query_id"), asDouble(col(qVecCol)).as("_qvec"))
-      .crossJoin(broadcast(centers))
-      .withColumn("_d2", l2sq(col("_qvec"), col("_center")))
-      .withColumn("_pr", row_number().over(probeRank))
-      .filter(col("_pr") <= nProbe)
-      .select(col("query_id"), col("_qvec"), col("_cell"))
-    val (probesLocal, probedCells) = materializeProbes(spark, probes)
+    val centers = storedCenters(spark, dir)
+    val (probesLocal, probedCells) = materializeProbes(spark,
+      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers))))
     val tables = probesLocal.select(col("query_id"), col("_cell"),
       adcTable(col("_qvec"), model, rounded = false).as("_tab"))
     val rank = Window.partitionBy(col("query_id"))
       .orderBy(col("d2_approx").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
+    storedCells(spark, dir)
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(tables), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),
@@ -1074,13 +1030,9 @@ object Similarity {
     * indexing the union up front. */
   def appendToIvfPqIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // codebook pull is already an eager collect; centers get the
-      // same eager treatment (see appendToIvfIndexDeterministic)
-      (loadPqCodebook(spark, dir),
-        spark.read.parquet(s"$dir/centers")
-          .select(col("cell").as("_cell"), col("center").as("_center"))
-          .localCheckpoint())
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+      // both are eager driver reads (see appendToIvfIndexDeterministic)
+      (loadPqCodebook(spark, dir), storedCenters(spark, dir))
     } { case (model, centers) =>
       val assigned = detAssign(batch, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
@@ -1097,22 +1049,13 @@ object Similarity {
     * production IVFADC index. Same id-discipline validation. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
-      // codebook pull is already an eager collect; centers get the
-      // same eager treatment (see appendToIvfIndexDeterministic)
-      (loadPqCodebook(spark, dir),
-        spark.read.parquet(s"$dir/centers")
-          .select(col("cell").as("_cell"), col("center").as("_center"))
-          .localCheckpoint())
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+      // both are eager driver reads (see appendToIvfIndexDeterministic)
+      (loadPqCodebook(spark, dir), storedCenters(spark, dir))
     } { case (model, centers) =>
       val assigned = batch
         .select(col(idCol), asDouble(col(vecCol)).as("_vec"))
-        .crossJoin(broadcast(centers))
-        .withColumn("_d2", l2sq(col("_vec"), col("_center")))
-        .groupBy(col(idCol))
-        .agg(min_by(struct(col("_vec"), col("_cell").as("cell")),
-          struct(col("_d2"), col("_cell"))).as("_m"))
-        .select(col(idCol), col("_m._vec").as("_vec"), col("_m.cell").as("cell"))
+        .withColumn("cell", array_min(l2Cells(col("_vec"), centers)).getField("cell"))
       pqEncode(assigned, "_vec", model)
         .select(col(idCol), col("codes"), col("cell"))
         .repartition(col("cell"))
@@ -1134,15 +1077,13 @@ object Similarity {
       topK: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val model = loadPqCodebook(spark, dir)
-    val centers = spark.read.parquet(s"$dir/centers")
-      .select(col("cell").as("_cell"), col("center").as("_center"))
     val (probesLocal, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, centers, nProbe))
+      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe))
     val tables = probesLocal.select(col("query_id"), col("_cell"),
       adcTable(col("_qvec"), model, rounded = true).as("_tab"))
     val rank = Window.partitionBy(col("query_id"))
       .orderBy(col("d2_approx").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
+    storedCells(spark, dir)
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(tables), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),
@@ -1184,7 +1125,7 @@ object Similarity {
           .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerCell)
         .map(_.getPath.getName.stripPrefix("cell=").toInt)
       if (crowded.nonEmpty) {
-        val merged = spark.read.parquet(s"$dir/data")
+        val merged = storedCells(spark, dir)
           .filter(col("cell").isin(crowded: _*)) // partition-pruned read
           .repartition(col("cell")) // one writer task per cell → one file
           .localCheckpoint() // stable snapshot of the cells being replaced
@@ -1449,7 +1390,7 @@ object Similarity {
         centers.map { case (cell, c) => (cell, c.toSeq) }
           .toDF("cell", "center")
           .write.mode("overwrite").parquet(s"$dir/centers")
-        writeMaxIdMeta(spark, dir, StoredIndex.requiredMaxId(corpus, idCol))
+        StoredIndex.writeMaxIdMeta(spark, dir, StoredIndex.requiredMaxId(corpus, idCol))
       } finally vq.unpersist()
     }
   }
@@ -1468,7 +1409,7 @@ object Similarity {
     * rows-only gap from the exact side. */
   def appendToIvfIndexMicroExact(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
       // bounded driver read (k centroid rows), outside the pending
       // window: a missing/corrupt centers artifact fails fast here
       readIvfCentersMicro(spark, dir)
@@ -1496,8 +1437,7 @@ object Similarity {
     * (stream/batch parity spec-pinned in StreamingSpec). */
   def readIvfCentersMicro(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Int, Array[Long])] =
-    spark.read.parquet(s"$dir/centers")
-      .collect()
+    SchemaReader.collectArtifact(spark, s"$dir/centers")
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
 
@@ -1518,7 +1458,7 @@ object Similarity {
         .select(col("query_id"), col("_qv"), col("_p._cell").as("_cell")))
     val rank = Window.partitionBy(col("query_id"))
       .orderBy(col("d2").asc, col(idCol).asc)
-    spark.read.parquet(s"$dir/data")
+    storedCells(spark, dir)
       .filter(col("cell").isin(probedCells: _*))
       .join(broadcast(probes), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),

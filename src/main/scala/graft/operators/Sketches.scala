@@ -139,7 +139,7 @@ object Sketches {
     * tasks × groups × k longs replaces the windowed form's global
     * (g, h) distinct + salt-stage Window + merge-stage Window (3
     * exchanges, 2 whole-bucket sorts). Values are bit-identical
-    * (SketchesSpec pins the windowed twin, [[kmvMinRowsWindowed]]).
+    * (SketchesSpec pins the windowed twin, [[kmvSketchWindowed]]).
     * `salt` is retained for signature stability; it shaped only the
     * retired windowed execution, never results. */
   def kmvSketch(df: DataFrame, groupCol: String, textCol: String,

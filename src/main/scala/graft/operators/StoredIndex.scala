@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.SchemaReader
 
 /** Shared plumbing for the engine's persisted index artifacts (IVF /
   * IVFADC vector indexes, simhash signature indexes): the one-row
@@ -26,9 +27,9 @@ object StoredIndex {
     spark.range(1).select(lit(maxId).as("max_id"), lit(pending).as("pending"))
       .write.mode("overwrite").parquet(s"$dir/meta")
 
-  /** Max id of a frame, REQUIRED non-null — writers call this BEFORE
-    * committing any files, so an empty corpus or non-numeric id column
-    * fails loudly instead of NPE-ing after a half-written index. */
+  /** Max id of a frame, REQUIRED non-null: an empty input or an id
+    * column that does not cast to long fails loudly, naming the cause,
+    * instead of NPE-ing. One aggregate job over the input. */
   def requiredMaxId(df: DataFrame, idCol: String): Long = {
     val r = df.agg(max(col(idCol).cast("long"))).head
     require(!r.isNullAt(0),
@@ -39,8 +40,8 @@ object StoredIndex {
 
   private def metaPending(spark: SparkSession, dir: String): Boolean =
     scala.util.Try {
-      val df = spark.read.parquet(s"$dir/meta")
-      df.columns.contains("pending") && df.head.getAs[Boolean]("pending")
+      val meta = SchemaReader.collectArtifact(spark, s"$dir/meta").head
+      meta.schema.fieldNames.contains("pending") && meta.getAs[Boolean]("pending")
     }.getOrElse(false)
 
   /** Pending-meta crash fence for COMPACTIONS (round-14 advice): a
@@ -233,11 +234,11 @@ object StoredIndex {
       g.group(1) == hostName && (!ph.isPresent || !ph.get.isAlive)
     }
 
-  /** Max id already in the stored index: from `dir/meta` when present,
-    * else (indexes written before meta existed) one column-pruned agg
-    * over the data files. */
+  /** Max id already in the stored index: from `dir/meta` when present
+    * (a driver read, no Spark job), else (indexes written before meta
+    * existed) one column-pruned agg over the data files. */
   def storedMaxId(spark: SparkSession, dir: String, idCol: String): Long =
-    scala.util.Try(spark.read.parquet(s"$dir/meta").head.getLong(0))
+    scala.util.Try(SchemaReader.collectArtifact(spark, s"$dir/meta").head.getAs[Long]("max_id"))
       .getOrElse(spark.read.parquet(s"$dir/data")
         .agg(max(col(idCol).cast("long"))).head.getLong(0))
 

@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 import org.apache.parquet.HadoopReadOptions
@@ -51,30 +54,40 @@ object SchemaReader {
     }.toSeq: _*)
   }
 
-  /** One parquet file's footer: its Spark schema and record count. */
-  private[graft] case class Footer(path: String, schema: StructType, rows: Long)
+  /** One parquet file's footer: its Spark schema, record count and size. */
+  private[graft] case class Footer(path: String, schema: StructType, rows: Long, bytes: Long)
 
   /** THE footer walk every parquet source takes its schema and row
     * counts from: on the driver, no Spark job (inference costs one per
     * read), O(files), nothing cached. `path` is a file or a flat
     * directory of part files: `_`/`.` entries are skipped as Spark's
     * reader skips them, any other subdirectory fails (a partitioned
-    * layout would drop its partition column and undercount). Spark's own
-    * converter over the session conf gives the schema inference gives,
-    * `nanosAsLong` included. */
-  private[graft] def footers(spark: SparkSession, path: String): Seq[Footer] = {
+    * layout would drop its partition column and undercount). A reader
+    * that declares the `partition` column walks one level of
+    * `partition=<v>` directories instead, each flat; the footers do not
+    * carry that column. Spark's own converter over the session conf
+    * gives the schema inference gives, `nanosAsLong` included. */
+  private[graft] def footers(spark: SparkSession, path: String,
+      partition: Option[String] = None): Seq[Footer] = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(path).getFileSystem(conf)
+    def visible(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
+      .filterNot(st => "_.".contains(st.getPath.getName.head))
+    def flat(dir: Path): Seq[FileStatus] = {
+      val (dirs, files) = visible(dir).partition(_.isDirectory)
+      require(dirs.isEmpty, s"$dir: flat parquet directory expected, found " +
+        s"subdirectories ${dirs.map(_.getPath.getName).take(3).mkString(", ")} (a partitioned layout)")
+      files.sortBy(_.getPath.getName)
+    }
     val top = fs.getFileStatus(new Path(path))
     val files =
       if (!top.isDirectory) Seq(top)
-      else {
-        val visible = fs.listStatus(top.getPath).toSeq
-          .filterNot(st => "_.".contains(st.getPath.getName.head))
-        val dirs = visible.filter(_.isDirectory).map(_.getPath.getName)
-        require(dirs.isEmpty, s"$path: flat parquet directory expected, found " +
-          s"subdirectories ${dirs.take(3).mkString(", ")} (a partitioned layout)")
-        visible.sortBy(_.getPath.getName)
+      else partition.fold(flat(top.getPath)) { k =>
+        val (cells, stray) = visible(top.getPath)
+          .partition(st => st.isDirectory && st.getPath.getName.startsWith(s"$k="))
+        require(stray.isEmpty, s"$path: only $k=<value> directories expected, found " +
+          stray.map(_.getPath.getName).take(3).mkString(", "))
+        cells.sortBy(_.getPath.getName).flatMap(d => flat(d.getPath))
       }
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
     files.map { st =>
@@ -82,7 +95,8 @@ object SchemaReader {
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
         HadoopReadOptions.builder(conf, st.getPath).build())
       try Footer(st.getPath.toString, ParquetFileFormat.readSchemaFromFooter(
-        new org.apache.parquet.hadoop.Footer(st.getPath, r.getFooter), converter), r.getRecordCount)
+        new org.apache.parquet.hadoop.Footer(st.getPath, r.getFooter), converter),
+        r.getRecordCount, st.getLen)
       finally r.close()
     }
   }
@@ -100,6 +114,30 @@ object SchemaReader {
             s"but ${field.dataType.simpleString} in ${f.path}")
     }
     StructType(seen.values.map(_._1).toSeq)
+  }
+
+  /** A part the engine wrote partitioned by one column, read under the
+    * union of its footers plus that declared column, after the file
+    * columns as Spark's partition discovery puts it: no inference job. */
+  private[graft] def readPartitioned(spark: SparkSession, path: String,
+      partition: StructField): DataFrame =
+    spark.read.schema(unionSchema(footers(spark, path, Some(partition.name)))
+      .add(partition)).parquet(path)
+
+  /** Every row of a small flat part (a model, a one-row meta), decoded
+    * on the driver by Spark's own parquet reader under the footer
+    * schema: no Spark job, and every page is read, so a corrupt part
+    * fails here. */
+  private[graft] def collectArtifact(spark: SparkSession, path: String): Seq[Row] = {
+    val files = footers(spark, path)
+    val schema = unionSchema(files)
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+      new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    files.flatMap(f => read(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPath(new Path(f.path)), 0L, f.bytes))
+      .map(toRow(_).asInstanceOf[Row]).toList) // the reader reuses its row
   }
 
   /** Capability S3 (`batch_stock.py:18-36`): parquet fragments (files or

@@ -108,6 +108,9 @@ class PlansHelpersSpec extends graft.SparkSpec {
     // subdirectories mean the flat sum would silently UNDERCOUNT and
     // mis-gate a broadcast — must be an error, not a wrong number
     an[IllegalArgumentException] should be thrownBy footerRows(dir)
+    // a reader that declares the partition column walks its one level
+    footers(spark, dir, Some("p")).map(_.rows).sum shouldBe 100L
+    an[IllegalArgumentException] should be thrownBy footers(spark, dir, Some("q"))
   }
 
   test("footer walk skips _/. dirs as Spark's reader does, fails on k=v") {

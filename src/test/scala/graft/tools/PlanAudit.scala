@@ -32,7 +32,9 @@ object PlanAudit {
         "exact semantic (single ordered frame). The partitioned variant " +
         "RollingWindow.forwardPartitioned is the scale path."),
     "q43_ann_ivf" ->
-      ("Deterministic-quantizer IVF (oracle-checkable). The trained " +
+      ("Deterministic-quantizer IVF (oracle-checkable): centroids held " +
+        "on the driver, cell assignment and probe ranking are per-row " +
+        "kernels over them — no cross join, no global window. The trained " +
         "k-means variant (Similarity.ivfTopK) and the persisted " +
         "cell-partitioned index (writeIvfIndex/probeIvfIndex, partition " +
         "pruning asserted in SimilaritySpec) are the production scale " +
@@ -48,7 +50,7 @@ object PlanAudit {
       ("PQ/ADC — the MEMORY half of the ANN story: corpus rows are " +
         "scored from m-byte codes + a broadcast per-query lookup table; " +
         "the stored vectors are never read at query time. The broadcast " +
-        "NLJ is the bounded-queries-side class of q25/q43 (tables frame " +
+        "NLJ is the bounded-queries-side class of q25 (tables frame " +
         "= queries x m*k doubles). Deterministic codebook for the " +
         "oracle; trained per-subspace k-means (Similarity.pqTrain) is " +
         "the production variant, recall-tested in SimilaritySpec."),
@@ -195,9 +197,8 @@ object PlanAudit {
     * keyed join into a nested loop cannot land without editing this
     * allowlist in the same diff. */
   private val bnljAllowlist: Set[String] = Set(
-    "q25_ann_bruteforce", "q29_embedding_neardup", "q43_ann_ivf",
-    "q87_pq_adc", "q90_ann_rerank", "q106_global_rank",
-    "q131_source_overlap", "q154_srp_shortlist_rerank",
+    "q25_ann_bruteforce", "q29_embedding_neardup", "q87_pq_adc",
+    "q90_ann_rerank", "q106_global_rank", "q131_source_overlap", "q154_srp_shortlist_rerank",
     "q160_hybrid_retrieval", "q161_hybrid_retrieval_stored",
     "q162_hybrid_rrf_fusion", "q165_hybrid_rrf_stored")
 
@@ -213,8 +214,6 @@ object PlanAudit {
     *    ONE corpus-sized entry, declared semantics;
     *    `RollingWindow.forwardPartitioned` is the scale path (see
     *    [[notes]]).
-    *  - q43_ann_ivf: probe-cell ranking over queries×centroids rows —
-    *    query-batch-sized.
     *  - q46_vocab_topn: vocab_id window runs AFTER orderBy+limit(topN)
     *    (TakeOrderedAndProject) — topN-sized, never the token stats.
     *  - q78_mixture_weights / q114_epoch_plan: per-source frames —
@@ -225,7 +224,7 @@ object PlanAudit {
     * The audit FAILS on any no-partition Window outside this list, so
     * a corpus-sized global window cannot land silently. */
   private val globalWindowAllowlist: Set[String] = Set(
-    "q07_rolling_window", "q43_ann_ivf", "q46_vocab_topn",
+    "q07_rolling_window", "q46_vocab_topn",
     "q78_mixture_weights", "q106_global_rank", "q114_epoch_plan")
 
   def main(args: Array[String]): Unit = {
