@@ -35,18 +35,16 @@ object CorpusStats {
 
   /** Create the snapshot from an initial corpus batch. */
   def writeStatsSnapshot(spark: SparkSession, df: DataFrame, idCol: String,
-      textCol: String, srcCol: String, dir: String): Unit = {
-    partials(df, idCol, textCol, srcCol)
-      .write.mode("overwrite").parquet(s"$dir/data")
-    StoredIndex.writeMaxIdMeta(spark, dir,
-      StoredIndex.requiredMaxId(df, idCol))
-  }
+      textCol: String, srcCol: String, dir: String): Unit =
+    StoredIndex.build(dir, df, idCol) { (rows, tmp) =>
+      partials(rows, idCol, textCol, srcCol).write.parquet(s"$tmp/data")
+    }
 
   /** Fold one new batch into the snapshot: batch-sized work, a new
     * segment appended, existing files untouched. */
   def appendToStatsSnapshot(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, srcCol: String): Unit =
-    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol)(()) { _ =>
       partials(batch, idCol, textCol, srcCol)
         .write.mode("append").parquet(s"$dir/data")
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Plans, PortableHash, PortableRound}
+import graft.sources.SchemaReader
 
 /** Document deduplication suite for large-scale training-data pipelines:
   * exact, MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -467,15 +468,9 @@ object Dedup {
   def writeSimhashIndex(spark: org.apache.spark.sql.SparkSession,
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       bits: Int = 32): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(spark, dir) {
-      simhash(corpus, idCol, textCol, bits)
-        .write.mode("overwrite").parquet(s"$dir/data")
-      spark.range(1).select(lit(bits).as("bits"))
-        .write.mode("overwrite").parquet(s"$dir/params")
-      StoredIndex.writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      simhash(rows, idCol, textCol, bits).write.parquet(s"$tmp/data")
+      spark.range(1).select(lit(bits).as("bits")).write.parquet(s"$tmp/params")
     }
   }
 
@@ -486,9 +481,10 @@ object Dedup {
     * stored meta, mirroring the ANN index appends. */
   def appendToSimhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // params read fails fast BEFORE the meta goes pending
-      spark.read.parquet(s"$dir/params").head.getAs[Number]("bits").intValue()
+      SchemaReader.collectArtifact(spark, s"$dir/params").head
+        .getAs[Number]("bits").intValue()
     } { bits =>
       simhash(batch, idCol, textCol, bits)
         .write.mode("append").parquet(s"$dir/data")
@@ -503,7 +499,8 @@ object Dedup {
   def screenWithSimhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, bandBits: Int = 8): DataFrame = {
-    val bits = spark.read.parquet(s"$dir/params").head.getAs[Number]("bits").intValue()
+    val bits = SchemaReader.collectArtifact(spark, s"$dir/params").head
+      .getAs[Number]("bits").intValue()
     val cs = spark.read.parquet(s"$dir/data")
       .select(col(idCol).as("_cid"), col("simhash").as("_csim"))
     val bs = simhash(batch, idCol, textCol, bits)
@@ -520,15 +517,10 @@ object Dedup {
   def writeMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 16, shingleN: Int = 3): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(spark, dir) {
-      minhashSignatureShingled(corpus, idCol, textCol, k, shingleN)
-        .write.mode("overwrite").parquet(s"$dir/data")
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      minhashSignatureShingled(rows, idCol, textCol, k, shingleN).write.parquet(s"$tmp/data")
       spark.range(1).select(lit(k).as("k"), lit(shingleN).as("shingle_n"))
-        .write.mode("overwrite").parquet(s"$dir/params")
-      StoredIndex.writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+        .write.parquet(s"$tmp/params")
     }
   }
 
@@ -537,9 +529,9 @@ object Dedup {
     * files untouched; append-only id discipline validated). */
   def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // params read fails fast BEFORE the meta goes pending
-      spark.read.parquet(s"$dir/params").head
+      SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
       minhashSignatureShingled(batch, idCol, textCol,
           p.getAs[Number]("k").intValue(), p.getAs[Number]("shingle_n").intValue())
@@ -558,7 +550,7 @@ object Dedup {
   def screenWithMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       bandSize: Int = 4, minEstMilli: Long = 500L): DataFrame = {
-    val p = spark.read.parquet(s"$dir/params").head
+    val p = SchemaReader.collectArtifact(spark, s"$dir/params").head
     val k = p.getAs[Number]("k").intValue()
     val shingleN = p.getAs[Number]("shingle_n").intValue()
     require(k % bandSize == 0, "stored k must be divisible by bandSize")
@@ -1240,7 +1232,7 @@ object Dedup {
     val k = meta.getAs[Number]("k").intValue()
     val docs = df.filter(col(textCol).isNotNull)
     val nRef = Seq("roll", "exact")
-      .flatMap(a => graft.sources.SchemaReader.footers(spark, s"$dir/$a")).map(_.rows).sum
+      .flatMap(a => SchemaReader.footers(spark, s"$dir/$a")).map(_.rows).sum
     val verified =
       if (Plans.underBroadcastGate(nRef, 48L)) {
         // ROW-LOCAL bloom nomination (round 16, guide §2.4): under the
@@ -1427,15 +1419,10 @@ object Dedup {
   def writeWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       kGram: Int = 3, w: Int = 4): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(spark, dir) {
-      winnowFingerprints(corpus, idCol, textCol, kGram, w)
-        .write.mode("overwrite").parquet(s"$dir/data")
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      winnowFingerprints(rows, idCol, textCol, kGram, w).write.parquet(s"$tmp/data")
       spark.range(1).select(lit(kGram).as("k_gram"), lit(w).as("w"))
-        .write.mode("overwrite").parquet(s"$dir/params")
-      StoredIndex.writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+        .write.parquet(s"$tmp/params")
     }
   }
 
@@ -1444,9 +1431,9 @@ object Dedup {
     * existing files untouched; append-only id discipline validated). */
   def appendToWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // params read fails fast BEFORE the meta goes pending
-      spark.read.parquet(s"$dir/params").head
+      SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
       winnowFingerprints(batch, idCol, textCol,
           p.getAs[Number]("k_gram").intValue(), p.getAs[Number]("w").intValue())
@@ -1462,7 +1449,7 @@ object Dedup {
   def screenWithWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       maxDf: Int, minShared: Int): DataFrame = {
-    val p = spark.read.parquet(s"$dir/params").head
+    val p = SchemaReader.collectArtifact(spark, s"$dir/params").head
     val corpus = spark.read.parquet(s"$dir/data")
       .select(col(idCol).as("_cid"), col("fp"))
     val rare = corpus.groupBy(col("fp"))

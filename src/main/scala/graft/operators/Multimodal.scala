@@ -575,29 +575,25 @@ object Multimodal {
       dim: Int, bandSize: Int, dir: String): Unit = {
     require(dim % bandSize == 0, s"bandSize $bandSize must divide dim $dim")
     val seg = validatedProbeSeg(probes, idCol, vecCol, dim, maxNew = 1024)
-    StoredIndex.withAppendLock(spark, dir) {
-      StoredIndex.swapRewrite(spark, dir) { tmp =>
-        seg.write.parquet(s"$tmp/probes/seg=0")
-        spark.range(1).select(lit(dim).as("dim"),
-            lit(bandSize).as("band_size"),
-            // registered vectors must come from the decoder that will
-            // decode arrivals at route time — record which one
-            lit(MediaDecoders.active.id).as("decoder"))
-          .write.parquet(s"$tmp/geometry")
-        StoredIndex.writeMaxIdMeta(spark, tmp,
-          StoredIndex.requiredMaxId(seg, "probe_id"))
-      }
+    StoredIndex.build(dir, seg, "probe_id") { (seg, tmp) =>
+      seg.write.parquet(s"$tmp/probes/seg=0")
+      spark.range(1).select(lit(dim).as("dim"),
+          lit(bandSize).as("band_size"),
+          // registered vectors must come from the decoder that will
+          // decode arrivals at route time — record which one
+          lit(MediaDecoders.active.id).as("decoder"))
+        .write.parquet(s"$tmp/geometry")
     }
   }
 
   /** Register another exemplar batch: a NEW probe segment under the
-    * full [[StoredIndex.guardedAppendPrepared]] discipline (ascending
+    * full [[StoredIndex.guardedAppend]] discipline (ascending
     * ids, no duplicates, pending-meta crash fence) — existing segments
     * are never rewritten. Geometry/bound validation runs in the
     * fail-fast prepare phase, OUTSIDE the pending window. */
   def appendToProbeRegistry(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir,
+    StoredIndex.guardedAppend(spark, dir,
       batch.select(col(idCol).cast("long").as("probe_id")), "probe_id") {
       val (dim, _) = registryGeometry(spark, dir)
       val nExisting = spark.read.parquet(s"$dir/probes").count()
@@ -669,7 +665,7 @@ object Multimodal {
       require(survivors.count() > 0,
         "deregistering every probe would leave an unroutable registry — " +
           "delete the directory instead")
-      val maxId = StoredIndex.storedMaxId(spark, dir, "probe_id")
+      val maxId = StoredIndex.storedMaxId(spark, dir)
       StoredIndex.swapRewrite(spark, dir) { tmp =>
         survivors.write.parquet(s"$tmp/probes/seg=0")
         spark.range(1).select(lit(dim).as("dim"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Plans
+import graft.sources.SchemaReader
 
 /** BM25 full-text retrieval — inline over a corpus frame, and against a
   * persisted retrieval index (postings with term frequencies + document
@@ -146,7 +147,7 @@ object Retrieval {
     require(terms.nonEmpty && terms.size <= 32, "1..32 query terms")
     require(terms.distinct.size == terms.size, "duplicate query terms")
     val spark = df.sparkSession
-    val stats = spark.read.parquet(s"$dir/stats").head
+    val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
     val dfByTerm = spark.read.parquet(s"$dir/postings")
@@ -194,7 +195,7 @@ object Retrieval {
     require(terms.distinct.size == terms.size, "duplicate query terms")
     require(queries.nonEmpty, "at least one frozen query vector")
     val spark = df.sparkSession
-    val stats = spark.read.parquet(s"$dir/stats").head
+    val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
     val dfByTerm = spark.read.parquet(s"$dir/postings")
@@ -240,37 +241,20 @@ object Retrieval {
     */
   def writeRetrievalIndex(spark: SparkSession, df: DataFrame, idCol: String,
       textCol: String, dir: String): Unit = {
-    // checkpointed: four consumers (postings, doclens, stats, max-id) —
-    // each would otherwise re-scan and re-tokenize the whole corpus
+    // checkpointed: three consumers (postings, doclens, stats) — each
+    // would otherwise re-scan and re-tokenize the whole corpus. The
+    // parts score as ONE unit (BM25 mixes df_t from postings with
+    // n_docs / sum_dl / dl from the others), which the build's
+    // whole-dir swap keeps consistent; it also clears stale appended
+    // segments (seg=1+).
     val base = tokensFrame(df, idCol, textCol).localCheckpoint()
-    // The four artifacts (postings, doclens, stats, meta) score as ONE
-    // consistent unit — BM25 mixes df_t from postings with n_docs /
-    // sum_dl / dl from the others — so a rebuild over an existing index
-    // swaps the WHOLE index directory, not pieces of it: everything is
-    // fully written under `<dir>_tmp` before the old index is touched.
-    // A piecewise rewrite (swap postings, then overwrite doclens/stats)
-    // has a crash window where NEW postings score against STALE
-    // doclens/stats — silently wrong scores with no pending guard.
-    // This also clears stale appended segments (seg=1+), which a
-    // seg=0-only overwrite would leave inflating tf/df in every probe.
-    // Crash contract = [[StoredIndex.swapRewrite]]'s: at every instant
-    // either the old index or a complete `<dir>_tmp` exists on disk.
-    // Single-writer: the lock makes a concurrent append fail loudly
-    // instead of landing a segment the swap then silently wipes. This
-    // is the whole-dir-swap case [[StoredIndex.withAppendLock]]'s
-    // scaladoc covers: the swap relocates the lock file with the old
-    // dir, and release is ownership-checked for exactly that reason.
-    StoredIndex.withAppendLock(spark, dir) {
-      StoredIndex.swapRewrite(spark, dir) { tmp =>
-        postingsSegment(base).write.parquet(s"$tmp/postings/seg=0")
-        base.select(col("id"), size(col("_toks")).cast("long").as("dl"))
-          .write.parquet(s"$tmp/doclens")
-        base.agg(count(lit(1)).cast("long").as("n_docs"),
-            sum(size(col("_toks"))).cast("long").as("sum_dl"))
-          .write.parquet(s"$tmp/stats")
-        StoredIndex.writeMaxIdMeta(spark, tmp,
-          StoredIndex.requiredMaxId(base, "id"))
-      }
+    StoredIndex.build(dir, base, "id") { (base, tmp) =>
+      postingsSegment(base).write.parquet(s"$tmp/postings/seg=0")
+      base.select(col("id"), size(col("_toks")).cast("long").as("dl"))
+        .write.parquet(s"$tmp/doclens")
+      base.agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(size(col("_toks"))).cast("long").as("sum_dl"))
+        .write.parquet(s"$tmp/stats")
     }
   }
 
@@ -285,7 +269,7 @@ object Retrieval {
       idCol: String, textCol: String): Unit = {
     // checkpointed: three consumers (segment, doclens, stats delta)
     val base = tokensFrame(batch, idCol, textCol).localCheckpoint()
-    StoredIndex.guardedAppendPrepared(spark, dir, base, "id") {
+    StoredIndex.guardedAppend(spark, dir, base, "id") {
       // fail-fast prepare phase, OUTSIDE the pending window: a segment
       // listing failure or a missing/corrupt stats file must not strand
       // the meta in pending when no data file has landed. Hadoop FS,
@@ -296,7 +280,7 @@ object Retrieval {
         .listStatus(postsPath).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("seg="))
         .map(_.stripPrefix("seg=").toLong)
-      (segs.max + 1, spark.read.parquet(s"$dir/stats").head)
+      (segs.max + 1, SchemaReader.collectArtifact(spark, s"$dir/stats").head)
     } { case (nextSeg, old) =>
       postingsSegment(base)
         .write.mode("errorifexists").parquet(s"$dir/postings/seg=$nextSeg")
@@ -388,7 +372,7 @@ object Retrieval {
       k: Int): DataFrame = {
     require(terms.nonEmpty && terms.size <= 32, "1..32 query terms")
     require(terms.distinct.size == terms.size, "duplicate query terms")
-    val stats = spark.read.parquet(s"$dir/stats").head
+    val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
     val posts = spark.read.parquet(s"$dir/postings")

@@ -373,21 +373,32 @@ object Similarity {
     probeCells(queries, qIdCol, qVecCol, nProbe)(v =>
       sort_array(detAffs(v, centers), asc = false))
 
-  /** Write cell-tagged `rows` under `dir/data`, one `cell=` directory per
-    * cell, and return their max id, observed during the write (no job of
-    * its own). Ids that do not cast to long fail here, before the meta
-    * is written. */
-  private def writeCells(rows: DataFrame, idCol: String, dir: String): Long = {
-    val seen = org.apache.spark.sql.Observation()
-    rows.observe(seen, max(col(idCol).cast("long")).as("max_id"))
-      .repartition(col("cell"))  // cluster rows by the partition column first:
-      // without it every task opens a file per cell it sees (tasks x
-      // cells small files — the classic partitioned-write fanout)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-    val maxId = seen.get("max_id")
-    require(maxId != null, s"cannot derive a max id from '$idCol': ids " +
-      "that do not cast to long — refusing to write the index meta")
-    maxId.asInstanceOf[Long]
+  /** Write (or, with mode `append`, add) cell-tagged `rows` under
+    * `dir/data`, one `cell=` directory per cell: the one partitioned
+    * write of every IVF builder and append. Rows are clustered by cell
+    * first — without it every task opens a file per cell it sees
+    * (tasks × cells small files, the classic partitioned-write fanout). */
+  private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(s"$dir/data")
+
+  /** Trained k-means centroids as `dir/centers` (cell int, center
+    * array<double>). */
+  private def writeTrainedCenters(spark: org.apache.spark.sql.SparkSession,
+      centers: Seq[org.apache.spark.ml.linalg.Vector], dir: String): Unit = {
+    import spark.implicits._
+    centers.zipWithIndex.map { case (c, i) => (i, c.toArray.toSeq) }
+      .toDF("cell", "center").write.parquet(s"$dir/centers")
+  }
+
+  /** A PQ model as `dir/codebook`: one (j, code, center) row per
+    * subspace centroid. */
+  private def writeCodebook(spark: org.apache.spark.sql.SparkSession,
+      model: PqModel, dir: String): Unit = {
+    import spark.implicits._
+    (for { j <- 0 until model.m; c <- 0 until model.k }
+      yield (j, c, model.centroids(j)(c).toSeq))
+      .toDF("j", "code", "center").write.parquet(s"$dir/codebook")
   }
 
   /** Write driver-held centroids as `dir/centers` (cell int, center
@@ -399,7 +410,7 @@ object Similarity {
       corpus.select(asDouble(col(vecCol)).as("center")).schema.head))
     corpus.sparkSession.createDataFrame(java.util.Arrays.asList(centers.zipWithIndex
       .map { case (c, i) => org.apache.spark.sql.Row(i, c) }: _*), schema)
-      .write.mode("overwrite").parquet(s"$dir/centers")
+      .write.parquet(s"$dir/centers")
   }
 
   /** A stored index's cell-partitioned `dir/data` under its footer
@@ -419,13 +430,10 @@ object Similarity {
       dir: String, nCentroids: Int): Unit = {
     val centers = detCenters(corpus, idCol, vecCol, nCentroids)
     require(centers.nonEmpty, s"cannot index an empty corpus into $dir")
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val maxId = writeCells(detAssign(corpus, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), idCol, dir)
-      writeCenters(corpus, vecCol, dir, centers)
-      StoredIndex.writeMaxIdMeta(corpus.sparkSession, dir, maxId)
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      writeCells(detAssign(rows, idCol, vecCol, centers)
+        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), tmp, "overwrite")
+      writeCenters(corpus, vecCol, tmp, centers)
     }
   }
 
@@ -484,33 +492,35 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int, seed: Long = 42L,
       quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
-      val train = Sampling.deterministic(featured, idCol, trainFraction)
-        .select("_feat").persist()
-      val model = new KMeans()
-        .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
-        .setInitMode("random")
-        .setFeaturesCol("_feat").setPredictionCol("cell")
-        .fit(train)
-      train.unpersist(blocking = false)
-      model.transform(featured).drop("_feat")
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      model.clusterCenters.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      StoredIndex.writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+    val model = trainCoarse(corpus, idCol, vecCol, nCentroids, seed,
+      quantizerIter, trainFraction)
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      writeCells(model.transform(featured(rows, vecCol)).drop("_feat"), tmp, "overwrite")
+      writeTrainedCenters(corpus.sparkSession, model.clusterCenters.toSeq, tmp)
     }
+  }
+
+  /** `_feat`: the vector column as an ML vector, k-means' input. */
+  private def featured(df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("_feat", org.apache.spark.ml.functions.array_to_vector(
+      asDouble(col(vecCol))))
+
+  /** The trained writers' coarse quantizer: k-means (random init, fixed
+    * seed) over the deterministic `trainFraction` sample, predicting
+    * `cell` from `_feat`. Trained on the caller's un-observed corpus,
+    * before the build: a sample or a `head` over the observed frame
+    * would observe part of the input. */
+  private def trainCoarse(corpus: DataFrame, idCol: String, vecCol: String,
+      nCentroids: Int, seed: Long, quantizerIter: Int,
+      trainFraction: Double): org.apache.spark.ml.clustering.KMeansModel = {
+    val train = Sampling.deterministic(featured(corpus, vecCol), idCol, trainFraction)
+      .select("_feat").persist()
+    try new org.apache.spark.ml.clustering.KMeans()
+      .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
+      .setInitMode("random")
+      .setFeaturesCol("_feat").setPredictionCol("cell")
+      .fit(train)
+    finally train.unpersist(blocking = false)
   }
 
   /** Probe a persisted IVF index: nearest `nProbe` cells per query
@@ -868,21 +878,13 @@ object Similarity {
     val centers = detCenters(corpus, idCol, vecCol, nCentroids)
     require(centers.nonEmpty, s"cannot index an empty corpus into $dir")
     val model = pqModelDeterministic(corpus, idCol, vecCol, m, k)
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val assigned = detAssign(corpus, idCol, vecCol, centers)
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      val assigned = detAssign(rows, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
-      val maxId = writeCells(pqEncode(assigned, "_vec", model, rounded = true)
-        .select(col(idCol), col("codes"), col("cell")), idCol, dir)
-      writeCenters(corpus, vecCol, dir, centers)
-      val cb = for { j <- 0 until m; c <- 0 until k }
-        yield (j, c, model.centroids(j)(c).toSeq)
-      cb.toDF("j", "code", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      StoredIndex.writeMaxIdMeta(spark, dir, maxId)
+      writeCells(pqEncode(assigned, "_vec", model, rounded = true)
+        .select(col(idCol), col("codes"), col("cell")), tmp, "overwrite")
+      writeCenters(corpus, vecCol, tmp, centers)
+      writeCodebook(corpus.sparkSession, model, tmp)
     }
   }
 
@@ -902,15 +904,13 @@ object Similarity {
     * fast instead of silently corrupting probe results. */
   def appendToIvfIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // the driver read decodes every page, so a corrupt (not just
       // missing) stored artifact fails before the meta goes pending
       storedCenters(spark, dir)
     } { centers =>
-      detAssign(batch, idCol, vecCol, centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+      writeCells(detAssign(batch, idCol, vecCol, centers)
+        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), dir, "append")
     }
 
   /** TRAINED twin of [[appendToIvfIndexDeterministic]]: the new batch
@@ -923,13 +923,11 @@ object Similarity {
     * projections). */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       storedCenters(spark, dir) // eager: see appendToIvfIndexDeterministic
     } { centers =>
-      batch.withColumn("cell",
-          array_min(l2Cells(asDouble(col(vecCol)), centers)).getField("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+      writeCells(batch.withColumn("cell",
+        array_min(l2Cells(asDouble(col(vecCol)), centers)).getField("cell")), dir, "append")
     }
 
   /** Load a stored PQ codebook back into a [[PqModel]] — m*k rows, a
@@ -956,39 +954,15 @@ object Similarity {
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int, m: Int, k: Int, seed: Long = 42L,
       quantizerIter: Int = 5, trainFraction: Double = 0.25): Unit = {
-    // single-writer: a rebuild racing a locked append would overwrite
-    // data the append's meta watermark already claims is indexed
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val featured = corpus.withColumn("_feat", array_to_vector(asDouble(col(vecCol))))
-      val train = Sampling.deterministic(featured, idCol, trainFraction)
-        .select("_feat").persist()
-      val coarse = new KMeans()
-        .setK(nCentroids).setSeed(seed).setMaxIter(quantizerIter)
-        .setInitMode("random")
-        .setFeaturesCol("_feat").setPredictionCol("cell")
-        .fit(train)
-      train.unpersist(blocking = false)
-      val pq = pqTrain(corpus, idCol, vecCol, m, k, seed, quantizerIter,
-        trainFraction)
-      pqEncode(coarse.transform(featured).drop("_feat"), vecCol, pq)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))  // cluster rows by the partition column first:
-        // without it every task opens a file per cell it sees (tasks x
-        // cells small files — the classic partitioned-write fanout)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-      coarse.clusterCenters.zipWithIndex.toSeq
-        .map { case (c, i) => (i, c.toArray.toSeq) }.toDF("cell", "center")
-        .write.mode("overwrite").parquet(s"$dir/centers")
-      val cb = for { j <- 0 until m; c <- 0 until k }
-        yield (j, c, pq.centroids(j)(c).toSeq)
-      cb.toDF("j", "code", "center")
-        .write.mode("overwrite").parquet(s"$dir/codebook")
-      StoredIndex.writeMaxIdMeta(spark, dir,
-        StoredIndex.requiredMaxId(corpus, idCol))
+    val coarse = trainCoarse(corpus, idCol, vecCol, nCentroids, seed,
+      quantizerIter, trainFraction)
+    val pq = pqTrain(corpus, idCol, vecCol, m, k, seed, quantizerIter,
+      trainFraction)
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      writeCells(pqEncode(coarse.transform(featured(rows, vecCol)).drop("_feat"), vecCol, pq)
+        .select(col(idCol), col("codes"), col("cell")), tmp, "overwrite")
+      writeTrainedCenters(corpus.sparkSession, coarse.clusterCenters.toSeq, tmp)
+      writeCodebook(corpus.sparkSession, pq, tmp)
     }
   }
 
@@ -1030,16 +1004,14 @@ object Similarity {
     * indexing the union up front. */
   def appendToIvfPqIndexDeterministic(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // both are eager driver reads (see appendToIvfIndexDeterministic)
       (loadPqCodebook(spark, dir), storedCenters(spark, dir))
     } { case (model, centers) =>
       val assigned = detAssign(batch, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
-      pqEncode(assigned, "_vec", model, rounded = true)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+      writeCells(pqEncode(assigned, "_vec", model, rounded = true)
+        .select(col(idCol), col("codes"), col("cell")), dir, "append")
     }
 
   /** TRAINED twin of [[appendToIvfPqIndexDeterministic]]: squared-L2
@@ -1049,17 +1021,15 @@ object Similarity {
     * production IVFADC index. Same id-discipline validation. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // both are eager driver reads (see appendToIvfIndexDeterministic)
       (loadPqCodebook(spark, dir), storedCenters(spark, dir))
     } { case (model, centers) =>
       val assigned = batch
         .select(col(idCol), asDouble(col(vecCol)).as("_vec"))
         .withColumn("cell", array_min(l2Cells(col("_vec"), centers)).getField("cell"))
-      pqEncode(assigned, "_vec", model)
-        .select(col(idCol), col("codes"), col("cell"))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+      writeCells(pqEncode(assigned, "_vec", model)
+        .select(col(idCol), col("codes"), col("cell")), dir, "append")
     }
 
   /** Probe a composed IVF+PQ index: queries route to their `nProbe`
@@ -1256,6 +1226,7 @@ object Similarity {
     var centers: Seq[(Int, Array[Long])] =
       vq.orderBy(col("_id")).limit(k).collect().zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Long](1).toArray) }.toSeq
+    require(centers.nonEmpty, "cannot train k-means on an empty input")
     var it = 0
     while (it < iters) {
       // (cell, dim) sums/counts: k·dim rows — bounded model-size collect
@@ -1375,23 +1346,16 @@ object Similarity {
     * the other IVF writers. */
   def writeIvfIndexMicroExact(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int, iters: Int): Unit = {
-    // single-writer: same rebuild-vs-append race as the other writers
-    StoredIndex.withAppendLock(corpus.sparkSession, dir) {
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val vq = kmQuant(corpus, idCol, vecCol)
-      vq.persist()
-      try {
-        val centers = trainMicro(vq, nCentroids, iters)
-        kmAssign(vq, centers)
-          .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-          .repartition(col("cell")) // one writer task per cell (fanout guard)
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/data")
-        centers.map { case (cell, c) => (cell, c.toSeq) }
-          .toDF("cell", "center")
-          .write.mode("overwrite").parquet(s"$dir/centers")
-        StoredIndex.writeMaxIdMeta(spark, dir, StoredIndex.requiredMaxId(corpus, idCol))
-      } finally vq.unpersist()
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    // trained before the build: the init's ordered limit over the
+    // observed frame could observe part of the input
+    val centers = kmeansMicroExact(corpus, idCol, vecCol, nCentroids, iters)
+    StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
+      writeCells(kmAssign(kmQuant(rows, idCol, vecCol), centers)
+        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), tmp, "overwrite")
+      centers.map { case (cell, c) => (cell, c.toSeq) }
+        .toDF("cell", "center").write.parquet(s"$tmp/centers")
     }
   }
 
@@ -1409,15 +1373,13 @@ object Similarity {
     * rows-only gap from the exact side. */
   def appendToIvfIndexMicroExact(spark: org.apache.spark.sql.SparkSession,
       dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // bounded driver read (k centroid rows), outside the pending
       // window: a missing/corrupt centers artifact fails fast here
       readIvfCentersMicro(spark, dir)
     } { centers =>
-      kmAssign(kmQuant(batch, idCol, vecCol), centers)
-        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell"))
-        .repartition(col("cell")) // one writer task per cell (fanout guard)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/data")
+      writeCells(kmAssign(kmQuant(batch, idCol, vecCol), centers)
+        .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), dir, "append")
     }
 
   /** Probe a [[writeIvfIndexMicroExact]] index: queries quantize to

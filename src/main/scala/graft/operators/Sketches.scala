@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.sources.SchemaReader
 
 /** Mergeable sketch statistics — the 100 TB pattern for cardinality and
   * quantiles: build a small partial sketch per group/partition/day,
@@ -193,22 +194,20 @@ object Sketches {
     * full recompute would produce — q141 hash-checks exactly that. */
   def writeKmvSnapshot(spark: SparkSession, df: DataFrame, idCol: String,
       groupCol: String, textCol: String, shingleN: Int, k: Int,
-      dir: String): Unit = {
-    kmvSketch(df, groupCol, textCol, shingleN, k)
-      .write.mode("overwrite").parquet(s"$dir/data")
-    spark.range(1).select(lit(shingleN).as("shingle_n"), lit(k).as("k"))
-      .write.mode("overwrite").parquet(s"$dir/params")
-    StoredIndex.writeMaxIdMeta(spark, dir,
-      StoredIndex.requiredMaxId(df, idCol))
-  }
+      dir: String): Unit =
+    StoredIndex.build(dir, df, idCol) { (rows, tmp) =>
+      kmvSketch(rows, groupCol, textCol, shingleN, k).write.parquet(s"$tmp/data")
+      spark.range(1).select(lit(shingleN).as("shingle_n"), lit(k).as("k"))
+        .write.parquet(s"$tmp/params")
+    }
 
   /** Fold one new batch into the stored sketch: sketch the batch with
     * the STORED geometry, append one segment, never rewrite. */
   def appendToKmvSnapshot(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, groupCol: String, textCol: String): Unit =
-    StoredIndex.guardedAppendPrepared(spark, dir, batch, idCol) {
+    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
       // params read fails fast BEFORE the meta goes pending
-      spark.read.parquet(s"$dir/params").head
+      SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
       kmvSketch(batch, groupCol, textCol,
           p.getAs[Number]("shingle_n").intValue(), p.getAs[Number]("k").intValue())
@@ -219,7 +218,8 @@ object Sketches {
     * [[kmvMerge]] and estimate — raw text is never re-read. */
   def readKmvSnapshot(spark: SparkSession, dir: String,
       groupCol: String): DataFrame = {
-    val k = spark.read.parquet(s"$dir/params").head.getAs[Number]("k").intValue()
+    val k = SchemaReader.collectArtifact(spark, s"$dir/params").head
+      .getAs[Number]("k").intValue()
     kmvSketchEstimate(
       kmvMerge(spark.read.parquet(s"$dir/data"), groupCol, k), groupCol, k)
   }

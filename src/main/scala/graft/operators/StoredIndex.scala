@@ -1,41 +1,60 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.SchemaReader
 
 /** Shared plumbing for the engine's persisted index artifacts (IVF /
-  * IVFADC vector indexes, simhash signature indexes): the one-row
+  * IVFADC vector indexes, signature indexes, sketch and stats
+  * snapshots, the retrieval index, the probe registry): the one-row
   * max-id meta and the append-only id-discipline validation every
   * incremental-ingest entry point relies on for its rebuild-equivalence
-  * guarantee. */
+  * guarantee.
+  *
+  * Build protocol ([[build]], the only way a watermarked index is built
+  * or rebuilt): take the single-writer lock, write every part from ONE
+  * observed pass over the input into `<dir>_tmp`, write `meta` beside
+  * the parts, then swap the whole directory in ([[swapRewrite]]). A
+  * build that fails at any step leaves the previous index whole. */
 object StoredIndex {
 
   /** Record the indexed corpus's max id as a one-row parquet under
     * `dir/meta` — the cheap stored handle the append-only id discipline
     * is validated against (reading it back is a footer-sized pull, not
-    * a corpus scan). */
-  def writeMaxIdMeta(spark: SparkSession, dir: String, maxId: Long): Unit =
-    writeMaxIdMeta(spark, dir, maxId, pending = false)
-
-  /** [[writeMaxIdMeta]] with the two-phase append flag ([[guardedAppend]]):
-    * `pending = true` marks an append in flight; a meta left pending
-    * makes the NEXT append fail loudly instead of silently
-    * double-ingesting against a stale watermark. */
+    * a corpus scan). `pending = true` marks an append in flight
+    * ([[guardedAppend]]): a meta left pending makes the NEXT append
+    * fail loudly instead of silently double-ingesting against a stale
+    * watermark. */
   def writeMaxIdMeta(spark: SparkSession, dir: String, maxId: Long,
-      pending: Boolean): Unit =
+      pending: Boolean = false): Unit =
     spark.range(1).select(lit(maxId).as("max_id"), lit(pending).as("pending"))
       .write.mode("overwrite").parquet(s"$dir/meta")
 
-  /** Max id of a frame, REQUIRED non-null: an empty input or an id
-    * column that does not cast to long fails loudly, naming the cause,
-    * instead of NPE-ing. One aggregate job over the input. */
-  def requiredMaxId(df: DataFrame, idCol: String): Long = {
-    val r = df.agg(max(col(idCol).cast("long"))).head
-    require(!r.isNullAt(0),
-      s"cannot derive a max id from '$idCol': empty input or ids that " +
-        "do not cast to long — refusing to write an index")
-    r.getLong(0)
+  /** Build (or rebuild) the index at `dir` from `frame`: under the
+    * single-writer lock, `write` gets `frame` wrapped in one
+    * `Dataset.observe` (max id cast to long, row count — no job of its
+    * own) and a fresh `<dir>_tmp` to write its parts into. A zero-row
+    * input or one whose ids are all null fails here, naming the cause;
+    * otherwise `meta` is written beside the parts and the whole
+    * directory is swapped in. `write` must consume the observed frame
+    * only in full passes (writes, aggregates): a limit or a sample read
+    * first would observe part of the input. */
+  def build(dir: String, frame: DataFrame, idCol: String)(
+      write: (DataFrame, String) => Unit): Unit = {
+    val spark = frame.sparkSession
+    withAppendLock(spark, dir) {
+      swapRewrite(spark, dir) { tmp =>
+        val seen = Observation()
+        write(frame.observe(seen,
+          max(col(idCol).cast("long")).as("max_id"), count(lit(1)).as("rows")), tmp)
+        // an input Spark proves empty before running it reports no metrics
+        val m = seen.get
+        require(m.get("rows").exists(_ != 0L), s"cannot build $dir from an empty input")
+        require(m("max_id") != null, s"cannot derive a max id from '$idCol': " +
+          "every id is null — refusing to write the index meta")
+        writeMaxIdMeta(spark, tmp, m("max_id").asInstanceOf[Long])
+      }
+    }
   }
 
   private def metaPending(spark: SparkSession, dir: String): Boolean =
@@ -64,28 +83,23 @@ object StoredIndex {
         "compaction — compacting now would silently commit a partial batch")
 
   /** The append protocol every stored artifact shares: validate the
-    * id discipline, mark the meta PENDING at the new watermark, run the
-    * data append, clear the flag. A crash between any two steps leaves
-    * the meta pending, so the next append FAILS LOUDLY (see
-    * [[validateAppendBatch]]) instead of the two silent failure modes
-    * the naive order has — replaying a batch against a stale watermark
-    * (duplicate rows) or advancing the watermark over rows that never
-    * landed (silent loss). Repair: check whether the pending batch's
-    * rows are in `dir/data`, then clear with `writeMaxIdMeta(dir, max)`
-    * at the verified watermark. */
-  def guardedAppend(spark: SparkSession, dir: String, batch: DataFrame,
-      idCol: String)(write: => Unit): Unit =
-    guardedAppendPrepared(spark, dir, batch, idCol)(())(_ => write)
-
-  /** [[guardedAppend]] with a fail-fast PREPARE phase: `prepare` runs
-    * after the batch validates but BEFORE the meta is marked pending.
-    * Reads that can fail for reasons unrelated to the data write —
-    * stored params, segment listings, codebook pulls — belong there:
-    * failing them inside the pending window would strand the index in
-    * pending (blocking all future appends until manual repair) even
-    * though no data file ever landed. Only the actual data write
-    * belongs inside the pending window. */
-  def guardedAppendPrepared[A](spark: SparkSession, dir: String, batch: DataFrame,
+    * id discipline, run `prepare`, mark the meta PENDING at the new
+    * watermark, run the data append, clear the flag. A crash between
+    * any two steps leaves the meta pending, so the next append FAILS
+    * LOUDLY (see [[validateAppendBatch]]) instead of the two silent
+    * failure modes the naive order has — replaying a batch against a
+    * stale watermark (duplicate rows) or advancing the watermark over
+    * rows that never landed (silent loss). Repair: check whether the
+    * pending batch's rows are in `dir/data`, then clear with
+    * `writeMaxIdMeta(dir, max)` at the verified watermark.
+    *
+    * `prepare` runs after the batch validates but BEFORE the meta is
+    * marked pending. Reads that can fail for reasons unrelated to the
+    * data write — stored params, segment listings, codebook pulls —
+    * belong there: failing them inside the pending window would strand
+    * the index in pending even though no data file ever landed. Only
+    * the actual data write belongs inside the pending window. */
+  def guardedAppend[A](spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String)(prepare: => A)(write: A => Unit): Unit =
     withAppendLock(spark, dir) {
       validateAppendBatch(spark, dir, batch, idCol).foreach { newMax =>
@@ -108,8 +122,9 @@ object StoredIndex {
     * FS, which has no concurrent executors anyway): the second writer
     * fails LOUDLY instead of racing.
     *
-    * Two subtleties for WHOLE-DIR swap holders ([[Retrieval.writeRetrievalIndex]]
-    * swaps `dir` itself while the lock lives INSIDE `dir`):
+    * Two subtleties for WHOLE-DIR swap holders ([[build]] and
+    * `Multimodal.compactProbeRegistry` swap `dir` itself while the lock
+    * lives INSIDE `dir`):
     *  - acquisition first finishes any crashed swap of `dir` (live name
     *    missing, complete `_tmp`/`_old` present): creating the lock file
     *    would CREATE the bare dir and mask the leftovers from
@@ -234,13 +249,10 @@ object StoredIndex {
       g.group(1) == hostName && (!ph.isPresent || !ph.get.isAlive)
     }
 
-  /** Max id already in the stored index: from `dir/meta` when present
-    * (a driver read, no Spark job), else (indexes written before meta
-    * existed) one column-pruned agg over the data files. */
-  def storedMaxId(spark: SparkSession, dir: String, idCol: String): Long =
-    scala.util.Try(SchemaReader.collectArtifact(spark, s"$dir/meta").head.getAs[Long]("max_id"))
-      .getOrElse(spark.read.parquet(s"$dir/data")
-        .agg(max(col(idCol).cast("long"))).head.getLong(0))
+  /** Max id already in the stored index, from `dir/meta` (a driver
+    * read, no Spark job). A missing meta fails, naming `dir/meta`. */
+  def storedMaxId(spark: SparkSession, dir: String): Long =
+    SchemaReader.collectArtifact(spark, s"$dir/meta").head.getAs[Long]("max_id")
 
   /** Finish a crashed swap of `p` (shared by [[swapRewrite]] retries
     * and [[withAppendLock]]): if the live name is missing, a prior
@@ -303,7 +315,12 @@ object StoredIndex {
     recoverSwap(fs, p)
     fs.delete(tmp, true) // an incomplete tmp from a crash DURING write
     fs.delete(old, true) // a rollback the prior swap never cleaned
-    val result = write(tmp.toString)
+    // a write that throws leaves no `_tmp`: recovery takes any `_tmp`
+    // for a fully-written replacement
+    val result = try write(tmp.toString) catch { case e: Throwable =>
+      try fs.delete(tmp, true) catch { case d: Throwable => e.addSuppressed(d) }
+      throw e
+    }
     if (fs.exists(p))
       require(fs.rename(p, old), s"rename $path -> $old failed")
     require(fs.rename(tmp, p), s"rename $tmp -> $path failed")
@@ -332,7 +349,7 @@ object StoredIndex {
       val (mn, mx, n, nd) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       require(nd == n,
         s"append batch has ${n - nd} duplicate id(s) in '$idCol' — refusing to append")
-      val maxIndexed = storedMaxId(spark, dir, idCol)
+      val maxIndexed = storedMaxId(spark, dir)
       require(mn > maxIndexed,
         s"append-only id discipline violated: batch min id $mn <= max indexed id " +
           s"$maxIndexed; appending would diverge from a full rebuild")

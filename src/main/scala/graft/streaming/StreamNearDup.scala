@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
+import graft.sources.SchemaReader
 
 /** One banded fingerprint occurrence flowing into the stateful stage. */
 case class BandEvent(docId: Long, sim: Long, bandId: Int, bandVal: Long)
@@ -134,7 +135,7 @@ object StreamNearDup {
       bandBits: Int = 8): Dataset[Collision] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val bits = spark.read.parquet(s"$indexDir/params")
+    val bits = SchemaReader.collectArtifact(spark, s"$indexDir/params")
       .head.getAs[Number]("bits").intValue()
     require(bits % bandBits == 0, "stored bits must be divisible by bandBits")
     val nBands = bits / bandBits
@@ -259,7 +260,7 @@ object StreamNearDup {
       idCol: String, textCol: String, maxDf: Int): Dataset[FpMatch] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    val p = spark.read.parquet(s"$indexDir/params").head
+    val p = SchemaReader.collectArtifact(spark, s"$indexDir/params").head
     val (kGram, w) =
       (p.getAs[Number]("k_gram").intValue(), p.getAs[Number]("w").intValue())
     val corpus = spark.read.parquet(s"$indexDir/data")

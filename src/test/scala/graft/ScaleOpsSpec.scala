@@ -234,7 +234,7 @@ class MultimodalSpec extends SparkSpec {
     Multimodal.writeProbeRegistry(spark,
       probes(1L -> Seq(10L, 20L, 30L, 40L)), "doc_id", "_pv", 4, 2, dir)
     // simulate the crash window: meta marked pending at a new watermark
-    // (exactly what guardedAppendPrepared writes before the data lands)
+    // (exactly what guardedAppend writes before the data lands)
     StoredIndex.writeMaxIdMeta(spark, dir, 7L, pending = true)
     intercept[IllegalArgumentException] {
       Multimodal.compactProbeRegistry(spark, dir)

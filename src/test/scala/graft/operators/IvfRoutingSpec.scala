@@ -100,7 +100,7 @@ class IvfRoutingSpec extends SparkSpec {
           spark.read.parquet(p).collect().map(_.toString).sorted.toSeq
       }
       // the meta's max id is the one observed during the data write
-      StoredIndex.storedMaxId(spark, d, "vec_id") shouldBe 119L
+      StoredIndex.storedMaxId(spark, d) shouldBe 119L
     }
     SchemaReader.collectArtifact(spark, s"$pqDir/codebook").map(_.toString).sorted shouldBe
       spark.read.parquet(s"$pqDir/codebook").collect().map(_.toString).sorted.toSeq
@@ -148,7 +148,7 @@ class IvfRoutingSpec extends SparkSpec {
     // nothing to repair: restoring the artifact is enough
     java.nio.file.Files.write(part, good)
     Similarity.appendToIvfIndexDeterministic(spark, dir, batch, "vec_id", "embedding")
-    StoredIndex.storedMaxId(spark, dir, "vec_id") shouldBe 119L
+    StoredIndex.storedMaxId(spark, dir) shouldBe 119L
   }
 
   test("an empty corpus fails both deterministic writers before anything lands under dir") {

@@ -777,7 +777,7 @@ class SimilaritySpec extends SparkSpec {
     // repair: clear the marker at the verified watermark → append works
     StoredIndex.writeMaxIdMeta(spark, dir, 19L)
     Similarity.appendToIvfIndexDeterministic(spark, dir, batch, "vec_id", "embedding")
-    StoredIndex.storedMaxId(spark, dir, "vec_id") shouldBe 34L
+    StoredIndex.storedMaxId(spark, dir) shouldBe 34L
   }
 
   test("guarded append: a failed prepare read does not strand the index in pending") {
@@ -803,7 +803,7 @@ class SimilaritySpec extends SparkSpec {
     fs.rename(new org.apache.hadoop.fs.Path(s"$dir/centers_hidden"),
       new org.apache.hadoop.fs.Path(s"$dir/centers")) shouldBe true
     Similarity.appendToIvfIndexDeterministic(spark, dir, batch, "vec_id", "embedding")
-    StoredIndex.storedMaxId(spark, dir, "vec_id") shouldBe 34L
+    StoredIndex.storedMaxId(spark, dir) shouldBe 34L
   }
 
   test("deterministic IVF index round trip equals the in-memory deterministic IVF") {

@@ -157,6 +157,26 @@ class StoredIndexDurabilitySpec extends SparkSpec {
     }
   }
 
+  test("a swapRewrite whose write throws leaves no _tmp for a later lock to promote") {
+    val dir = tmpDir("swap_throw") + "/idx"
+    Seq((1L, "old")).toDF("id", "v").write.parquet(dir)
+    intercept[RuntimeException] {
+      StoredIndex.swapRewrite(spark, dir) { tmp =>
+        Seq((1L, "partial")).toDF("id", "v").write.parquet(tmp)
+        sys.error("boom")
+      }
+    }
+    fs(dir).exists(new org.apache.hadoop.fs.Path(dir + "_tmp")) shouldBe false
+    spark.read.parquet(dir).select("v").head.getString(0) shouldBe "old"
+    // Artifacts.prepare deletes the live dir before a rebuild: the lock
+    // must then find nothing to restore, not the partial copy
+    fs(dir).delete(new org.apache.hadoop.fs.Path(dir), true)
+    StoredIndex.withAppendLock(spark, dir) {
+      fs(dir).listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+        .toSeq shouldBe Seq("_append_lock")
+    }
+  }
+
   test("swapRewrite retry restores from _old when no _tmp survived") {
     val dir = tmpDir("swap_crash2") + "/idx"
     def write(path: String, tag: String): Unit =
