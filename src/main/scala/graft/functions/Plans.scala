@@ -35,16 +35,29 @@ object Plans {
     val sess = df.sparkSession
     val cap = sess.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val floor = math.min(cap, sess.sparkContext.defaultParallelism)
-    // a streaming frame has no batch optimizedPlan (checkForBatch
-    // throws) and no meaningful size estimate — cap, as before round 16
-    if (df.isStreaming) return cap
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // > 1 PiB = "no real estimate" (unknown leaves report
-    // spark.sql.defaultSizeInBytes, Long.MaxValue by default)
-    if (bytes <= 0 || bytes > BigInt(1L << 50)) cap
-    else math.max(floor.toLong, math.min(cap.toLong,
-      (bytes.toLong + FanoutBytesPerPartition - 1) / FanoutBytesPerPartition)).toInt
+    estimatedBytes(df).fold(cap) { bytes =>
+      math.max(floor.toLong, math.min(cap.toLong,
+        (bytes + FanoutBytesPerPartition - 1) / FanoutBytesPerPartition)).toInt
+    }
   }
+
+  /** THE write-size gate: an input whose estimate fits one
+    * [[FanoutBytesPerPartition]] is written by one task with no
+    * exchange (`coalesce(1)`: one file per output directory, one job);
+    * a larger or unknown one takes `atScale`, the write's distributed
+    * shape. */
+  def sizedForWrite(df: DataFrame)(atScale: DataFrame => DataFrame): DataFrame =
+    if (estimatedBytes(df).exists(_ <= FanoutBytesPerPartition)) df.coalesce(1) else atScale(df)
+
+  /** The optimizer's size estimate of `df`, None when it has no real
+    * one: a streaming frame has no batch optimizedPlan (checkForBatch
+    * throws), and leaves without statistics (RDD- or checkpoint-backed)
+    * report `spark.sql.defaultSizeInBytes`, Long.MaxValue by default —
+    * anything over 1 PiB or not positive reads as unknown. */
+  private def estimatedBytes(df: DataFrame): Option[Long] =
+    if (df.isStreaming) None
+    else Some(df.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .filter(b => b > 0 && b <= BigInt(1L << 50)).map(_.toLong)
 
   // THE broadcast decision reads the session here and nowhere else: no
   // operator carries a per-call flag, and a threshold ≤ 0 (Spark's own

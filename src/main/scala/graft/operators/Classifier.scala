@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
+import graft.sinks.ForkFreeLocalFileSystem
 
 /** Model-based quality classification — the GPT-3 / DCLM / FineWeb-Edu
   * move: train a cheap linear text classifier to distinguish a
@@ -102,11 +103,11 @@ object Classifier {
   def writeModelArtifact(spark: SparkSession, dir: String,
       wMicro: Array[Long], biasMicro: Long): Unit = {
     import spark.implicits._
-    wMicro.zipWithIndex.map { case (w, b) => (b, w) }.toSeq
+    val weights = wMicro.zipWithIndex.map { case (w, b) => (b, w) }.toSeq
       .toDF("bucket", "w_micro")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/weights")
-    Seq((biasMicro, wMicro.length)).toDF("bias_micro", "n_buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/weights")
+    ForkFreeLocalFileSystem.write(Seq((biasMicro, wMicro.length)).toDF("bias_micro", "n_buckets")
+      .coalesce(1)).mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** Score against the STORED model: the artifact (B+1 rows, bounded)

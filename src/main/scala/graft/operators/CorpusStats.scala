@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.ForkFreeLocalFileSystem
+
 /** Incremental corpus accounting: a persisted per-source statistics
   * snapshot maintained by MERGEABLE aggregates (counts, sums, min/max)
   * under the log-structured-segment discipline the retrieval index
@@ -37,7 +39,7 @@ object CorpusStats {
   def writeStatsSnapshot(spark: SparkSession, df: DataFrame, idCol: String,
       textCol: String, srcCol: String, dir: String): Unit =
     StoredIndex.build(dir, df, idCol) { (rows, tmp) =>
-      partials(rows, idCol, textCol, srcCol).write.parquet(s"$tmp/data")
+      ForkFreeLocalFileSystem.write(partials(rows, idCol, textCol, srcCol)).parquet(s"$tmp/data")
     }
 
   /** Fold one new batch into the snapshot: batch-sized work, a new
@@ -45,8 +47,8 @@ object CorpusStats {
   def appendToStatsSnapshot(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, srcCol: String): Unit =
     StoredIndex.guardedAppend(spark, dir, batch, idCol)(()) { _ =>
-      partials(batch, idCol, textCol, srcCol)
-        .write.mode("append").parquet(s"$dir/data")
+      ForkFreeLocalFileSystem.write(partials(batch, idCol, textCol, srcCol))
+        .mode("append").parquet(s"$dir/data")
     }
 
   /** Current snapshot: segments folded by re-aggregation (sum-of-sums,

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Plans, PortableHash}
+import graft.sinks.ForkFreeLocalFileSystem
 
 /** Train/test decontamination: drop corpus documents that share any
   * n-gram with a held-out evaluation set — the standard pre-training
@@ -172,11 +173,11 @@ object Decontaminate {
       test: DataFrame, testTextCol: String, n: Int, dir: String,
       fpp: Double = 0.01): Unit = {
     val grams = testGramSet(test, testTextCol, n).localCheckpoint()
-    grams.write.mode("overwrite").parquet(s"$dir/grams")
-    spark.range(1)
+    ForkFreeLocalFileSystem.write(grams).mode("overwrite").parquet(s"$dir/grams")
+    ForkFreeLocalFileSystem.write(spark.range(1)
       .select(lit(bloomFromGrams(grams, fpp)).as("bloom"),
-        lit(n).as("n"))
-      .write.mode("overwrite").parquet(s"$dir/bloom")
+        lit(n).as("n")))
+      .mode("overwrite").parquet(s"$dir/bloom")
   }
 
   /** [[cleanBloomExact]] against the STORED artifact: the bloom is a

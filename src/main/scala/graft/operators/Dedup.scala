@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Plans, PortableHash, PortableRound}
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
 /** Document deduplication suite for large-scale training-data pipelines:
@@ -469,8 +470,8 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       bits: Int = 32): Unit = {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
-      simhash(rows, idCol, textCol, bits).write.parquet(s"$tmp/data")
-      spark.range(1).select(lit(bits).as("bits")).write.parquet(s"$tmp/params")
+      ForkFreeLocalFileSystem.write(simhash(rows, idCol, textCol, bits)).parquet(s"$tmp/data")
+      StoredIndex.writeParams(spark, tmp, "bits" -> bits)
     }
   }
 
@@ -486,8 +487,8 @@ object Dedup {
       SchemaReader.collectArtifact(spark, s"$dir/params").head
         .getAs[Number]("bits").intValue()
     } { bits =>
-      simhash(batch, idCol, textCol, bits)
-        .write.mode("append").parquet(s"$dir/data")
+      ForkFreeLocalFileSystem.write(simhash(batch, idCol, textCol, bits))
+        .mode("append").parquet(s"$dir/data")
     }
 
   /** [[incrementalNearDup]] against the STORED signature index: the
@@ -518,9 +519,9 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       k: Int = 16, shingleN: Int = 3): Unit = {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
-      minhashSignatureShingled(rows, idCol, textCol, k, shingleN).write.parquet(s"$tmp/data")
-      spark.range(1).select(lit(k).as("k"), lit(shingleN).as("shingle_n"))
-        .write.parquet(s"$tmp/params")
+      ForkFreeLocalFileSystem.write(minhashSignatureShingled(rows, idCol, textCol, k, shingleN))
+        .parquet(s"$tmp/data")
+      StoredIndex.writeParams(spark, tmp, "k" -> k, "shingle_n" -> shingleN)
     }
   }
 
@@ -533,9 +534,9 @@ object Dedup {
       // params read fails fast BEFORE the meta goes pending
       SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
-      minhashSignatureShingled(batch, idCol, textCol,
-          p.getAs[Number]("k").intValue(), p.getAs[Number]("shingle_n").intValue())
-        .write.mode("append").parquet(s"$dir/data")
+      ForkFreeLocalFileSystem.write(minhashSignatureShingled(batch, idCol, textCol,
+          p.getAs[Number]("k").intValue(), p.getAs[Number]("shingle_n").intValue()))
+        .mode("append").parquet(s"$dir/data")
     }
 
   /** Screen a batch against the STORED minhash index: banded equi-join
@@ -611,8 +612,8 @@ object Dedup {
       // copy is deleted (a checkpoint-then-overwrite would hold the only
       // copy in non-durable executor blocks mid-rewrite)
       StoredIndex.swapRewrite(spark, s"$dir/data") { tmp =>
-        spark.read.parquet(s"$dir/data").repartition(nFiles)
-          .write.parquet(tmp)
+        ForkFreeLocalFileSystem.write(spark.read.parquet(s"$dir/data").repartition(nFiles))
+          .parquet(tmp)
       }
     }
   }
@@ -1202,14 +1203,15 @@ object Dedup {
     val nRoll = roll.count()
     require(nRoll > 0, s"reference has no $k-token windows " +
       "(empty/all-null ref, or every doc shorter than k tokens)")
-    roll.write.mode("overwrite").parquet(s"$dir/roll")
-    refDocs.select(explode(exactWindowHashes(textCol, k)).as("_h")).distinct()
-      .write.mode("overwrite").parquet(s"$dir/exact")
+    ForkFreeLocalFileSystem.write(roll).mode("overwrite").parquet(s"$dir/roll")
+    ForkFreeLocalFileSystem.write(
+      refDocs.select(explode(exactWindowHashes(textCol, k)).as("_h")).distinct())
+      .mode("overwrite").parquet(s"$dir/exact")
     val bloom = roll
       .agg(BloomBridge.bloomAgg(col("_d"), nRoll, fpp))
       .head().getAs[Array[Byte]](0)
-    spark.range(1).select(lit(bloom).as("bloom"), lit(k).as("k"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    ForkFreeLocalFileSystem.write(spark.range(1).select(lit(bloom).as("bloom"), lit(k).as("k")))
+      .mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** [[dupSpansRollingAgainst]] against the STORED artifact: the same
@@ -1420,9 +1422,9 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String, dir: String,
       kGram: Int = 3, w: Int = 4): Unit = {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
-      winnowFingerprints(rows, idCol, textCol, kGram, w).write.parquet(s"$tmp/data")
-      spark.range(1).select(lit(kGram).as("k_gram"), lit(w).as("w"))
-        .write.parquet(s"$tmp/params")
+      ForkFreeLocalFileSystem.write(winnowFingerprints(rows, idCol, textCol, kGram, w))
+        .parquet(s"$tmp/data")
+      StoredIndex.writeParams(spark, tmp, "k_gram" -> kGram, "w" -> w)
     }
   }
 
@@ -1435,9 +1437,9 @@ object Dedup {
       // params read fails fast BEFORE the meta goes pending
       SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
-      winnowFingerprints(batch, idCol, textCol,
-          p.getAs[Number]("k_gram").intValue(), p.getAs[Number]("w").intValue())
-        .write.mode("append").parquet(s"$dir/data")
+      ForkFreeLocalFileSystem.write(winnowFingerprints(batch, idCol, textCol,
+          p.getAs[Number]("k_gram").intValue(), p.getAs[Number]("w").intValue()))
+        .mode("append").parquet(s"$dir/data")
     }
 
   /** Screen a batch against the STORED winnow index: fingerprints whose

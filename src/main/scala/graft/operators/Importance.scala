@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
+import graft.sinks.ForkFreeLocalFileSystem
 
 /** DSIR-style importance weighting: score every document by how much
   * its hashed n-gram feature distribution looks like a TARGET corpus
@@ -97,10 +98,10 @@ object Importance {
     val spark = docs.sparkSession
     import spark.implicits._
     val w = bucketWeightsMicro(docs, textCol, targetPred, buckets)
-    w.zipWithIndex.map { case (m, b) => (b, m) }.toSeq.toDF("bucket", "w_micro")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    Seq(buckets).toDF("buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    val weights = w.zipWithIndex.map { case (m, b) => (b, m) }.toSeq.toDF("bucket", "w_micro")
+    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/data")
+    ForkFreeLocalFileSystem.write(Seq(buckets).toDF("buckets").coalesce(1))
+      .mode("overwrite").parquet(s"$dir/params")
   }
 
   /** Hashed-bigram LM cross-entropy micro-weights, flattened to a
@@ -197,10 +198,10 @@ object Importance {
     val spark = docs.sparkSession
     import spark.implicits._
     val w = bigramWeightsMicro(docs, textCol, targetPred, buckets)
-    w.zipWithIndex.map { case (m, i) => (i, m) }.toSeq.toDF("idx", "w_micro")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/data")
-    Seq(buckets).toDF("buckets")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+    val weights = w.zipWithIndex.map { case (m, i) => (i, m) }.toSeq.toDF("idx", "w_micro")
+    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/data")
+    ForkFreeLocalFileSystem.write(Seq(buckets).toDF("buckets").coalesce(1))
+      .mode("overwrite").parquet(s"$dir/params")
   }
 
   /** Score a batch OR streaming frame against a stored bigram LM. The

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sinks.ForkFreeLocalFileSystem
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with a typed metadata struct, plus partition-wise decode /
   * feature-extract stages.
@@ -288,17 +290,17 @@ object Multimodal {
     val bands = bandsFrame(feats, dim, bandSize).localCheckpoint()
     val nBands = bands.count()
     require(nBands > 0, "reference has no media payloads to index")
-    feats.write.mode("overwrite").parquet(s"$dir/feats")
-    bands.write.mode("overwrite").parquet(s"$dir/bands")
+    ForkFreeLocalFileSystem.write(feats).mode("overwrite").parquet(s"$dir/feats")
+    ForkFreeLocalFileSystem.write(bands).mode("overwrite").parquet(s"$dir/bands")
     val bloom = bands
       .agg(BloomBridge.bloomAgg(xxhash64(col("_band"), col("_key")), nBands, fpp))
       .head().getAs[Array[Byte]](0)
-    spark.range(1).select(lit(bloom).as("bloom"), lit(dim).as("dim"),
+    ForkFreeLocalFileSystem.write(spark.range(1).select(lit(bloom).as("bloom"), lit(dim).as("dim"),
         lit(bandSize).as("band_size"),
         // decoder identity is part of the artifact contract: probing
         // under a different codec would band-miss every payload
-        lit(MediaDecoders.active.id).as("decoder"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
+        lit(MediaDecoders.active.id).as("decoder")))
+      .mode("overwrite").parquet(s"$dir/meta")
   }
 
   /** Banded near-dup of a PROBE batch against the STORED media index —
@@ -576,13 +578,13 @@ object Multimodal {
     require(dim % bandSize == 0, s"bandSize $bandSize must divide dim $dim")
     val seg = validatedProbeSeg(probes, idCol, vecCol, dim, maxNew = 1024)
     StoredIndex.build(dir, seg, "probe_id") { (seg, tmp) =>
-      seg.write.parquet(s"$tmp/probes/seg=0")
-      spark.range(1).select(lit(dim).as("dim"),
+      ForkFreeLocalFileSystem.write(seg).parquet(s"$tmp/probes/seg=0")
+      ForkFreeLocalFileSystem.write(spark.range(1).select(lit(dim).as("dim"),
           lit(bandSize).as("band_size"),
           // registered vectors must come from the decoder that will
           // decode arrivals at route time — record which one
-          lit(MediaDecoders.active.id).as("decoder"))
-        .write.parquet(s"$tmp/geometry")
+          lit(MediaDecoders.active.id).as("decoder")))
+        .parquet(s"$tmp/geometry")
     }
   }
 
@@ -607,7 +609,7 @@ object Multimodal {
         .map(_.stripPrefix("seg=").toLong).max + 1
       (seg, nextSeg)
     } { case (seg, nextSeg) =>
-      seg.write.mode("errorifexists").parquet(s"$dir/probes/seg=$nextSeg")
+      ForkFreeLocalFileSystem.write(seg).mode("errorifexists").parquet(s"$dir/probes/seg=$nextSeg")
     }
 
   /** Route an arrival batch (or readStream — the plan is stateless)
@@ -667,13 +669,13 @@ object Multimodal {
           "delete the directory instead")
       val maxId = StoredIndex.storedMaxId(spark, dir)
       StoredIndex.swapRewrite(spark, dir) { tmp =>
-        survivors.write.parquet(s"$tmp/probes/seg=0")
-        spark.range(1).select(lit(dim).as("dim"),
+        ForkFreeLocalFileSystem.write(survivors).parquet(s"$tmp/probes/seg=0")
+        ForkFreeLocalFileSystem.write(spark.range(1).select(lit(dim).as("dim"),
             lit(bandSize).as("band_size"),
             // registryGeometry's decoder fence passed above, so the
             // active id IS the stored id — the stamp carries over
-            lit(MediaDecoders.active.id).as("decoder"))
-          .write.parquet(s"$tmp/geometry")
+            lit(MediaDecoders.active.id).as("decoder")))
+          .parquet(s"$tmp/geometry")
         // historical watermark, NOT the surviving max: append-only ids
         // must stay monotone across deregistration or an append of a
         // recycled id would diverge from the rebuild-equivalence rule

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Plans
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
 /** BM25 full-text retrieval — inline over a corpus frame, and against a
@@ -249,12 +250,12 @@ object Retrieval {
     // segments (seg=1+).
     val base = tokensFrame(df, idCol, textCol).localCheckpoint()
     StoredIndex.build(dir, base, "id") { (base, tmp) =>
-      postingsSegment(base).write.parquet(s"$tmp/postings/seg=0")
-      base.select(col("id"), size(col("_toks")).cast("long").as("dl"))
-        .write.parquet(s"$tmp/doclens")
-      base.agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(size(col("_toks"))).cast("long").as("sum_dl"))
-        .write.parquet(s"$tmp/stats")
+      ForkFreeLocalFileSystem.write(postingsSegment(base)).parquet(s"$tmp/postings/seg=0")
+      ForkFreeLocalFileSystem.write(base.select(col("id"), size(col("_toks")).cast("long").as("dl")))
+        .parquet(s"$tmp/doclens")
+      ForkFreeLocalFileSystem.write(base.agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(size(col("_toks"))).cast("long").as("sum_dl")))
+        .parquet(s"$tmp/stats")
     }
   }
 
@@ -282,16 +283,16 @@ object Retrieval {
         .map(_.stripPrefix("seg=").toLong)
       (segs.max + 1, SchemaReader.collectArtifact(spark, s"$dir/stats").head)
     } { case (nextSeg, old) =>
-      postingsSegment(base)
-        .write.mode("errorifexists").parquet(s"$dir/postings/seg=$nextSeg")
-      base.select(col("id"), size(col("_toks")).cast("long").as("dl"))
-        .write.mode("append").parquet(s"$dir/doclens")
+      ForkFreeLocalFileSystem.write(postingsSegment(base))
+        .mode("errorifexists").parquet(s"$dir/postings/seg=$nextSeg")
+      ForkFreeLocalFileSystem.write(base.select(col("id"), size(col("_toks")).cast("long").as("dl")))
+        .mode("append").parquet(s"$dir/doclens")
       val add = base.agg(count(lit(1)).cast("long"),
         sum(size(col("_toks"))).cast("long")).head
-      spark.range(1).select(
+      ForkFreeLocalFileSystem.write(spark.range(1).select(
           lit(old.getAs[Long]("n_docs") + add.getLong(0)).as("n_docs"),
-          lit(old.getAs[Long]("sum_dl") + add.getLong(1)).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$dir/stats")
+          lit(old.getAs[Long]("sum_dl") + add.getLong(1)).as("sum_dl")))
+        .mode("overwrite").parquet(s"$dir/stats")
     }
   }
 
@@ -318,7 +319,7 @@ object Retrieval {
       // postings are deleted (the previous checkpoint-then-delete held
       // the only copy in non-durable executor blocks mid-rewrite)
       StoredIndex.swapRewrite(spark, s"$dir/postings") { tmp =>
-        seg.write.parquet(s"$tmp/seg=0")
+        ForkFreeLocalFileSystem.write(seg).parquet(s"$tmp/seg=0")
       }
     }
 

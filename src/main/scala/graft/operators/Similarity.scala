@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.PortableRound
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.functions.{Plans, PortableRound}
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -375,43 +377,42 @@ object Similarity {
 
   /** Write (or, with mode `append`, add) cell-tagged `rows` under
     * `dir/data`, one `cell=` directory per cell: the one partitioned
-    * write of every IVF builder and append. Rows are clustered by cell
-    * first — without it every task opens a file per cell it sees
-    * (tasks × cells small files, the classic partitioned-write fanout). */
+    * write of every IVF builder and append. A small input is written by
+    * one task ([[Plans.sizedForWrite]]); a larger one is clustered by
+    * cell first — without it every task opens a file per cell it sees
+    * (tasks × cells small files, the classic partitioned-write fanout).
+    * Either way each cell gets one file per write. */
   private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
-    rows.repartition(col("cell"))
-      .write.mode(mode).partitionBy("cell").parquet(s"$dir/data")
+    ForkFreeLocalFileSystem.write(Plans.sizedForWrite(rows)(_.repartition(col("cell"))))
+      .mode(mode).partitionBy("cell").parquet(s"$dir/data")
 
-  /** Trained k-means centroids as `dir/centers` (cell int, center
-    * array<double>). */
-  private def writeTrainedCenters(spark: org.apache.spark.sql.SparkSession,
-      centers: Seq[org.apache.spark.ml.linalg.Vector], dir: String): Unit = {
-    import spark.implicits._
-    centers.zipWithIndex.map { case (c, i) => (i, c.toArray.toSeq) }
-      .toDF("cell", "center").write.parquet(s"$dir/centers")
-  }
+  /** Driver-held centroids as `dir/centers`, written on the driver: one
+    * (cell int, center) row per centroid, centroid i in cell i; `center`
+    * is the field the vectors were read as. */
+  private def writeCenters(spark: SparkSession, dir: String, center: StructField,
+      centers: Seq[Seq[Any]]): Unit =
+    SchemaReader.writeArtifact(spark, s"$dir/centers",
+      StructType(Seq(StructField("cell", IntegerType, nullable = false), center.copy(name = "center"))),
+      centers.zipWithIndex.map { case (c, i) => Row(i, c) })
 
-  /** A PQ model as `dir/codebook`: one (j, code, center) row per
-    * subspace centroid. */
-  private def writeCodebook(spark: org.apache.spark.sql.SparkSession,
-      model: PqModel, dir: String): Unit = {
-    import spark.implicits._
-    (for { j <- 0 until model.m; c <- 0 until model.k }
-      yield (j, c, model.centroids(j)(c).toSeq))
-      .toDF("j", "code", "center").write.parquet(s"$dir/codebook")
-  }
+  /** The `center` field of trained centroids, whose elements are never
+    * null. */
+  private def trainedCenter(element: DataType): StructField =
+    StructField("center", ArrayType(element, containsNull = false))
 
-  /** Write driver-held centroids as `dir/centers` (cell int, center
-    * array<double>), `center` typed as the corpus vectors cast. */
-  private def writeCenters(corpus: DataFrame, vecCol: String, dir: String,
-      centers: Seq[Seq[java.lang.Double]]): Unit = {
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val schema = StructType(Seq(StructField("cell", IntegerType, nullable = false),
-      corpus.select(asDouble(col(vecCol)).as("center")).schema.head))
-    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(centers.zipWithIndex
-      .map { case (c, i) => org.apache.spark.sql.Row(i, c) }: _*), schema)
-      .write.parquet(s"$dir/centers")
-  }
+  /** A PQ model as `dir/codebook`, written on the driver: one
+    * (j, code, center) row per subspace centroid. */
+  private def writeCodebook(spark: SparkSession, model: PqModel, dir: String): Unit =
+    SchemaReader.writeArtifact(spark, s"$dir/codebook",
+      StructType(Seq(StructField("j", IntegerType, nullable = false),
+        StructField("code", IntegerType, nullable = false), trainedCenter(DoubleType))),
+      for { j <- 0 until model.m; c <- 0 until model.k }
+        yield Row(j, c, model.centroids(j)(c).toSeq))
+
+  /** The `center` field of deterministic centroids: the corpus vectors
+    * as [[asDouble]] reads them. */
+  private def corpusCenter(corpus: DataFrame, vecCol: String): StructField =
+    corpus.select(asDouble(col(vecCol))).schema.head
 
   /** A stored index's cell-partitioned `dir/data` under its footer
     * schema plus the `cell` partition column: no inference job. */
@@ -433,23 +434,36 @@ object Similarity {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       writeCells(detAssign(rows, idCol, vecCol, centers)
         .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), tmp, "overwrite")
-      writeCenters(corpus, vecCol, tmp, centers)
+      writeCenters(corpus.sparkSession, tmp, corpusCenter(corpus, vecCol), centers)
     }
   }
 
-  /** Collect a probes frame ((query_id, _qvec, _cell) rows) ONCE and
-    * rebuild it as a small local DataFrame: the collected rows drive
-    * BOTH the isin partition filter and the broadcast join, so a
-    * non-deterministic queries frame (sample, unordered limit) cannot
-    * probe a cell missing from its own pruning list — and the probe
-    * lineage runs once, not twice. */
-  private def materializeProbes(spark: org.apache.spark.sql.SparkSession,
-      probes: DataFrame): (DataFrame, Seq[Int]) = {
+  /** The rows of the stored cells `probes` routes to, each paired with
+    * every probe of its cell: the stored columns plus every field of
+    * `probes` (query-sized (query_id, _cell, ...) rows). The probe rows
+    * are collected ONCE and drive both the `isin` partition filter (only
+    * probed `cell=` directories are read, `PartitionFilters` asserted in
+    * PlanContractsSpec) and a per-row routing kernel, a literal of each
+    * cell's probe rows exploded by the row's cell: a non-deterministic
+    * queries frame (sample, unordered limit) cannot probe a cell missing
+    * from its own pruning list, the probe lineage runs once, and no
+    * local frame is broadcast. */
+  private def probedRows(spark: SparkSession, dir: String, probes: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftbridge.ColumnBridge
     val schema = probes.schema
-    val rows = probes.collect()
-    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    val cellIdx = schema.fieldIndex("_cell")
-    (local, rows.map(_.getInt(cellIdx)).distinct.toSeq)
+    val cell = schema.fieldIndex("_cell")
+    val byCell = probes.collect().toSeq.groupBy(_.getInt(cell))
+    val slots = ArrayType(ArrayType(schema, containsNull = false), containsNull = false)
+    val table = (0 to byCell.keys.maxOption.getOrElse(-1)).map(byCell.getOrElse(_, Nil))
+    val routed = ColumnBridge.column(
+      Literal(CatalystTypeConverters.createToCatalystConverter(slots)(table), slots))
+    storedCells(spark, dir)
+      .filter(col("cell").isin(byCell.keys.toSeq: _*))
+      .withColumn("_p", explode(get(routed, col("cell"))))
+      .select(col("*"), col("_p.*"))
+      .drop("_p")
   }
 
   /** Probe a deterministic IVF index written by
@@ -466,16 +480,10 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // The probed cell set is tiny (≤ |queries| × nProbe); materializing
-    // it as literals is what turns the probe into directory-level
-    // partition pruning on the data scan — the stored-index payoff.
-    val (probes, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe))
     val hitRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
-    storedCells(spark, dir)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
+    probedRows(spark, dir,
+      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe))
       .select(col("query_id"), col(idCol),
         PortableRound.round4(cosine(col("v"), col("_qvec"))).as("cos_sim"))
       .withColumn("_r", row_number().over(hitRank))
@@ -496,7 +504,8 @@ object Similarity {
       quantizerIter, trainFraction)
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       writeCells(model.transform(featured(rows, vecCol)).drop("_feat"), tmp, "overwrite")
-      writeTrainedCenters(corpus.sparkSession, model.clusterCenters.toSeq, tmp)
+      writeCenters(corpus.sparkSession, tmp, trainedCenter(DoubleType),
+        model.clusterCenters.toSeq.map(_.toArray.toSeq))
     }
   }
 
@@ -540,13 +549,10 @@ object Similarity {
     // near-brute-force in a batch and make results depend on what else
     // was in the batch)
     val centers = storedCenters(spark, dir)
-    val (probes, probedCells) = materializeProbes(spark,
-      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers))))
     val hitRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
-    storedCells(spark, dir)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
+    probedRows(spark, dir,
+      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers))))
       .select(col("query_id"), col(idCol),
         PortableRound.round4(cosine(col(vecCol), col("_qvec"))).as("cos_sim"))
       .withColumn("_r", row_number().over(hitRank))
@@ -883,7 +889,7 @@ object Similarity {
         .select(col("_id").as(idCol), col("_v").as("_vec"), col("_cell").as("cell"))
       writeCells(pqEncode(assigned, "_vec", model, rounded = true)
         .select(col(idCol), col("codes"), col("cell")), tmp, "overwrite")
-      writeCenters(corpus, vecCol, tmp, centers)
+      writeCenters(corpus.sparkSession, tmp, corpusCenter(corpus, vecCol), centers)
       writeCodebook(corpus.sparkSession, model, tmp)
     }
   }
@@ -961,7 +967,8 @@ object Similarity {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       writeCells(pqEncode(coarse.transform(featured(rows, vecCol)).drop("_feat"), vecCol, pq)
         .select(col(idCol), col("codes"), col("cell")), tmp, "overwrite")
-      writeTrainedCenters(corpus.sparkSession, coarse.clusterCenters.toSeq, tmp)
+      writeCenters(corpus.sparkSession, tmp, trainedCenter(DoubleType),
+        coarse.clusterCenters.toSeq.map(_.toArray.toSeq))
       writeCodebook(corpus.sparkSession, pq, tmp)
     }
   }
@@ -979,15 +986,12 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val model = loadPqCodebook(spark, dir)
     val centers = storedCenters(spark, dir)
-    val (probesLocal, probedCells) = materializeProbes(spark,
-      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers))))
-    val tables = probesLocal.select(col("query_id"), col("_cell"),
-      adcTable(col("_qvec"), model, rounded = false).as("_tab"))
     val rank = Window.partitionBy(col("query_id"))
       .orderBy(col("d2_approx").asc, col(idCol).asc)
-    storedCells(spark, dir)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(tables), col("cell") === col("_cell"))
+    probedRows(spark, dir,
+      probeCells(queries, qIdCol, qVecCol, nProbe)(v => array_sort(l2Cells(v, centers)))
+        .select(col("query_id"), col("_cell"),
+          adcTable(col("_qvec"), model, rounded = false).as("_tab")))
       .select(col("query_id"), col(idCol),
         adcScore("codes", model.m, model.k, rounded = false).as("d2_approx"))
       .withColumn("_r", row_number().over(rank))
@@ -1047,15 +1051,12 @@ object Similarity {
       topK: Int, nProbe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val model = loadPqCodebook(spark, dir)
-    val (probesLocal, probedCells) = materializeProbes(spark,
-      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe))
-    val tables = probesLocal.select(col("query_id"), col("_cell"),
-      adcTable(col("_qvec"), model, rounded = true).as("_tab"))
     val rank = Window.partitionBy(col("query_id"))
       .orderBy(col("d2_approx").asc, col(idCol).asc)
-    storedCells(spark, dir)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(tables), col("cell") === col("_cell"))
+    probedRows(spark, dir,
+      detProbes(queries, qIdCol, qVecCol, storedCenters(spark, dir), nProbe)
+        .select(col("query_id"), col("_cell"),
+          adcTable(col("_qvec"), model, rounded = true).as("_tab")))
       .select(col("query_id"), col(idCol),
         adcScore("codes", model.m, model.k, rounded = true).as("d2_approx"))
       .withColumn("_r", row_number().over(rank))
@@ -1109,7 +1110,7 @@ object Similarity {
         // re-run the compaction. The flat signature/postings compactions
         // use StoredIndex.swapRewrite, whose failure mode is loud
         // instead (complete copy always at path or path_tmp).
-        merged.write.mode("overwrite")
+        ForkFreeLocalFileSystem.write(merged).mode("overwrite")
           .option("partitionOverwriteMode", "dynamic") // replace ONLY crowded cells
           .partitionBy("cell").parquet(s"$dir/data")
       }
@@ -1278,8 +1279,7 @@ object Similarity {
     * per-query rank window. The result (nQueries·k rows) is collected
     * and rebuilt as a local frame — bounded by the query batch, and it
     * lets the corpus cache be released deterministically instead of
-    * leaking past the lazy plan (the [[materializeProbes]]
-    * discipline). */
+    * leaking past the lazy plan. */
   def ivfTopKMicroExact(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nCentroids: Int, iters: Int, nProbe: Int): DataFrame = {
@@ -1307,8 +1307,7 @@ object Similarity {
   /** Shared assign→route→rank core of the trained-IVF probes: assign
     * the quantized corpus under `centers`, route each query to its
     * `nProbe` nearest cells, exact-d2 top-k within the probed cells,
-    * result rebuilt as a local frame (bounded: nQueries × k — the
-    * [[materializeProbes]] discipline). */
+    * result rebuilt as a local frame (bounded: nQueries × k). */
   private def probeTrainedMicro(vq: DataFrame, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, nProbe: Int, centers: Seq[(Int, Array[Long])]): DataFrame = {
@@ -1346,16 +1345,13 @@ object Similarity {
     * the other IVF writers. */
   def writeIvfIndexMicroExact(corpus: DataFrame, idCol: String, vecCol: String,
       dir: String, nCentroids: Int, iters: Int): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     // trained before the build: the init's ordered limit over the
     // observed frame could observe part of the input
     val centers = kmeansMicroExact(corpus, idCol, vecCol, nCentroids, iters)
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       writeCells(kmAssign(kmQuant(rows, idCol, vecCol), centers)
         .select(col("_id").as(idCol), col("_v").as("v"), col("_cell").as("cell")), tmp, "overwrite")
-      centers.map { case (cell, c) => (cell, c.toSeq) }
-        .toDF("cell", "center").write.parquet(s"$tmp/centers")
+      writeCenters(corpus.sparkSession, tmp, trainedCenter(LongType), centers.map(_._2.toSeq))
     }
   }
 
@@ -1412,17 +1408,14 @@ object Similarity {
     val pc = transform(kmCentersLit(centers),
       ct => struct(d2Micro(col("_qv"), ct.getField("c")).as("_d2"),
         ct.getField("cell").as("_cell")))
-    val (probes, probedCells) = materializeProbes(spark,
+    val rank = Window.partitionBy(col("query_id"))
+      .orderBy(col("d2").asc, col(idCol).asc)
+    probedRows(spark, dir,
       kmQuant(queries, qIdCol, qVecCol)
         .select(col("_id").as("query_id"), col("_v").as("_qv"))
         .select(col("query_id"), col("_qv"),
           explode(slice(array_sort(pc), 1, nProbe)).as("_p"))
         .select(col("query_id"), col("_qv"), col("_p._cell").as("_cell")))
-    val rank = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2").asc, col(idCol).asc)
-    storedCells(spark, dir)
-      .filter(col("cell").isin(probedCells: _*))
-      .join(broadcast(probes), col("cell") === col("_cell"))
       .select(col("query_id"), col(idCol),
         d2Micro(col("v"), col("_qv")).as("d2"))
       .withColumn("_r", row_number().over(rank))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
 /** Mergeable sketch statistics — the 100 TB pattern for cardinality and
@@ -196,9 +197,9 @@ object Sketches {
       groupCol: String, textCol: String, shingleN: Int, k: Int,
       dir: String): Unit =
     StoredIndex.build(dir, df, idCol) { (rows, tmp) =>
-      kmvSketch(rows, groupCol, textCol, shingleN, k).write.parquet(s"$tmp/data")
-      spark.range(1).select(lit(shingleN).as("shingle_n"), lit(k).as("k"))
-        .write.parquet(s"$tmp/params")
+      ForkFreeLocalFileSystem.write(kmvSketch(rows, groupCol, textCol, shingleN, k))
+        .parquet(s"$tmp/data")
+      StoredIndex.writeParams(spark, tmp, "shingle_n" -> shingleN, "k" -> k)
     }
 
   /** Fold one new batch into the stored sketch: sketch the batch with
@@ -209,9 +210,9 @@ object Sketches {
       // params read fails fast BEFORE the meta goes pending
       SchemaReader.collectArtifact(spark, s"$dir/params").head
     } { p =>
-      kmvSketch(batch, groupCol, textCol,
-          p.getAs[Number]("shingle_n").intValue(), p.getAs[Number]("k").intValue())
-        .write.mode("append").parquet(s"$dir/data")
+      ForkFreeLocalFileSystem.write(kmvSketch(batch, groupCol, textCol,
+          p.getAs[Number]("shingle_n").intValue(), p.getAs[Number]("k").intValue()))
+        .mode("append").parquet(s"$dir/data")
     }
 
   /** Current estimate per group: fold all stored segments with

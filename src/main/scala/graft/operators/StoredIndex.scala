@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
 /** Shared plumbing for the engine's persisted index artifacts (IVF /
@@ -18,17 +20,40 @@ import graft.sources.SchemaReader
   * build that fails at any step leaves the previous index whole. */
 object StoredIndex {
 
+  private val MetaSchema = StructType(Seq(
+    StructField("max_id", LongType, nullable = false),
+    StructField("pending", BooleanType, nullable = false)))
+
   /** Record the indexed corpus's max id as a one-row parquet under
     * `dir/meta` — the cheap stored handle the append-only id discipline
     * is validated against (reading it back is a footer-sized pull, not
-    * a corpus scan). `pending = true` marks an append in flight
-    * ([[guardedAppend]]): a meta left pending makes the NEXT append
-    * fail loudly instead of silently double-ingesting against a stale
-    * watermark. */
+    * a corpus scan). Written on the driver
+    * ([[graft.sources.SchemaReader.writeArtifact]]: hidden file, old
+    * part removed, rename), so a crash leaves the old row or no row,
+    * never two, and a meta with no row fails the next reader.
+    * `pending = true` marks an append in flight ([[guardedAppend]]): a
+    * meta left pending makes the NEXT append fail loudly instead of
+    * silently double-ingesting against a stale watermark. */
   def writeMaxIdMeta(spark: SparkSession, dir: String, maxId: Long,
       pending: Boolean = false): Unit =
-    spark.range(1).select(lit(maxId).as("max_id"), lit(pending).as("pending"))
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    SchemaReader.writeArtifact(spark, s"$dir/meta", MetaSchema, Seq(Row(maxId, pending)))
+
+  /** An index's geometry as `dir/params`: one row of named non-null
+    * ints, written on the driver like the meta. */
+  def writeParams(spark: SparkSession, dir: String, params: (String, Int)*): Unit =
+    SchemaReader.writeArtifact(spark, s"$dir/params",
+      StructType(params.map { case (name, _) => StructField(name, IntegerType, nullable = false) }),
+      Seq(Row(params.map(_._2): _*)))
+
+  /** The one row of `dir/meta`; a missing meta fails naming its path,
+    * as does one with no row or several (a meta write that crashed). */
+  private def meta(spark: SparkSession, dir: String): Row = {
+    val rows = SchemaReader.collectArtifact(spark, s"$dir/meta")
+    require(rows.size == 1, s"$dir/meta holds ${rows.size} rows, expected 1: a meta " +
+      "write did not complete — verify the watermark against the data, then " +
+      "rewrite the meta with writeMaxIdMeta")
+    rows.head
+  }
 
   /** Build (or rebuild) the index at `dir` from `frame`: under the
     * single-writer lock, `write` gets `frame` wrapped in one
@@ -57,11 +82,13 @@ object StoredIndex {
     }
   }
 
+  /** Whether `dir/meta` marks an append in flight; an index without a
+    * meta has none, a meta without a row fails ([[meta]]). */
   private def metaPending(spark: SparkSession, dir: String): Boolean =
-    scala.util.Try {
-      val meta = SchemaReader.collectArtifact(spark, s"$dir/meta").head
-      meta.schema.fieldNames.contains("pending") && meta.getAs[Boolean]("pending")
-    }.getOrElse(false)
+    try {
+      val m = meta(spark, dir)
+      m.schema.fieldNames.contains("pending") && m.getAs[Boolean]("pending")
+    } catch { case _: java.io.FileNotFoundException => false }
 
   /** Pending-meta crash fence for COMPACTIONS (round-14 advice): a
     * compaction folds whatever part-files exist into a fresh layout and
@@ -76,7 +103,7 @@ object StoredIndex {
     * corpus is the documented repair path for a stranded pending flag. */
   def requireNotPending(spark: SparkSession, dir: String): Unit =
     require(!metaPending(spark, dir),
-      s"a previous append to $dir did not complete (meta is marked " +
+      s"a previous append to $dir did not complete ($dir/meta is marked " +
         "pending, data files may be partial): verify whether the " +
         "pending batch's rows landed in data, clear the marker with " +
         "writeMaxIdMeta at the verified watermark, then re-run the " +
@@ -160,7 +187,7 @@ object StoredIndex {
   def withAppendLock[A](spark: SparkSession, dir: String)(body: => A): A = {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val lock = new org.apache.hadoop.fs.Path(dir, "_append_lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = ForkFreeLocalFileSystem.get(spark, dir)
     recoverSwap(fs, dirPath)
     def acquire(retryStale: Boolean): org.apache.hadoop.fs.FSDataOutputStream =
       try fs.create(lock, false)
@@ -252,7 +279,7 @@ object StoredIndex {
   /** Max id already in the stored index, from `dir/meta` (a driver
     * read, no Spark job). A missing meta fails, naming `dir/meta`. */
   def storedMaxId(spark: SparkSession, dir: String): Long =
-    SchemaReader.collectArtifact(spark, s"$dir/meta").head.getAs[Long]("max_id")
+    meta(spark, dir).getAs[Long]("max_id")
 
   /** Finish a crashed swap of `p` (shared by [[swapRewrite]] retries
     * and [[withAppendLock]]): if the live name is missing, a prior
@@ -311,7 +338,7 @@ object StoredIndex {
     val p = new org.apache.hadoop.fs.Path(path)
     val tmp = new org.apache.hadoop.fs.Path(path + "_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "_old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = ForkFreeLocalFileSystem.get(spark, path)
     recoverSwap(fs, p)
     fs.delete(tmp, true) // an incomplete tmp from a crash DURING write
     fs.delete(old, true) // a rollback the prior swap never cleaned
@@ -338,7 +365,7 @@ object StoredIndex {
   def validateAppendBatch(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String): Option[Long] = {
     require(!metaPending(spark, dir),
-      s"a previous append to $dir did not complete (meta is marked " +
+      s"a previous append to $dir did not complete ($dir/meta is marked " +
         "pending): verify whether its rows landed in data, then clear " +
         "the marker with writeMaxIdMeta at the verified watermark")
     val r = batch.agg(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{PortableHash, PortableRound}
+import graft.sinks.ForkFreeLocalFileSystem
 
 /** Text-analysis operators for training-data pipelines: token counting,
   * quality scoring, n-gram-heuristic language ID, and document
@@ -697,12 +698,12 @@ object TextAnalysis {
   def writeVocabArtifact(df: DataFrame, textCol: String, topN: Int,
       dir: String): Unit = {
     require(topN > 0 && topN <= 4096, "topN must be in [1, 4096]")
-    df.filter(col(textCol).isNotNull)
+    ForkFreeLocalFileSystem.write(df.filter(col(textCol).isNotNull)
       .select(explode(tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
-      .limit(topN)
-      .write.mode("overwrite").parquet(s"$dir/vocab")
+      .limit(topN))
+      .mode("overwrite").parquet(s"$dir/vocab")
   }
 
   /** Out-of-vocabulary rate per document against the STORED vocabulary:

@@ -29,7 +29,7 @@ object Artifacts {
   def prepare(spark: SparkSession, dir: String)(build: => Unit): Unit = {
     val p = new Path(dir)
     val marker = new Path(dir + "_COMPLETE")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = graft.sinks.ForkFreeLocalFileSystem.get(spark, dir)
     if (java.lang.Boolean.getBoolean("graft.bench.reuseArtifacts") &&
         fs.exists(marker) && fs.exists(p)) return
     fs.delete(p, true)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{coalesce, lit}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
+import graft.functions.Plans
 import graft.operators.StoredIndex
 import graft.sources.SchemaReader
 
@@ -104,17 +105,19 @@ object ArchiveJob {
     val footers = dataFiles.flatMap(SchemaReader.footers(spark, _))
     val expected = footers.map(_.rows).sum
     archive(spark.read.schema(SchemaReader.unionSchema(footers)).parquet(dataFiles: _*), expected)
-    val fs = new Path(liveDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = ForkFreeLocalFileSystem.get(spark, liveDir)
     snapshot.filterNot(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
     expected
   }
 
-  /** Returns (archived path, row count). */
+  /** Returns (archived path, row count). An archive that fits one
+    * fan-out partition is written as one file ([[Plans.sizedForWrite]]). */
   def run(spark: SparkSession, liveDir: String, historicalDir: String,
       prefix: String, date: LocalDate = LocalDate.now()): (String, Long) = {
     val dest = s"$historicalDir/$prefix-${date.format(stampFmt)}.parquet"
     (dest, rotate(spark, liveDir) { (df, expected) =>
-      df.write.mode("overwrite").parquet(dest)
+      ForkFreeLocalFileSystem.write(Plans.sizedForWrite(df)(identity))
+        .mode("overwrite").parquet(dest)
       // verify before destroying the source (hardening vs merge_stock.py:93)
       val written = footerRows(spark, dest)
       require(written == expected, s"archive verify failed: wrote $written, expected $expected")
@@ -162,8 +165,8 @@ object ArchiveJob {
         else spark.read.parquet(historicalDir).filter(affectedPred).count()
       }
       val prior = affectedCount()
-      keyed.sortWithinPartitions(sortCol)
-        .write.mode("append")
+      ForkFreeLocalFileSystem.write(keyed.sortWithinPartitions(sortCol))
+        .mode("append")
         .partitionBy("date_key")
         .parquet(historicalDir)
       val after = affectedCount()
@@ -189,7 +192,8 @@ object ArchiveJob {
     StoredIndex.swapRewrite(spark, dir) { tmp =>
       val df = spark.read.parquet(dir)
       val total = df.count()
-      df.filter(!coalesce(predicate, lit(false))).write.mode("overwrite").parquet(tmp)
+      ForkFreeLocalFileSystem.write(df.filter(!coalesce(predicate, lit(false))))
+        .mode("overwrite").parquet(tmp)
       val kept = footerRows(spark, tmp)
       val matched = df.filter(coalesce(predicate, lit(false))).count()
       require(kept + matched == total,
@@ -229,7 +233,7 @@ object ArchiveJob {
       // repartition(n) (round-robin) balances rows across exactly n files;
       // coalesce(n) would skip the shuffle but inherits upstream skew and
       // can't split large partitions.
-      df.repartition(nFiles).write.mode("overwrite").parquet(tmp)
+      ForkFreeLocalFileSystem.write(df.repartition(nFiles)).mode("overwrite").parquet(tmp)
       val written = footerRows(spark, tmp)
       require(written == rows, s"compact verify failed: wrote $written, expected $rows")
       (parquetFiles(dir), rows)

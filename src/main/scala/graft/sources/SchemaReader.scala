@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -12,6 +14,7 @@ import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
+import graft.sinks.ForkFreeLocalFileSystem
 import graft.streaming.StreamParse
 
 /** Schema-coerced, drift-tolerant parquet reader (capabilities S1–S4,
@@ -138,6 +141,31 @@ object SchemaReader {
     files.flatMap(f => read(PartitionedFile(InternalRow.empty,
       SparkPath.fromPath(new Path(f.path)), 0L, f.bytes))
       .map(toRow(_).asInstanceOf[Row]).toList) // the reader reuses its row
+  }
+
+  /** Write `rows` as the single part file of the flat part `dir` (a
+    * model, a one-row meta), encoded on the driver by Spark's own
+    * parquet writer: no Spark job, and the footer a Spark write of
+    * `schema` carries, nullability included. The file is written under a
+    * hidden name, every other entry of `dir` is then removed (an earlier
+    * part, `_SUCCESS`, a crashed write's hidden file), and the file is
+    * renamed into place: at every instant `dir` shows the old rows, no
+    * rows, or the new rows, never two generations at once. */
+  private[graft] def writeArtifact(spark: SparkSession, dir: String, schema: StructType,
+      rows: Seq[Row]): Unit = {
+    val job = Job.getInstance(ForkFreeLocalFileSystem.hadoopConf(spark))
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val parent = new Path(dir)
+    val name = s"part-00000-${java.util.UUID.randomUUID}-c000${factory.getFileExtension(ctx)}"
+    val hidden = new Path(parent, s".$name")
+    val out = factory.newInstance(hidden.toString, schema, ctx)
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => out.write(toInternal(r).asInstanceOf[InternalRow])) finally out.close()
+    val fs = parent.getFileSystem(job.getConfiguration)
+    fs.listStatus(parent).map(_.getPath).filter(_.getName != hidden.getName)
+      .foreach(fs.delete(_, true))
+    require(fs.rename(hidden, new Path(parent, name)), s"$dir: renaming $hidden into place failed")
   }
 
   /** Capability S3 (`batch_stock.py:18-36`): parquet fragments (files or

@@ -1,15 +1,14 @@
 package graft.streaming
 
 import java.net.URI
-import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
+
+import graft.sinks.ForkFreeLocalFileSystem
 
 /** Streaming checkpoint/state-store file manager that starts no OS
   * process on a local (`file:`) checkpoint dir.
@@ -19,10 +18,11 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * `FileContextBasedCheckpointFileManager` renames through
   * `AbstractFileSystem.renameInternal`, whose symlink checks run
   * `readlink` twice or more per file. On `file:` paths this manager is
-  * Spark's `FileSystemBasedCheckpointFileManager` over Hadoop's own
-  * `LocalFileSystem` (same `.crc` sidecars, temp-file-then-rename,
-  * `FileAlreadyExistsException` on a create without overwrite) whose
-  * raw filesystem sets the same mode bits in-process; renames go
+  * Spark's `FileSystemBasedCheckpointFileManager` over
+  * [[graft.sinks.ForkFreeLocalFileSystem]] (Hadoop's own `LocalFileSystem`:
+  * same `.crc` sidecars, temp-file-then-rename,
+  * `FileAlreadyExistsException` on a create without overwrite; the
+  * same mode bits, set in-process); renames go
   * through the `FileSystem` API, which never resolves links. Like
   * Spark's default it does not read `fs.file.impl` for `file:` paths.
   * Every other path (HDFS, object stores) gets exactly the manager
@@ -67,20 +67,10 @@ object LocalCheckpointFileManager {
   private[streaming] final class OnLocalFs(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {
     override protected val fs: FileSystem = {
-      val local = new LocalFileSystem(new InProcessChmodFs)
+      val local = new ForkFreeLocalFileSystem
       local.setConf(conf)
       local.initialize(URI.create("file:///"), conf)
       local
     }
-  }
-
-  /** `RawLocalFileSystem` setting mode bits with `Files.setPosixFilePermissions`
-    * instead of a `chmod` process (sticky bits, which that API cannot
-    * express, keep Hadoop's path). */
-  private final class InProcessChmodFs extends RawLocalFileSystem {
-    override def setPermission(p: Path, perm: FsPermission): Unit =
-      if (perm.getStickyBit) super.setPermission(p, perm)
-      else Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
-        perm.getUserAction.SYMBOL + perm.getGroupAction.SYMBOL + perm.getOtherAction.SYMBOL))
   }
 }

@@ -57,6 +57,31 @@ abstract class SparkSpec extends AnyFunSuite with Matchers {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** OS processes started while `body` runs, each as its command and
+    * the classes on its stack, from a JFR `jdk.ProcessStart` recording.
+    * Without libhadoop, Hadoop's local filesystem forks `chmod`/`readlink`
+    * through `org.apache.hadoop.util.Shell`. */
+  def processStartsDuring[T](body: => T): (T, Seq[(String, Seq[String])]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val dump = java.nio.file.Paths.get(tmpDir("spawn_jfr"), "run.jfr")
+    rec.start()
+    val out = try body finally {
+      rec.stop()
+      rec.dump(dump)
+      rec.close()
+    }
+    (out, jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(e => (e.getString("command"), Option(e.getStackTrace).toSeq
+        .flatMap(_.getFrames.asScala.map(_.getMethod.getType.getName)))))
+  }
+
+  /** The commands of `starts` forked by Hadoop's `Shell`. */
+  def hadoopShellForks(starts: Seq[(String, Seq[String])]): Seq[String] =
+    starts.collect { case (cmd, frames) if frames.contains("org.apache.hadoop.util.Shell") => cmd }
+
   /** Run `body` with session conf `key` set to `value` (`None`: unset),
     * restoring the session's previous value afterwards. */
   def withSessionConf[T](key: String, value: Option[String])(body: => T): T = {

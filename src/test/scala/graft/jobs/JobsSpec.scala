@@ -354,34 +354,17 @@ class JobsSpec extends SparkSpec {
   }
 
   test("the combined stream starts no shell process for checkpoints or state") {
-    // without libhadoop, Hadoop's local filesystem forks chmod/readlink
-    // through org.apache.hadoop.util.Shell; a JFR jdk.ProcessStart
-    // recording over ~20 micro-batches catches any such fork
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
+    // a recording over ~20 micro-batches catches any fork of Hadoop's Shell
     implicit val ctx: SQLContext = spark.sqlContext
     InMemoryKvStore.clear()
     val s = new CombinedStream
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    val dump = Paths.get(tmpDir("spawn_jfr"), "run.jfr")
-    rec.start()
-    try withCheckpointManager(None) {
+    val (_, starts) = processStartsDuring(withCheckpointManager(None) {
       val q = s.start(tmpDir("spawn_chk"))
       for (m <- 0 until 40 by 2) { s.addPair(11, m); q.processAllAvailable() }
       q.stop()
       q.recentProgress.count(_.numInputRows > 0) shouldBe 20
-    } finally {
-      rec.stop()
-      rec.dump(dump)
-      rec.close()
-    }
+    })
     InMemoryKvStore.data.keySet.count(_.startsWith("2024-03-05_11-")) shouldBe 20
-    val shellForks = RecordingFile.readAllEvents(dump).asScala
-      .filter(_.getEventType.getName == "jdk.ProcessStart")
-      .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
-        _.getMethod.getType.getName == "org.apache.hadoop.util.Shell")))
-      .map(_.getString("command"))
-    shellForks shouldBe empty
+    hadoopShellForks(starts) shouldBe empty
   }
 }

@@ -123,6 +123,8 @@ class IvfRoutingSpec extends SparkSpec {
     val (probe, jobs) = jobsDuring(Similarity.probeIvfIndexDeterministic(spark, dir,
       "vec_id", queries, "vec_id", "embedding", k = 5, nProbe = 2))
     jobs shouldBe 1
+    // running it: the rank window's shuffle and the result, no broadcast
+    jobsDuring(probe.collect())._2 shouldBe 2
     probe.count() shouldBe 15L
     val (pqProbe, pqJobs) = jobsDuring(Similarity.probeIvfPqIndexDeterministic(spark, pqDir,
       "vec_id", queries, "vec_id", "embedding", topK = 5, nProbe = 2))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.SchemaReader
 
 /** Pins the round-10 durability contracts on the stored-index
   * machinery: the single-writer append lock and swapRewrite's
@@ -187,5 +188,47 @@ class StoredIndexDurabilitySpec extends SparkSpec {
       write(tmp, "replacement")
     }
     spark.read.parquet(dir).select("v").head.getString(0) shouldBe "replacement"
+  }
+
+  test("a meta write that crashed between its steps fails the next append, naming dir/meta") {
+    val dir = tmpDir("meta_crash")
+    Dedup.writeSimhashIndex(spark, Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    def append(id: Long): Unit = Dedup.appendToSimhashIndex(spark, dir,
+      Seq((id, "g h i")).toDF("doc_id", "text"), "doc_id", "text")
+    val meta = new java.io.File(s"$dir/meta")
+    def parts(hidden: Boolean) =
+      meta.list().filter(n => n.endsWith(".parquet") && n.startsWith(".") == hidden).toSeq
+    parts(hidden = false) should have size 1 // one part, no _SUCCESS
+    meta.list().toSeq should not contain "_SUCCESS"
+
+    // an append's pending step landed; its clearing write crashed after
+    // writing the clean meta under its hidden name
+    StoredIndex.writeMaxIdMeta(spark, dir, 3L, pending = true)
+    val clean = tmpDir("meta_clean")
+    StoredIndex.writeMaxIdMeta(spark, clean, 3L)
+    val cleanPart = new java.io.File(s"$clean/meta").list().filter(_.endsWith(".parquet")).head
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$clean/meta/$cleanPart"),
+      java.nio.file.Paths.get(s"$dir/meta/.$cleanPart"))
+    // readers see the old part only: the pending flag is not lost
+    SchemaReader.collectArtifact(spark, s"$dir/meta").map(_.getAs[Boolean]("pending")) shouldBe
+      Seq(true)
+    intercept[IllegalArgumentException](append(4L)).getMessage should include(s"$dir/meta")
+
+    // ... or crashed after removing the old part, before the rename
+    parts(hidden = false).foreach(n => fs(dir).delete(new org.apache.hadoop.fs.Path(s"$dir/meta/$n"), false))
+    parts(hidden = true) should have size 1
+    val e = intercept[IllegalArgumentException](append(4L))
+    e.getMessage should include(s"$dir/meta")
+    e.getMessage should include("0 rows")
+    intercept[IllegalArgumentException](StoredIndex.storedMaxId(spark, dir))
+      .getMessage should include(s"$dir/meta")
+
+    // the repair write replaces whatever a crash left behind
+    StoredIndex.writeMaxIdMeta(spark, dir, 2L)
+    parts(hidden = true) shouldBe empty
+    parts(hidden = false) should have size 1
+    append(4L)
+    StoredIndex.storedMaxId(spark, dir) shouldBe 4L
   }
 }
