@@ -41,7 +41,4 @@ object TimeOps {
 
   /** Unix seconds for range-window frames (`ML_stock.py:159`). */
   def unixSeconds(ts: Column): Column = unix_timestamp(ts)
-
-  /** Archive-filename date stamp (`merge_stock.py:83`). */
-  def archiveStamp(): Column = date_format(current_date(), "MM-dd-yyyy")
 }

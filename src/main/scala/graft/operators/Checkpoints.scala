@@ -34,12 +34,15 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * false) — otherwise until the checkpoint dir is cleaned. */
 object Checkpoints {
 
-  // the raw conf value last passed to setCheckpointDir: SparkContext
-  // stores a fs-QUALIFIED, UUID-suffixed path, so comparing
-  // getCheckpointDir against the raw string never matches — without
-  // this memo every stable() call would re-invoke setCheckpointDir,
-  // paying a mkdirs and scattering state across one UUID dir per round
-  @volatile private var pointedAt: String = null
+  // the conf value last passed to setCheckpointDir and the dir the
+  // context reported right after: SparkContext stores a fs-QUALIFIED,
+  // UUID-suffixed path, so comparing getCheckpointDir against the raw
+  // string never matches — without this memo every stable() call would
+  // re-invoke setCheckpointDir, paying a mkdirs and scattering state
+  // across one UUID dir per round. A context whose dir differs from the
+  // memo (a new context, or a direct setCheckpointDir elsewhere) is
+  // re-pointed, so reliable fences land under the conf's dir.
+  @volatile private var pointedAt: (String, Option[String]) = (null, None)
 
   /** Truncate lineage: reliable checkpoint when
     * `spark.graft.checkpointDir` is set, local otherwise. Eager in
@@ -48,12 +51,9 @@ object Checkpoints {
     df.sparkSession.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>
         val sc = df.sparkSession.sparkContext
-        // the memo is JVM-global but the checkpoint dir lives on the
-        // CONTEXT: after a context restart getCheckpointDir is empty
-        // again even though pointedAt still matches, and skipping the
-        // re-point would make df.checkpoint() throw
-        if (pointedAt != dir || sc.getCheckpointDir.isEmpty) {
-          sc.setCheckpointDir(dir); pointedAt = dir
+        if (pointedAt != ((dir, sc.getCheckpointDir))) {
+          sc.setCheckpointDir(dir)
+          pointedAt = (dir, sc.getCheckpointDir)
         }
         df.checkpoint()
       case _ => df.localCheckpoint()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
-import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** Model-based quality classification — the GPT-3 / DCLM / FineWeb-Edu
   * move: train a cheap linear text classifier to distinguish a
@@ -102,24 +102,22 @@ object Classifier {
     * (bucket, w_micro — B rows) + `meta/` (bias_micro, n_buckets). */
   def writeModelArtifact(spark: SparkSession, dir: String,
       wMicro: Array[Long], biasMicro: Long): Unit = {
-    import spark.implicits._
-    val weights = wMicro.zipWithIndex.map { case (w, b) => (b, w) }.toSeq
-      .toDF("bucket", "w_micro")
-    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/weights")
-    ForkFreeLocalFileSystem.write(Seq((biasMicro, wMicro.length)).toDF("bias_micro", "n_buckets")
-      .coalesce(1)).mode("overwrite").parquet(s"$dir/meta")
+    SchemaReader.writeRows(spark, s"$dir/weights",
+      wMicro.toSeq.zipWithIndex.map { case (w, b) => Seq("bucket" -> b, "w_micro" -> w) }: _*)
+    SchemaReader.writeRows(spark, s"$dir/meta",
+      Seq("bias_micro" -> biasMicro, "n_buckets" -> wMicro.length))
   }
 
   /** Score against the STORED model: the artifact (B+1 rows, bounded)
-    * is collected at plan-build time and folded into the row
+    * is read on the driver at plan-build time and folded into the row
     * expression — scoring stays map-only and stateless on streams, and
     * the selection policy cannot drift as the corpus grows. */
   def scoreWithStoredModel(spark: SparkSession, dir: String, docs: DataFrame,
       idCol: String, textCol: String): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
+    val meta = SchemaReader.collectArtifact(spark, s"$dir/meta").head
     val bias = meta.getLong(0); val buckets = meta.getInt(1)
     val w = Array.fill[Long](buckets)(0L)
-    spark.read.parquet(s"$dir/weights").collect()
+    SchemaReader.collectArtifact(spark, s"$dir/weights")
       .foreach(r => w(r.getInt(0)) = r.getLong(1))
     scoreWithWeights(docs, idCol, textCol, w, bias)
   }

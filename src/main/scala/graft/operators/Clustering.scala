@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
@@ -47,10 +47,15 @@ object Clustering {
       driverSolveMaxEdges: Long = DefaultDriverSolveMaxEdges): DataFrame = {
     // materialize pairs ONCE — the union below references it twice, and
     // without this the (often expensive) pair-generation plan executes
-    // once per branch
+    // once per branch. The eager materialization also counts the edges
+    // for the driver-solve gate below, so the gate costs no job.
+    val seen = Observation()
     val p = pairs.select(col(aCol).as("_a"), col(bCol).as("_b"))
       .filter(col("_a").isNotNull && col("_b").isNotNull)
+      .observe(seen, count(lit(1)).as("edges"))
       .transform(Checkpoints.stable)
+    // an input Spark proves empty before running it reports no metrics
+    val nEdges = seen.get.get("edges").fold(0L)(_.asInstanceOf[Long])
 
     // Adaptive execution: a graph this small is cheaper to solve on the
     // driver than to iterate over — the loop's cost is dominated by
@@ -59,13 +64,13 @@ object Clustering {
     // (round-16 note: a limit(ceiling+1)-collect probe was tried here
     // to fuse the gate and the solve into one job — CollectLimitExec's
     // scale-up rounds turn an unreached limit over N partitions into
-    // ~log₄(N) jobs, strictly worse than count+collect; and raising
-    // spark.sql.limit.initialNumPartitions makes the huge-graph first
-    // round collect up to partitions×ceiling rows at the driver. The
-    // two-job gate stays.)
+    // ~log₄(N) jobs, strictly worse than the observed count + collect;
+    // and raising spark.sql.limit.initialNumPartitions makes the
+    // huge-graph first round collect up to partitions×ceiling rows at
+    // the driver.)
     val sameType = p.schema("_a").dataType == p.schema("_b").dataType
     val keyOrdering = if (sameType) minOrdering(p.schema("_a").dataType) else None
-    if (keyOrdering.isDefined && p.count() <= driverSolveMaxEdges) {
+    if (keyOrdering.isDefined && nEdges <= driverSolveMaxEdges) {
       val out = driverSolve(p.sparkSession, p.schema("_a").dataType,
         p.collect(), keyOrdering.get)
       CheckpointBridge.release(p)

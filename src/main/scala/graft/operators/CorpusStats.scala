@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** Incremental corpus accounting: a persisted per-source statistics
   * snapshot maintained by MERGEABLE aggregates (counts, sums, min/max)
@@ -55,7 +56,7 @@ object CorpusStats {
     * min-of-mins, …) + the derived mean — identical to recomputing over
     * the full corpus because every statistic is mergeable. */
   def readStatsSnapshot(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/data")
+    SchemaReader.readArtifact(spark, s"$dir/data")
       .groupBy(col("source"))
       .agg(
         sum(col("n_docs")).as("n_docs"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Plans, PortableHash}
 import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** Train/test decontamination: drop corpus documents that share any
   * n-gram with a held-out evaluation set — the standard pre-training
@@ -174,10 +175,8 @@ object Decontaminate {
       fpp: Double = 0.01): Unit = {
     val grams = testGramSet(test, testTextCol, n).localCheckpoint()
     ForkFreeLocalFileSystem.write(grams).mode("overwrite").parquet(s"$dir/grams")
-    ForkFreeLocalFileSystem.write(spark.range(1)
-      .select(lit(bloomFromGrams(grams, fpp)).as("bloom"),
-        lit(n).as("n")))
-      .mode("overwrite").parquet(s"$dir/bloom")
+    SchemaReader.writeRows(spark, s"$dir/bloom",
+      Seq("bloom" -> bloomFromGrams(grams, fpp), "n" -> n))
   }
 
   /** [[cleanBloomExact]] against the STORED artifact: the bloom is a
@@ -189,10 +188,10 @@ object Decontaminate {
   def cleanWithStoredArtifact(spark: org.apache.spark.sql.SparkSession,
       dir: String, corpus: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.BloomBridge
-    val row = spark.read.parquet(s"$dir/bloom").head()
+    val row = SchemaReader.collectArtifact(spark, s"$dir/bloom").head
     val filterBytes = row.getAs[Array[Byte]]("bloom")
     val n = row.getAs[Number]("n").intValue()
-    val grams = spark.read.parquet(s"$dir/grams")
+    val grams = SchemaReader.readArtifact(spark, s"$dir/grams")
     val candidates = ngramHashesAll(corpus, idCol, textCol, n)
       .filter(BloomBridge.mightContain(filterBytes, col("gram_hash")))
       .join(broadcast(grams), Seq("gram_hash"), "left_semi")

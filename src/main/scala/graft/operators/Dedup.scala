@@ -165,18 +165,6 @@ object Dedup {
       .withColumn("jaccard_milli", expr(s"(agree * 1000) div $k"))
   }
 
-  /** LSH banding: signature → (band_id, band_key) rows. Docs sharing any
-    * band key are near-dup candidates. */
-  def lshBands(sig: DataFrame, idCol: String, k: Int, bandSize: Int): DataFrame = {
-    require(k % bandSize == 0, "k must be divisible by bandSize")
-    val bands = (0 until k / bandSize).map { b =>
-      val key = concat_ws("-", (0 until bandSize).map(j => col(s"mh${b * bandSize + j}")): _*)
-      struct(lit(b).as("band_id"), key.as("band_key"))
-    }
-    sig.select(col(idCol), explode(array(bands: _*)).as("band"))
-      .select(col(idCol), col("band.band_id"), col("band.band_key"))
-  }
-
   /** Band rows carrying the doc's FULL key vector: (id, band_id,
     * band_key, keys[0..nBands)). The keys array is what makes dedup-free
     * pair enumeration possible (see [[minhashCandidates]]). */
@@ -471,7 +459,7 @@ object Dedup {
       bits: Int = 32): Unit = {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       ForkFreeLocalFileSystem.write(simhash(rows, idCol, textCol, bits)).parquet(s"$tmp/data")
-      StoredIndex.writeParams(spark, tmp, "bits" -> bits)
+      SchemaReader.writeRows(spark, s"$tmp/params", Seq("bits" -> bits))
     }
   }
 
@@ -502,7 +490,7 @@ object Dedup {
       maxHamming: Int = 3, bandBits: Int = 8): DataFrame = {
     val bits = SchemaReader.collectArtifact(spark, s"$dir/params").head
       .getAs[Number]("bits").intValue()
-    val cs = spark.read.parquet(s"$dir/data")
+    val cs = SchemaReader.readArtifact(spark, s"$dir/data")
       .select(col(idCol).as("_cid"), col("simhash").as("_csim"))
     val bs = simhash(batch, idCol, textCol, bits)
       .select(col(idCol).as(idCol), col("simhash").as("_bsim"))
@@ -521,7 +509,7 @@ object Dedup {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       ForkFreeLocalFileSystem.write(minhashSignatureShingled(rows, idCol, textCol, k, shingleN))
         .parquet(s"$tmp/data")
-      StoredIndex.writeParams(spark, tmp, "k" -> k, "shingle_n" -> shingleN)
+      SchemaReader.writeRows(spark, s"$tmp/params", Seq("k" -> k, "shingle_n" -> shingleN))
     }
   }
 
@@ -569,7 +557,7 @@ object Dedup {
           col("_band.band_id").as("band_id") :+
           col("_band.band_key").as("band_key"): _*)
     }
-    val cs = banded(spark.read.parquet(s"$dir/data")
+    val cs = banded(SchemaReader.readArtifact(spark, s"$dir/data")
       .withColumnRenamed(idCol, "_cid"), "_cid", "_c")
     val bs = banded(minhashSignatureShingled(batch, idCol, textCol, k, shingleN),
       idCol, "_b")
@@ -612,7 +600,8 @@ object Dedup {
       // copy is deleted (a checkpoint-then-overwrite would hold the only
       // copy in non-durable executor blocks mid-rewrite)
       StoredIndex.swapRewrite(spark, s"$dir/data") { tmp =>
-        ForkFreeLocalFileSystem.write(spark.read.parquet(s"$dir/data").repartition(nFiles))
+        ForkFreeLocalFileSystem.write(SchemaReader.readArtifact(spark, s"$dir/data")
+          .repartition(nFiles))
           .parquet(tmp)
       }
     }
@@ -1210,8 +1199,7 @@ object Dedup {
     val bloom = roll
       .agg(BloomBridge.bloomAgg(col("_d"), nRoll, fpp))
       .head().getAs[Array[Byte]](0)
-    ForkFreeLocalFileSystem.write(spark.range(1).select(lit(bloom).as("bloom"), lit(k).as("k")))
-      .mode("overwrite").parquet(s"$dir/meta")
+    SchemaReader.writeRows(spark, s"$dir/meta", Seq("bloom" -> bloom, "k" -> k))
   }
 
   /** [[dupSpansRollingAgainst]] against the STORED artifact: the same
@@ -1230,7 +1218,7 @@ object Dedup {
     * corpus-sized build into every executor. */
   def dupSpansRollingAgainstStored(spark: SparkSession, dir: String,
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = SchemaReader.collectArtifact(spark, s"$dir/meta").head
     val k = meta.getAs[Number]("k").intValue()
     val docs = df.filter(col(textCol).isNotNull)
     val nRef = Seq("roll", "exact")
@@ -1268,10 +1256,11 @@ object Dedup {
         }
         docs.select(col(idCol), explode(pe).as("_x"))
           .select(col(idCol), col("_x.pos").as("pos"), col("_x._h").as("_h"))
-          .join(broadcast(spark.read.parquet(s"$dir/exact").select(col("_h"))),
+          .join(broadcast(SchemaReader.readArtifact(spark, s"$dir/exact").select(col("_h"))),
             Seq("_h"), "left_semi")
       } else crossVerifiedFromSets(docs, idCol, textCol, k,
-        spark.read.parquet(s"$dir/roll"), spark.read.parquet(s"$dir/exact"))
+        SchemaReader.readArtifact(spark, s"$dir/roll"),
+        SchemaReader.readArtifact(spark, s"$dir/exact"))
     spanStats(docs, idCol, textCol, verified, k)
   }
 
@@ -1424,7 +1413,7 @@ object Dedup {
     StoredIndex.build(dir, corpus, idCol) { (rows, tmp) =>
       ForkFreeLocalFileSystem.write(winnowFingerprints(rows, idCol, textCol, kGram, w))
         .parquet(s"$tmp/data")
-      StoredIndex.writeParams(spark, tmp, "k_gram" -> kGram, "w" -> w)
+      SchemaReader.writeRows(spark, s"$tmp/params", Seq("k_gram" -> kGram, "w" -> w))
     }
   }
 
@@ -1452,7 +1441,7 @@ object Dedup {
       dir: String, batch: DataFrame, idCol: String, textCol: String,
       maxDf: Int, minShared: Int): DataFrame = {
     val p = SchemaReader.collectArtifact(spark, s"$dir/params").head
-    val corpus = spark.read.parquet(s"$dir/data")
+    val corpus = SchemaReader.readArtifact(spark, s"$dir/data")
       .select(col(idCol).as("_cid"), col("fp"))
     val rare = corpus.groupBy(col("fp"))
       .agg(count(lit(1)).as("_df")).filter(col("_df") <= maxDf).select("fp")

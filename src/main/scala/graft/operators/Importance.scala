@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
-import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** DSIR-style importance weighting: score every document by how much
   * its hashed n-gram feature distribution looks like a TARGET corpus
@@ -95,13 +95,8 @@ object Importance {
     * the raw corpus grew). */
   def writeBucketWeights(docs: DataFrame, textCol: String, targetPred: Column,
       buckets: Int, dir: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val w = bucketWeightsMicro(docs, textCol, targetPred, buckets)
-    val weights = w.zipWithIndex.map { case (m, b) => (b, m) }.toSeq.toDF("bucket", "w_micro")
-    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/data")
-    ForkFreeLocalFileSystem.write(Seq(buckets).toDF("buckets").coalesce(1))
-      .mode("overwrite").parquet(s"$dir/params")
+    writeModel(docs.sparkSession, dir, "bucket", w, buckets)
   }
 
   /** Hashed-bigram LM cross-entropy micro-weights, flattened to a
@@ -195,13 +190,30 @@ object Importance {
     * drift because the training corpus grew. */
   def writeBigramModel(docs: DataFrame, textCol: String, targetPred: Column,
       buckets: Int, dir: String): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val w = bigramWeightsMicro(docs, textCol, targetPred, buckets)
-    val weights = w.zipWithIndex.map { case (m, i) => (i, m) }.toSeq.toDF("idx", "w_micro")
-    ForkFreeLocalFileSystem.write(weights.coalesce(1)).mode("overwrite").parquet(s"$dir/data")
-    ForkFreeLocalFileSystem.write(Seq(buckets).toDF("buckets").coalesce(1))
-      .mode("overwrite").parquet(s"$dir/params")
+    writeModel(docs.sparkSession, dir, "idx", w, buckets)
+  }
+
+  /** A weight table as `dir/data` (one (`indexCol`, w_micro) row per
+    * weight) and its bucket count as `dir/params`, both written on the
+    * driver. */
+  private def writeModel(spark: SparkSession, dir: String, indexCol: String,
+      w: Array[Long], buckets: Int): Unit = {
+    SchemaReader.writeRows(spark, s"$dir/data",
+      w.toSeq.zipWithIndex.map { case (m, i) => Seq(indexCol -> i, "w_micro" -> m) }: _*)
+    SchemaReader.writeRows(spark, s"$dir/params", Seq("buckets" -> buckets))
+  }
+
+  /** A stored model's weights, placed by `indexCol`, and its bucket
+    * count: both read on the driver. */
+  private def readModel(spark: SparkSession, dir: String,
+      indexCol: String): (Array[Long], Int) = {
+    val rows = SchemaReader.collectArtifact(spark, s"$dir/data")
+    val w = new Array[Long](rows.size)
+    rows.foreach(r => w(r.getAs[Number](indexCol).intValue()) =
+      r.getAs[Number]("w_micro").longValue())
+    (w, SchemaReader.collectArtifact(spark, s"$dir/params")
+      .head.getAs[Number]("buckets").intValue())
   }
 
   /** Score a batch OR streaming frame against a stored bigram LM. The
@@ -210,13 +222,7 @@ object Importance {
     * micro-batch against the frozen model with no state store. */
   def bigramXentWithStoredModel(df: DataFrame, idCol: String, textCol: String,
       dir: String): DataFrame = {
-    val spark = df.sparkSession
-    val buckets = spark.read.parquet(s"$dir/params")
-      .head.getAs[Number]("buckets").intValue()
-    val w = Array.fill[Long](buckets * buckets)(0L)
-    spark.read.parquet(s"$dir/data").collect()        // ≤ buckets² rows
-      .foreach(r => w(r.getAs[Number]("idx").intValue()) =
-        r.getAs[Number]("w_micro").longValue())
+    val (w, buckets) = readModel(df.sparkSession, dir, "idx")
     xentScore(df, idCol, textCol, w, buckets)
   }
 
@@ -226,14 +232,6 @@ object Importance {
     * on a stream every micro-batch scores against the frozen weights
     * with no state store. */
   def scoreWithStoredWeights(df: DataFrame, idCol: String, textCol: String,
-      dir: String): DataFrame = {
-    val spark = df.sparkSession
-    val buckets = spark.read.parquet(s"$dir/params")
-      .head.getAs[Number]("buckets").intValue()
-    val w = Array.fill[Long](buckets)(0L)
-    spark.read.parquet(s"$dir/data").collect()        // ≤ buckets rows
-      .foreach(r => w(r.getAs[Number]("bucket").intValue()) =
-        r.getAs[Number]("w_micro").longValue())
-    score(df, idCol, textCol, w)
-  }
+      dir: String): DataFrame =
+    score(df, idCol, textCol, readModel(df.sparkSession, dir, "bucket")._1)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with a typed metadata struct, plus partition-wise decode /
@@ -295,12 +296,11 @@ object Multimodal {
     val bloom = bands
       .agg(BloomBridge.bloomAgg(xxhash64(col("_band"), col("_key")), nBands, fpp))
       .head().getAs[Array[Byte]](0)
-    ForkFreeLocalFileSystem.write(spark.range(1).select(lit(bloom).as("bloom"), lit(dim).as("dim"),
-        lit(bandSize).as("band_size"),
-        // decoder identity is part of the artifact contract: probing
-        // under a different codec would band-miss every payload
-        lit(MediaDecoders.active.id).as("decoder")))
-      .mode("overwrite").parquet(s"$dir/meta")
+    SchemaReader.writeRows(spark, s"$dir/meta", Seq("bloom" -> bloom, "dim" -> dim,
+      "band_size" -> bandSize,
+      // decoder identity is part of the artifact contract: probing
+      // under a different codec would band-miss every payload
+      "decoder" -> MediaDecoders.active.id))
   }
 
   /** Banded near-dup of a PROBE batch against the STORED media index —
@@ -318,12 +318,12 @@ object Multimodal {
   def mediaNearDupAgainstStored(spark: org.apache.spark.sql.SparkSession,
       dir: String, df: DataFrame, idCol: String, binCol: String,
       maxL1: Long): DataFrame = {
-    val (dim, bandSize) = readGeometry(spark, dir)
+    val (_, dim, bandSize) = readScreenMeta(spark, dir)
     val probeF = featsFrame(df, idCol, binCol, dim).localCheckpoint()
     bandJoinVerify(
       broadcastBands(sideA(bandsFrame(probeF, dim, bandSize)),
         probeF.count(), dim, bandSize),
-      sideB(spark.read.parquet(s"$dir/bands")),
+      sideB(SchemaReader.readArtifact(spark, s"$dir/bands")),
       dim, bandSize, maxL1, lit(true))
   }
 
@@ -340,10 +340,10 @@ object Multimodal {
   def mediaNearDupStoredStream(spark: org.apache.spark.sql.SparkSession,
       dir: String, stream: DataFrame, idCol: String, binCol: String,
       maxL1: Long): DataFrame = {
-    val (dim, bandSize) = readGeometry(spark, dir)
+    val (_, dim, bandSize) = readScreenMeta(spark, dir)
     bandJoinVerify(
       sideA(bandsFrame(featsFrame(stream, idCol, binCol, dim), dim, bandSize)),
-      sideB(spark.read.parquet(s"$dir/bands")),
+      sideB(SchemaReader.readArtifact(spark, s"$dir/bands")),
       dim, bandSize, maxL1, lit(true))
   }
 
@@ -383,14 +383,6 @@ object Multimodal {
         col("dup_of"), col("l1"))
   }
 
-  private def readGeometry(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int) = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    fenceDecoder(meta, s"media index $dir")
-    (meta.getAs[Number]("dim").intValue(),
-      meta.getAs[Number]("band_size").intValue())
-  }
-
   /** Read the stored screen's meta ONCE — the stream-start discipline
     * for [[streamMediaScreenBloom]], and [[mediaScreenCut]]'s batch
     * entry: (bloom bytes, dim, band_size), WITH the decoder-identity
@@ -403,23 +395,26 @@ object Multimodal {
     * the bytes. */
   def readScreenMeta(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Array[Byte], Int, Int) = {
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    fenceDecoder(meta, s"media screen $dir")
-    (meta.getAs[Array[Byte]]("bloom"),
-      meta.getAs[Number]("dim").intValue(),
-      meta.getAs[Number]("band_size").intValue())
+    val (meta, dim, bandSize) = stampedGeometry(spark, s"$dir/meta")
+    (meta.getAs[Array[Byte]]("bloom"), dim, bandSize)
   }
 
-  /** Decoder fence shared by every stored-artifact meta/geometry read:
-    * bands written under another codec would silently never collide
-    * (100% false negatives) — fail here instead. Artifacts written
-    * before the stamp read as window-sums (correct by construction). */
-  private def fenceDecoder(row: Row, what: String): Unit =
+  /** The one row of a media artifact's stamped part (an index `meta`, a
+    * registry `geometry`) and its (dim, band_size), behind the decoder
+    * fence every such read shares: bands written under another codec
+    * would silently never collide (100% false negatives) — fail here
+    * instead. Artifacts written before the stamp read as window-sums
+    * (correct by construction). */
+  private def stampedGeometry(spark: org.apache.spark.sql.SparkSession,
+      part: String): (Row, Int, Int) = {
+    val row = SchemaReader.collectArtifact(spark, part).head
     MediaDecoders.requireMatch(
       if (row.schema.fieldNames.contains("decoder"))
         Option(row.getAs[String]("decoder"))
       else None,
-      MediaDecoders.active, what)
+      MediaDecoders.active, s"media artifact $part")
+    (row, row.getAs[Number]("dim").intValue(), row.getAs[Number]("band_size").intValue())
+  }
 
   /** STREAMING media pre-screen — [[graft.operators.Dedup.streamSubstringScreenBloom]]'s
     * discipline for the media modality: drop stream payloads with ANY
@@ -502,7 +497,7 @@ object Multimodal {
   def mediaRouteStream(spark: org.apache.spark.sql.SparkSession,
       dir: String, stream: DataFrame, idCol: String, binCol: String,
       probes: Seq[(Long, Array[Long])], maxL1: Long): DataFrame = {
-    val (dim, bandSize) = readGeometry(spark, dir)
+    val (_, dim, bandSize) = readScreenMeta(spark, dir)
     routeProbes(spark, dim, bandSize, stream, idCol, binCol, probes, maxL1)
   }
 
@@ -579,12 +574,7 @@ object Multimodal {
     val seg = validatedProbeSeg(probes, idCol, vecCol, dim, maxNew = 1024)
     StoredIndex.build(dir, seg, "probe_id") { (seg, tmp) =>
       ForkFreeLocalFileSystem.write(seg).parquet(s"$tmp/probes/seg=0")
-      ForkFreeLocalFileSystem.write(spark.range(1).select(lit(dim).as("dim"),
-          lit(bandSize).as("band_size"),
-          // registered vectors must come from the decoder that will
-          // decode arrivals at route time — record which one
-          lit(MediaDecoders.active.id).as("decoder")))
-        .parquet(s"$tmp/geometry")
+      writeGeometry(spark, tmp, dim, bandSize)
     }
   }
 
@@ -598,7 +588,7 @@ object Multimodal {
     StoredIndex.guardedAppend(spark, dir,
       batch.select(col(idCol).cast("long").as("probe_id")), "probe_id") {
       val (dim, _) = registryGeometry(spark, dir)
-      val nExisting = spark.read.parquet(s"$dir/probes").count()
+      val nExisting = SchemaReader.footers(spark, s"$dir/probes", Some("seg")).map(_.rows).sum
       val seg = validatedProbeSeg(batch, idCol, vecCol, dim,
         maxNew = 1024 - nExisting)
       val probesPath = new org.apache.hadoop.fs.Path(s"$dir/probes")
@@ -634,10 +624,9 @@ object Multimodal {
     * stats faces so each pays exactly one registry read. */
   private def readRegistryProbes(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(Long, Array[Long])] =
-    spark.read.parquet(s"$dir/probes")
-      .select(col("probe_id"), col("_pv")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
-      .sortBy(_._1).toSeq
+    SchemaReader.collectArtifact(spark, s"$dir/probes", Some("seg"))
+      .map(r => r.getAs[Long]("probe_id") -> r.getAs[Seq[Long]]("_pv").toArray)
+      .sortBy(_._1)
 
   /** Deregister probes and fold the survivors into ONE segment — the
     * registry's lifecycle tail (exemplar sets churn: a probe that
@@ -660,7 +649,8 @@ object Multimodal {
       // erase the pending evidence (round-14 advice)
       StoredIndex.requireNotPending(spark, dir)
       val (dim, bandSize) = registryGeometry(spark, dir)
-      val survivors = spark.read.parquet(s"$dir/probes")
+      val survivors = SchemaReader.readArtifact(spark, s"$dir/probes",
+          Some(StructField("seg", IntegerType)))
         .select(col("probe_id"), col("_pv"))
         .filter(!col("probe_id").isin(dropIds.toSeq: _*))
         .localCheckpoint() // sever lineage from the dir being swapped
@@ -670,12 +660,9 @@ object Multimodal {
       val maxId = StoredIndex.storedMaxId(spark, dir)
       StoredIndex.swapRewrite(spark, dir) { tmp =>
         ForkFreeLocalFileSystem.write(survivors).parquet(s"$tmp/probes/seg=0")
-        ForkFreeLocalFileSystem.write(spark.range(1).select(lit(dim).as("dim"),
-            lit(bandSize).as("band_size"),
-            // registryGeometry's decoder fence passed above, so the
-            // active id IS the stored id — the stamp carries over
-            lit(MediaDecoders.active.id).as("decoder")))
-          .parquet(s"$tmp/geometry")
+        // registryGeometry's decoder fence passed above, so the active
+        // id IS the stored id — the stamp carries over
+        writeGeometry(spark, tmp, dim, bandSize)
         // historical watermark, NOT the surviving max: append-only ids
         // must stay monotone across deregistration or an append of a
         // recycled id would diverge from the rebuild-equivalence rule
@@ -721,19 +708,18 @@ object Multimodal {
         col("min_l1"))
   }
 
+  /** `dir/geometry`: the one row (dim, band_size, decoder) a registry
+    * is decoded under. Registered vectors must come from the decoder
+    * that decodes arrivals at route time, so the active one is stamped. */
+  private def writeGeometry(spark: org.apache.spark.sql.SparkSession, dir: String,
+      dim: Int, bandSize: Int): Unit =
+    SchemaReader.writeRows(spark, s"$dir/geometry", Seq("dim" -> dim,
+      "band_size" -> bandSize, "decoder" -> MediaDecoders.active.id))
+
   private def registryGeometry(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Int, Int) = {
-    val g = spark.read.parquet(s"$dir/geometry").head()
-    // decoder fence (read side of the stamp the writers record):
-    // arrivals decoded under another codec would band-miss every
-    // registered probe — silent 100% false negatives, so fail here
-    MediaDecoders.requireMatch(
-      if (g.schema.fieldNames.contains("decoder"))
-        Option(g.getAs[String]("decoder"))
-      else None,
-      MediaDecoders.active, s"probe registry $dir")
-    (g.getAs[Number]("dim").intValue(),
-      g.getAs[Number]("band_size").intValue())
+    val (_, dim, bandSize) = stampedGeometry(spark, s"$dir/geometry")
+    (dim, bandSize)
   }
 
   /** Normalize + validate a registration batch: (probe_id, _pv) with

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StructField}
 
 import graft.functions.Plans
 import graft.sinks.ForkFreeLocalFileSystem
@@ -151,7 +152,7 @@ object Retrieval {
     val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
-    val dfByTerm = spark.read.parquet(s"$dir/postings")
+    val dfByTerm = postings(spark, dir)
       .filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("df_t")).as("df_t")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -199,7 +200,7 @@ object Retrieval {
     val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
-    val dfByTerm = spark.read.parquet(s"$dir/postings")
+    val dfByTerm = postings(spark, dir)
       .filter(col("token").isin(terms: _*))
       .groupBy(col("token")).agg(sum(col("df_t")).as("df_t")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -289,10 +290,9 @@ object Retrieval {
         .mode("append").parquet(s"$dir/doclens")
       val add = base.agg(count(lit(1)).cast("long"),
         sum(size(col("_toks"))).cast("long")).head
-      ForkFreeLocalFileSystem.write(spark.range(1).select(
-          lit(old.getAs[Long]("n_docs") + add.getLong(0)).as("n_docs"),
-          lit(old.getAs[Long]("sum_dl") + add.getLong(1)).as("sum_dl")))
-        .mode("overwrite").parquet(s"$dir/stats")
+      SchemaReader.writeRows(spark, s"$dir/stats", Seq(
+        "n_docs" -> (old.getAs[Long]("n_docs") + add.getLong(0)),
+        "sum_dl" -> (old.getAs[Long]("sum_dl") + add.getLong(1))))
     }
   }
 
@@ -310,7 +310,7 @@ object Retrieval {
       // segment sits behind a pending meta would commit the partial
       // batch and erase the evidence (round-14 advice, all compactions)
       StoredIndex.requireNotPending(spark, dir)
-      val merged = decodeSegments(spark.read.parquet(s"$dir/postings"))
+      val merged = decodeSegments(postings(spark, dir))
         .select(col("id"), col("token"), col("tf"))
       val seg = encodeSegment(merged
         .groupBy(col("token"), col("id"))
@@ -322,6 +322,10 @@ object Retrieval {
         ForkFreeLocalFileSystem.write(seg).parquet(s"$tmp/seg=0")
       }
     }
+
+  /** Every stored postings segment, `seg` included. */
+  private def postings(spark: SparkSession, dir: String): DataFrame =
+    SchemaReader.readArtifact(spark, s"$dir/postings", Some(StructField("seg", IntegerType)))
 
   /** Rebuild (token, id, tf) from stored segments: per-token running
     * sum over the posting-sized exploded stream restores absolute ids.
@@ -376,7 +380,7 @@ object Retrieval {
     val stats = SchemaReader.collectArtifact(spark, s"$dir/stats").head
     val n = stats.getAs[Long]("n_docs")
     val sumdl = stats.getAs[Long]("sum_dl")
-    val posts = spark.read.parquet(s"$dir/postings")
+    val posts = postings(spark, dir)
       .filter(col("token").isin(terms: _*))
     // df per present term: per-segment dfs ADD (disjoint id ranges) —
     // bounded (≤ |terms|·segments rows)
@@ -389,7 +393,7 @@ object Retrieval {
       .foldLeft(lit(0L)) { (acc, t) =>
         when(col("token") === t, lit(idfMicro(n, dfByTerm(t)))).otherwise(acc)
       }
-    val doclens = spark.read.parquet(s"$dir/doclens")
+    val doclens = SchemaReader.readArtifact(spark, s"$dir/doclens")
     // Size-gate the posting-side broadcast. The decoded side has exactly
     // Σdf(term) rows — already on the driver in dfByTerm, so the gate is
     // free. Selective terms → a tiny side → broadcasting it removes the

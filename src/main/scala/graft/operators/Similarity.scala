@@ -417,8 +417,7 @@ object Similarity {
   /** A stored index's cell-partitioned `dir/data` under its footer
     * schema plus the `cell` partition column: no inference job. */
   private def storedCells(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    SchemaReader.readPartitioned(spark, s"$dir/data",
-      org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType))
+    SchemaReader.readArtifact(spark, s"$dir/data", Some(StructField("cell", IntegerType)))
 
   /** Persist a DETERMINISTIC-quantizer IVF index: cell assignment as in
     * [[ivfTopKDeterministic]], corpus written PARTITIONED BY CELL

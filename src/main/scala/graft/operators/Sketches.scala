@@ -199,7 +199,7 @@ object Sketches {
     StoredIndex.build(dir, df, idCol) { (rows, tmp) =>
       ForkFreeLocalFileSystem.write(kmvSketch(rows, groupCol, textCol, shingleN, k))
         .parquet(s"$tmp/data")
-      StoredIndex.writeParams(spark, tmp, "shingle_n" -> shingleN, "k" -> k)
+      SchemaReader.writeRows(spark, s"$tmp/params", Seq("shingle_n" -> shingleN, "k" -> k))
     }
 
   /** Fold one new batch into the stored sketch: sketch the batch with
@@ -222,6 +222,6 @@ object Sketches {
     val k = SchemaReader.collectArtifact(spark, s"$dir/params").head
       .getAs[Number]("k").intValue()
     kmvSketchEstimate(
-      kmvMerge(spark.read.parquet(s"$dir/data"), groupCol, k), groupCol, k)
+      kmvMerge(SchemaReader.readArtifact(spark, s"$dir/data"), groupCol, k), groupCol, k)
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
 import graft.sinks.ForkFreeLocalFileSystem
 import graft.sources.SchemaReader
 
@@ -20,15 +19,11 @@ import graft.sources.SchemaReader
   * build that fails at any step leaves the previous index whole. */
 object StoredIndex {
 
-  private val MetaSchema = StructType(Seq(
-    StructField("max_id", LongType, nullable = false),
-    StructField("pending", BooleanType, nullable = false)))
-
   /** Record the indexed corpus's max id as a one-row parquet under
     * `dir/meta` — the cheap stored handle the append-only id discipline
     * is validated against (reading it back is a footer-sized pull, not
     * a corpus scan). Written on the driver
-    * ([[graft.sources.SchemaReader.writeArtifact]]: hidden file, old
+    * ([[graft.sources.SchemaReader.writeRows]]: hidden file, old
     * part removed, rename), so a crash leaves the old row or no row,
     * never two, and a meta with no row fails the next reader.
     * `pending = true` marks an append in flight ([[guardedAppend]]): a
@@ -36,14 +31,7 @@ object StoredIndex {
     * silently double-ingesting against a stale watermark. */
   def writeMaxIdMeta(spark: SparkSession, dir: String, maxId: Long,
       pending: Boolean = false): Unit =
-    SchemaReader.writeArtifact(spark, s"$dir/meta", MetaSchema, Seq(Row(maxId, pending)))
-
-  /** An index's geometry as `dir/params`: one row of named non-null
-    * ints, written on the driver like the meta. */
-  def writeParams(spark: SparkSession, dir: String, params: (String, Int)*): Unit =
-    SchemaReader.writeArtifact(spark, s"$dir/params",
-      StructType(params.map { case (name, _) => StructField(name, IntegerType, nullable = false) }),
-      Seq(Row(params.map(_._2): _*)))
+    SchemaReader.writeRows(spark, s"$dir/meta", Seq("max_id" -> maxId, "pending" -> pending))
 
   /** The one row of `dir/meta`; a missing meta fails naming its path,
     * as does one with no row or several (a meta write that crashed). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{PortableHash, PortableRound}
 import graft.sinks.ForkFreeLocalFileSystem
+import graft.sources.SchemaReader
 
 /** Text-analysis operators for training-data pipelines: token counting,
   * quality scoring, n-gram-heuristic language ID, and document
@@ -714,8 +715,8 @@ object TextAnalysis {
     * shape). `oov_rate` is one IEEE division of exact int64 counts. */
   def oovScoreWithStoredVocab(df: DataFrame, idCol: String, textCol: String,
       dir: String): DataFrame = {
-    val vocab = df.sparkSession.read.parquet(s"$dir/vocab")
-      .select("token").collect().map(_.getString(0)).toSeq
+    val vocab = SchemaReader.collectArtifact(df.sparkSession, s"$dir/vocab")
+      .map(_.getAs[String]("token"))
     val toks = tokens(col(textCol))
     df.filter(col(textCol).isNotNull)
       .select(col(idCol),

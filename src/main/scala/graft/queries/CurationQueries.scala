@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{ExactAgg, PortableHash, PortableRound}
 import graft.operators.{Bpe, Classifier, Decontaminate, Dedup, Importance, Multimodal, Redact, Retrieval, Sampling, Sketches, TextAnalysis}
 import graft.queries.Tables.t
+import graft.sources.SchemaReader
 
 /** Round-3 coverage widening, part 2 — the corpus-curation stages a
   * training-data pipeline runs between dedup and tokenization:
@@ -1967,7 +1968,7 @@ object CurationQueries {
         q169.build(s, dir).write.mode("overwrite").parquet(dDir)
       }
       packKeepers(s, dir,
-        s.read.parquet(dDir)
+        SchemaReader.readArtifact(s, dDir)
           .filter(col("reason") === "keep").select(col("doc_id")))
     },
     Some(gatePackSql))

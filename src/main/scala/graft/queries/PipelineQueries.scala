@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{PortableHash, PortableRound}
 import graft.operators.{Dedup, Multimodal, Similarity, SnapshotDiff, TextAnalysis}
 import graft.queries.Tables.t
+import graft.sources.SchemaReader
 
 /** Training-data pipeline capabilities over `documents` / `embeddings`:
   * deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard),
@@ -1485,7 +1486,7 @@ object PipelineQueries {
         // the corpus grows, the semantics of an exemplar set; the
         // operator gates at 1024) of STORED feature vectors — the
         // ingest-time analog of q160's frozen query-vector set
-        val probes = s.read.parquet(s"$aDir/feats")
+        val probes = SchemaReader.readArtifact(s, s"$aDir/feats")
           .filter(col("_id") % 10 === 0 && col("_id") < 500)
           .select(col("_id"), col("_f")).collect()
           .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)

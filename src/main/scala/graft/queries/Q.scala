@@ -83,7 +83,7 @@ object Tables {
     try spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     catch { case _: Throwable => () }
     val path = s"$dir/$name.parquet"
-    val df = spark.read.schema(SchemaReader.unionSchema(SchemaReader.footers(spark, path))).parquet(path)
+    val df = SchemaReader.readArtifact(spark, path)
     if (name == "events" && df.schema("ts").dataType == LongType)
       df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
     else if (name == "events" && df.schema("ts").dataType == TimestampNTZType)

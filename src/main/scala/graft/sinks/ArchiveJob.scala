@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, lit}
+import org.apache.spark.sql.types.{DateType, StructField}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
@@ -162,7 +163,8 @@ object ArchiveJob {
         val fs = new Path(historicalDir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(new Path(historicalDir))) 0L
-        else spark.read.parquet(historicalDir).filter(affectedPred).count()
+        else SchemaReader.readArtifact(spark, historicalDir,
+          Some(StructField("date_key", DateType))).filter(affectedPred).count()
       }
       val prior = affectedCount()
       ForkFreeLocalFileSystem.write(keyed.sortWithinPartitions(sortCol))
@@ -190,8 +192,8 @@ object ArchiveJob {
     // the whole directory, so files arriving mid-rewrite would be lost
     // (the live-ingest rotations above snapshot their file list instead)
     StoredIndex.swapRewrite(spark, dir) { tmp =>
-      val df = spark.read.parquet(dir)
-      val total = df.count()
+      val df = SchemaReader.readArtifact(spark, dir)
+      val total = footerRows(spark, dir)
       ForkFreeLocalFileSystem.write(df.filter(!coalesce(predicate, lit(false))))
         .mode("overwrite").parquet(tmp)
       val kept = footerRows(spark, tmp)
@@ -227,8 +229,8 @@ object ArchiveJob {
       require(partitionDirs.isEmpty,
         s"$dir is hive-partitioned (${partitionDirs.head.getPath.getName}, ...); " +
           "compact each partition directory instead")
-      val df = spark.read.parquet(dir)
-      val rows = df.count()
+      val df = SchemaReader.readArtifact(spark, dir)
+      val rows = footerRows(spark, dir)
       val nFiles = math.max(1, math.ceil(rows.toDouble / targetRows).toInt)
       // repartition(n) (round-robin) balances rows across exactly n files;
       // coalesce(n) would skip the shuffle but inherits upstream skew and

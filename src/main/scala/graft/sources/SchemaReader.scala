@@ -6,6 +6,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -119,20 +120,24 @@ object SchemaReader {
     StructType(seen.values.map(_._1).toSeq)
   }
 
-  /** A part the engine wrote partitioned by one column, read under the
-    * union of its footers plus that declared column, after the file
-    * columns as Spark's partition discovery puts it: no inference job. */
-  private[graft] def readPartitioned(spark: SparkSession, path: String,
-      partition: StructField): DataFrame =
-    spark.read.schema(unionSchema(footers(spark, path, Some(partition.name)))
-      .add(partition)).parquet(path)
+  /** A part the engine stored, or any parquet file or flat directory
+    * (`Tables.t`), read under the union of its footers; a part
+    * partitioned by the declared `partition` column gets that column
+    * after the file columns, as Spark's partition discovery puts it. No
+    * inference job. */
+  private[graft] def readArtifact(spark: SparkSession, path: String,
+      partition: Option[StructField] = None): DataFrame = {
+    val files = unionSchema(footers(spark, path, partition.map(_.name)))
+    spark.read.schema(partition.fold(files)(files.add)).parquet(path)
+  }
 
-  /** Every row of a small flat part (a model, a one-row meta), decoded
-    * on the driver by Spark's own parquet reader under the footer
-    * schema: no Spark job, and every page is read, so a corrupt part
-    * fails here. */
-  private[graft] def collectArtifact(spark: SparkSession, path: String): Seq[Row] = {
-    val files = footers(spark, path)
+  /** Every row of a small part (a model, a one-row meta), decoded on the
+    * driver by Spark's own parquet reader under the footer schema: no
+    * Spark job, and every page is read, so a corrupt part fails here.
+    * A part partitioned by `partition` gives its file columns only. */
+  private[graft] def collectArtifact(spark: SparkSession, path: String,
+      partition: Option[String] = None): Seq[Row] = {
+    val files = footers(spark, path, partition)
     val schema = unionSchema(files)
     val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
       new StructType(), schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
@@ -141,6 +146,18 @@ object SchemaReader {
     files.flatMap(f => read(PartitionedFile(InternalRow.empty,
       SparkPath.fromPath(new Path(f.path)), 0L, f.bytes))
       .map(toRow(_).asInstanceOf[Row]).toList) // the reader reuses its row
+  }
+
+  /** [[writeArtifact]] of named values, each column typed as `lit` types
+    * its value in the first row and non-null: the footer a Spark write
+    * of `spark.range(1).select(lit(v).as(name), …)` (or of a local
+    * `toDF` of primitives) carries. */
+  private[graft] def writeRows(spark: SparkSession, dir: String,
+      rows: Seq[(String, Any)]*): Unit = {
+    require(rows.nonEmpty, s"$dir: no rows to write")
+    writeArtifact(spark, dir, StructType(rows.head.map { case (name, v) =>
+      StructField(name, Literal(v).dataType, nullable = false) }),
+      rows.map(r => Row.fromSeq(r.map(_._2))))
   }
 
   /** Write `rows` as the single part file of the flat part `dir` (a

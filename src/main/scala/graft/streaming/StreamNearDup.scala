@@ -142,7 +142,7 @@ object StreamNearDup {
     require(maxHamming < nBands,
       s"pigeonhole completeness needs maxHamming < $nBands bands; got $maxHamming")
     val mask = (1L << bandBits) - 1
-    val corpus = spark.read.parquet(s"$indexDir/data")
+    val corpus = SchemaReader.readArtifact(spark, s"$indexDir/data")
       .select(col(idCol).cast("long").as("_cid"), col("simhash").as("_csim"))
       .select(col("_cid"), col("_csim"),
         explode(bandStructsFor(col("_csim"), nBands, bandBits)).as("band"))
@@ -263,7 +263,7 @@ object StreamNearDup {
     val p = SchemaReader.collectArtifact(spark, s"$indexDir/params").head
     val (kGram, w) =
       (p.getAs[Number]("k_gram").intValue(), p.getAs[Number]("w").intValue())
-    val corpus = spark.read.parquet(s"$indexDir/data")
+    val corpus = SchemaReader.readArtifact(spark, s"$indexDir/data")
       .select(col(idCol).cast("long").as("matchId"), col("fp"))
     val rare = corpus.groupBy(col("fp"))
       .agg(count(lit(1)).as("_df")).filter(col("_df") <= maxDf).select("fp")

@@ -89,6 +89,35 @@ class CheckpointsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
+  test("reliable fences land under the configured dir after a direct setCheckpointDir elsewhere") {
+    val (x, y) = (tmpDir("graft_ckpt_conf"), tmpDir("graft_ckpt_other"))
+    spark.conf.set("spark.graft.checkpointDir", x)
+    try {
+      Checkpoints.release(Checkpoints.stable(spark.range(10).toDF()))
+      spark.sparkContext.setCheckpointDir(y)
+      val df = Checkpoints.stable(spark.range(100).toDF())
+      df.count() shouldBe 100L
+      rddCheckpointDirs(x) should not be empty
+      rddCheckpointDirs(y) shouldBe empty
+      Checkpoints.release(df)
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
+  test("the driver-solve gate counts edges during the pairs materialization, not in a job") {
+    val ids = (1L to 20L).toDF("id")
+    def clusters(p: org.apache.spark.sql.DataFrame) = jobsDuring(
+      Clustering.assignClusters(ids, "id", p, "a", "b"))
+    // one job materializes the pairs, one collects them for the solve
+    val (out, jobs) = clusters(pairs)
+    jobs shouldBe 2
+    out.orderBy("id").as[(Long, Long)].collect().toMap shouldBe
+      ((1L to 20L).map(i => i -> i).toMap ++ Map(2L -> 1L, 3L -> 1L, 4L -> 1L,
+        11L -> 10L, 12L -> 10L))
+    // an input Spark proves empty reports no metrics: zero edges, no clusters
+    val (empty, _) = clusters(pairs.filter(lit(false)))
+    empty.filter(col("id") =!= col("cluster_id")).count() shouldBe 0L
+  }
+
   // Round-16 (r15 verdict item 7): the Dedup FENCES now route through
   // Checkpoints.stable too, so the one conf also buys the non-iterative
   // materialization fences fault tolerance on preemptible fleets.

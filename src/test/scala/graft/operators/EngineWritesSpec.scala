@@ -3,7 +3,7 @@ package graft.operators
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.LocalFileSystem
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -30,7 +30,32 @@ class EngineWritesSpec extends SparkSpec {
   }.toDF("id", "text", "src", "vec")
   private lazy val queries = corpus.filter(col("id") <= 3)
 
-  private def sortedRows(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted
+  /** Rows as comparable strings, binary cells by content. */
+  private def sortedRows(rows: Seq[Row]): Seq[String] = rows.map(_.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }.mkString("[", ",", "]")).sorted
+
+  private def stored(part: String): Seq[Row] = SchemaReader.collectArtifact(spark, part)
+
+  private def one(cols: Column*): DataFrame = spark.range(1).select(cols: _*)
+
+  /** Each part is one driver-written file (no `_SUCCESS`) with the footer
+    * schema, nullability included, and the rows of the Spark write of
+    * its `parent` frame. */
+  private def sameAsSparkWrite(parts: Seq[(String, DataFrame)]): Unit = {
+    val root = tmpDir("spark_writes")
+    for (((part, parent), i) <- parts.zipWithIndex) withClue(part) {
+      val ref = s"$root/$i"
+      parent.write.parquet(ref)
+      val footers = SchemaReader.footers(spark, part)
+      footers should have size 1
+      new java.io.File(part).list().filterNot(_.endsWith(".crc")).toSeq shouldBe
+        Seq(new java.io.File(footers.head.path).getName)
+      SchemaReader.footers(spark, ref).map(_.schema).distinct shouldBe Seq(footers.head.schema)
+      sortedRows(stored(part)) shouldBe sortedRows(stored(ref))
+    }
+  }
 
   /** `dir`'s entries as Spark's reader sees them: no `.`/`_` files. */
   private def visible(dir: String): Seq[String] =
@@ -62,14 +87,12 @@ class EngineWritesSpec extends SparkSpec {
 
     // each part as the parent commit's Spark write built it, from
     // independently known values where the part has them
-    def one(cols: Column*): DataFrame = spark.range(1).select(cols: _*)
     def detCenters(n: Int) = spark.createDataFrame(java.util.Arrays.asList(
       corpus.orderBy("id").limit(n).select(col("vec").cast("array<double>")).collect().toSeq
         .zipWithIndex.map { case (r, i) => Row(i, r.getSeq[Double](0)) }: _*),
       new StructType().add("cell", "int", nullable = false)
         .add(corpus.select(col("vec").cast("array<double>").as("center")).schema.head))
-    def stored(part: String): Seq[Row] = SchemaReader.collectArtifact(spark, part)
-    val parts: Seq[(String, DataFrame)] = Seq(
+    sameAsSparkWrite(Seq(
       s"$det/meta" -> one(lit(40L).as("max_id"), lit(false).as("pending")),
       s"$pending/meta" -> one(lit(41L).as("max_id"), lit(true).as("pending")),
       s"$det/centers" -> detCenters(4),
@@ -83,17 +106,58 @@ class EngineWritesSpec extends SparkSpec {
       s"$simhash/params" -> one(lit(24).as("bits")),
       s"$minhash/params" -> one(lit(8).as("k"), lit(2).as("shingle_n")),
       s"$winnow/params" -> one(lit(2).as("k_gram"), lit(3).as("w")),
-      s"$kmv/params" -> one(lit(2).as("shingle_n"), lit(16).as("k")))
-    for ((part, parent) <- parts) withClue(part) {
-      val ref = s"$root/ref/${parts.indexWhere(_._1 == part)}"
-      parent.write.parquet(ref)
-      val footers = SchemaReader.footers(spark, part)
-      footers should have size 1
-      new java.io.File(part).list().filterNot(_.endsWith(".crc")).toSeq shouldBe
-        Seq(new java.io.File(footers.head.path).getName) // no _SUCCESS
-      SchemaReader.footers(spark, ref).map(_.schema).distinct shouldBe Seq(footers.head.schema)
-      sortedRows(stored(part)) shouldBe sortedRows(stored(ref))
+      s"$kmv/params" -> one(lit(2).as("shingle_n"), lit(16).as("k"))))
+  }
+
+  test("one-row and model parts once written by Spark jobs keep that write's footer and rows") {
+    import org.apache.spark.sql.graftbridge.BloomBridge
+    val root = tmpDir("moved_parts")
+    /** The bloom a build aggregates over the stored `part`'s `key`. */
+    def bloomOf(part: String, key: Column, fpp: Double): Array[Byte] = {
+      val rows = SchemaReader.readArtifact(spark, part)
+      rows.agg(BloomBridge.bloomAgg(key, rows.count(), fpp)).head().getAs[Array[Byte]](0)
     }
+    val media = Multimodal.attachPayload(corpus, "text", "text")
+    val decoder = lit(MediaDecoders.active.id).as("decoder")
+    val ss = s"$root/ss"
+    Dedup.writeSubstringScreenArtifact(spark, corpus, "text", 2, ss)
+    val dc = s"$root/dc"
+    Decontaminate.writeDecontamArtifact(spark, corpus, "text", 2, dc)
+    val md = s"$root/md"
+    Multimodal.writeMediaDupIndex(spark, media, "id", "media", 4, 2, md)
+    val probes = media.filter(col("id") <= 3)
+      .select(col("id"), Multimodal.stubFeaturesMicro(col("media"), 4).as("_pv"))
+    val (reg, compacted) = (s"$root/reg", s"$root/reg_compacted")
+    for (d <- Seq(reg, compacted)) Multimodal.writeProbeRegistry(spark, probes, "id", "_pv", 4, 2, d)
+    Multimodal.compactProbeRegistry(spark, compacted, Set(1L))
+    val rt = s"$root/rt"
+    Retrieval.writeRetrievalIndex(spark, corpus.filter(col("id") <= 20), "id", "text", rt)
+    Retrieval.appendToRetrievalIndex(spark, rt, corpus.filter(col("id") > 20), "id", "text")
+    val sumDl = corpus.select(sum(functions.size(Dedup.tokens(col("text"))))).head().getLong(0)
+    val cl = s"$root/cl"
+    Classifier.writeModelArtifact(spark, cl, Array(5L, -3L, 0L), 7L)
+    val target = col("src") === "a"
+    val (iw, bg) = (s"$root/iw", s"$root/bg")
+    Importance.writeBucketWeights(corpus, "text", target, 8, iw)
+    Importance.writeBigramModel(corpus, "text", target, 4, bg)
+    def weights(w: Array[Long], index: String): DataFrame =
+      w.toSeq.zipWithIndex.map(_.swap).toDF(index, "w_micro").coalesce(1)
+
+    sameAsSparkWrite(Seq(
+      s"$ss/meta" -> one(lit(bloomOf(s"$ss/roll", col("_d"), 0.001)).as("bloom"), lit(2).as("k")),
+      s"$dc/bloom" -> one(lit(bloomOf(s"$dc/grams", col("gram_hash"), 0.01)).as("bloom"),
+        lit(2).as("n")),
+      s"$md/meta" -> one(lit(bloomOf(s"$md/bands", xxhash64(col("_band"), col("_key")), 0.001))
+        .as("bloom"), lit(4).as("dim"), lit(2).as("band_size"), decoder),
+      s"$reg/geometry" -> one(lit(4).as("dim"), lit(2).as("band_size"), decoder),
+      s"$compacted/geometry" -> one(lit(4).as("dim"), lit(2).as("band_size"), decoder),
+      s"$rt/stats" -> one(lit(40L).as("n_docs"), lit(sumDl).as("sum_dl")),
+      s"$cl/weights" -> weights(Array(5L, -3L, 0L), "bucket"),
+      s"$cl/meta" -> Seq((7L, 3)).toDF("bias_micro", "n_buckets").coalesce(1),
+      s"$iw/data" -> weights(Importance.bucketWeightsMicro(corpus, "text", target, 8), "bucket"),
+      s"$iw/params" -> Seq(8).toDF("buckets").coalesce(1),
+      s"$bg/data" -> weights(Importance.bigramWeightsMicro(corpus, "text", target, 4), "idx"),
+      s"$bg/params" -> Seq(4).toDF("buckets").coalesce(1)))
   }
 
   test("stored-index builds, appends, probes and archives fork no process") {

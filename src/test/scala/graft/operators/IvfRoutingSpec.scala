@@ -90,7 +90,7 @@ class IvfRoutingSpec extends SparkSpec {
     val cell = org.apache.spark.sql.types.StructField("cell",
       org.apache.spark.sql.types.IntegerType)
     for (d <- Seq(dir, pqDir)) {
-      SchemaReader.readPartitioned(spark, s"$d/data", cell).schema shouldBe
+      SchemaReader.readArtifact(spark, s"$d/data", Some(cell)).schema shouldBe
         spark.read.parquet(s"$d/data").schema
       for (part <- Seq("centers", "meta")) withClue(s"$d/$part: ") {
         val p = s"$d/$part"
