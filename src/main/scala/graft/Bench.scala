@@ -20,6 +20,13 @@ object Bench {
     "q71_try_functions", "q72_variant", "q73_agg_breadth", "q74_array_ops",
     "q75_map_ops", "q76_lateral", "q82_null_ordering")
 
+  /** Generated-code cache size of the bench session. Spark's default
+    * (`spark.sql.codegen.cache.maxEntries` = 100) holds fewer classes
+    * than one sweep of the query set compiles, so each warm sweep
+    * recompiled what the cold sweep had already compiled
+    * (docs/TUNING.md, "Generated-code cache"). */
+  val CodegenCacheEntries: Int = 2000
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -32,6 +39,7 @@ object Bench {
       // host would time different session/window groupings than the
       // correctness-verified semantics.
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first measured query doesn't absorb

@@ -118,7 +118,12 @@ case class WinnowMinFingerprints(child: Expression, kGram: Int, w: Int)
 
 object WinnowMinFingerprints {
 
-  private val PosMul = 2147483648L // 2^31 — Dedup.WinnowPosMul
+  /** Position multiplier for the winnowing (hash, pos) encoding:
+    * comb = h·2^31 + pos packs (min hash, tie → leftmost pos) into one
+    * BIGINT so a single window `min` implements the lexicographic rule
+    * in any engine. h < 2^32 ⇒ comb < 2^63 (no overflow); positions are
+    * bounded at 2^31 tokens per document — beyond any real document. */
+  private val PosMul = 2147483648L // 2^31
   private val EmptyLongs: ArrayData = ArrayData.toArrayData(Array.empty[Long])
 
   def compute(toks: ArrayData, kGram: Int, w: Int): ArrayData = {

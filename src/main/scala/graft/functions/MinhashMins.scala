@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * permutations `(a_i·(h mod P) + b_i) mod P` across units
   * ([[PortableHash.permuted]]'s math, same fixed coefficients).
   *
-  * Why native: the composed form ([[graft.operators.Dedup]]'s
-  * `minhashFromAggComposed`) EXPLODES every document into (id, unit)
+  * Why native: the composed form (the specs' parity twin
+  * `Dedup.minhashFromAggComposed`) EXPLODES every document into (id, unit)
   * rows and shuffles them into a k-column min aggregate — a full
   * exchange of the tokenized/shingled corpus that exists only to take
   * per-document minima. That exchange fronts the entire LSH family:

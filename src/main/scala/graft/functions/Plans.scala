@@ -65,12 +65,17 @@ object Plans {
   private def broadcastLimit: Long =
     org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
 
+  /** Row ceiling for hinting a side whose size the optimizer cannot
+    * see (a checkpoint-backed frame carries no statistics) by its row
+    * count alone: at or below it the side goes through
+    * [[broadcastHint]], above it the join is left to Catalyst. */
+  val BroadcastRowCeiling: Long = 10000000L
+
   /** Hint a build side the operator expects to be small (a pair
     * family's self-join side, a test/ref/change set): it removes
     * blocking-key skew entirely while the side fits. Applied unless the
     * session turns broadcasting off, in which case the join falls back
-    * to Catalyst's shuffle hash/sort-merge join (pair skew then wants
-    * [[graft.operators.SkewJoin]]-style salting on hot keys). */
+    * to Catalyst's shuffle hash/sort-merge join. */
   def broadcastHint(df: DataFrame): DataFrame =
     if (broadcastLimit > 0) broadcast(df) else df
 

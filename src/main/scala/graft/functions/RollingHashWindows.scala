@@ -58,7 +58,8 @@ object RollingHashWindows {
   // The two public-constant hash lines (Mersenne-ish primes below 2^31,
   // multipliers ~10^6): every product stays under 2^62, every 3-term
   // recurrence sum under 2^33 — all exact int64. MUST stay equal to the
-  // composed form's constants in Dedup.rollingWindowDigestsComposed.
+  // composed form's constants in the specs' parity twin
+  // Dedup.rollingWindowDigestsComposed.
   val M1 = 2147483647L
   val C1 = 1000003L
   val M2 = 2147483629L

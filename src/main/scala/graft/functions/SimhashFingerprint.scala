@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * conditional-sum aggregate — a full exchange of tokenized corpus
   * data that exists only to sum per-document counters (q23's whole
   * plan, q40's signature stage, the q91/q97 screen fronts). The
-  * row-local form (`simhashExprComposed`) avoids the shuffle but runs
+  * row-local form (the specs' twin `simhashExprComposed`) avoids the shuffle but runs
   * `bits` interpreted `aggregate` folds per document — O(n·bits)
   * lambda steps. This expression computes the fingerprint in ONE walk
   * per row (hash each token once, bump `bits` counters) inside

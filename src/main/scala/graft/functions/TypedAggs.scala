@@ -40,9 +40,6 @@ object TypedAggs {
     override def outputEncoder: Encoder[String] = Encoders.STRING
   }
 
-  /** Mode as a Column aggregate: `df.groupBy(...).agg(modeOf(col("c")))`. */
-  def modeOf(c: Column): Column = udaf(ModeAggregator).apply(c)
-
   /** Misra–Gries heavy hitters with `k` counters: every item whose true
     * frequency exceeds n/k is GUARANTEED present, and each reported
     * count undercounts by at most n/k (merge preserves the bound —
@@ -85,10 +82,6 @@ object TypedAggs {
     override def bufferEncoder: Encoder[Map[String, Long]] = mapEncoder
     override def outputEncoder: Encoder[Seq[(String, Long)]] = ExpressionEncoder()
   }
-
-  /** Heavy hitters as a Column aggregate. */
-  def heavyHittersOf(c: Column, k: Int): Column =
-    udaf(new HeavyHittersAggregator(k)).apply(c)
 
   /** The k smallest DISTINCT long values per group, as an ascending
     * sequence — the KMV sketch state computed as ONE partial-combined

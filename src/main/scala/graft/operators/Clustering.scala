@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import graft.functions.Plans
 
 /** Connected components over a near-duplicate pair list — the step that
   * turns pairwise matches (q22/q24/q29/q30 output) into dedup GROUPS:
@@ -101,7 +102,7 @@ object Clustering {
     // only shuffle left is the vertex-sized partial-aggregated groupBy.
     val nVertices = labels.count()
     val hintLabels: DataFrame => DataFrame =
-      if (nVertices <= 10000000L) broadcast(_) else identity
+      if (nVertices <= Plans.BroadcastRowCeiling) Plans.broadcastHint(_) else identity
 
     var changed = 1L
     var iter = 0

@@ -146,16 +146,9 @@ object Decontaminate {
       .withColumn("contaminated", col("hit_frac") >= threshold)
   }
 
-  /** The bloom filter over a test set's gram hashes, serialized — build
-    * once (one distributed aggregation), reuse across batch runs or
-    * ship to a stream (see [[streamCleanBloom]]). */
-  def buildTestBloom(test: DataFrame, testTextCol: String, n: Int,
-      fpp: Double = 0.01): Array[Byte] =
-    bloomFromGrams(testGramSet(test, testTextCol, n), fpp)
-
-  /** Bloom over an ALREADY-built gram-hash frame — callers that also
-    * consume the grams themselves pass a checkpointed frame so the test
-    * side is derived once. */
+  /** The serialized bloom filter over an ALREADY-built gram-hash frame
+    * — callers that also consume the grams themselves pass a
+    * checkpointed frame so the test side is derived once. */
   private def bloomFromGrams(grams: DataFrame, fpp: Double): Array[Byte] = {
     import org.apache.spark.sql.graftbridge.BloomBridge
     val expected = math.max(1L, grams.count())

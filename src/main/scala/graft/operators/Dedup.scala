@@ -69,9 +69,8 @@ object Dedup {
     * merged duplicate ids into one signature over the UNION of their
     * units. Every engine caller feeds a primary-key id (doc_id /
     * vec_id — the testdata invariant the parity specs cover); on a
-    * corpus with repeated ids, dedupe ids first or use
-    * [[minhashFromAggComposed]], or downstream band joins see inflated
-    * duplicate signature rows. */
+    * corpus with repeated ids, dedupe ids first, or downstream band
+    * joins see inflated duplicate signature rows. */
   private def minhashFrom(df: DataFrame, idCol: String, units: Column, k: Int,
       nonEmpty: Column): DataFrame =
     df.filter(nonEmpty)
@@ -81,20 +80,6 @@ object Dedup {
             org.apache.spark.sql.graftbridge.ColumnBridge.expression(units), k))
           .as("_mh"))
       .select(col(idCol) +: (0 until k).map(i => col("_mh")(i).as(s"mh$i")): _*)
-
-  /** The explode → shuffle → k-column min AGGREGATION form
-    * [[minhashFrom]] replaced — kept as the parity reference the
-    * row-local form is property-tested against, and as the per-GROUP
-    * aggregator's building block ([[sourceOverlapMinhash]] composes it
-    * differently). */
-  private[graft] def minhashFromAggComposed(df: DataFrame, idCol: String,
-      units: Column, k: Int): DataFrame = {
-    val exploded = df
-      .select(col(idCol), explode(units).as("u"))
-      .withColumn("h", PortableHash.md5Hash32(col("u")))
-    val mins = (0 until k).map(i => min(PortableHash.permuted(col("h"), i)).as(s"mh$i"))
-    exploded.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-  }
 
   /** MinHash signature over n-token shingles — the shingle→minhash
     * stage of the canonical near-dup pipeline. A document shorter than
@@ -575,38 +560,6 @@ object Dedup {
       .select(col(idCol), col("dup_of"), col("est_milli"))
   }
 
-  /** Compact a stored signature index's `dir/data` (simhash AND minhash
-    * share the layout — flat signature parquet, params/meta untouched):
-    * each [[appendToSimhashIndex]]/[[appendToMinhashIndex]] ingest adds
-    * batch-sized files, and a screen's corpus-side scan eventually pays
-    * more in file-open fan-in than in signature bytes. Compaction
-    * rewrites the data into `nFiles` files with row content untouched,
-    * so screens before and after are identical (DedupSpec asserts it).
-    * The rewrite IS a full data pass — but the data is the signature
-    * shadow (~0.01% of corpus bytes), so even at 100 TB of corpus this
-    * touches ~10 GB; run it on the retrieval-compaction cadence. */
-  def compactSignatureIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, nFiles: Int = 1): Unit = {
-    require(nFiles >= 1, "nFiles must be >= 1")
-    // single-writer: without the lock, an append committing between
-    // this read and the swap would be silently dropped by the swap
-    // while meta's watermark says its ids are indexed
-    StoredIndex.withAppendLock(spark, dir) {
-      // crash fence: folding data while a crashed append's partial
-      // part-files sit behind a pending meta would commit the partial
-      // batch and erase the evidence (round-14 advice, all compactions)
-      StoredIndex.requireNotPending(spark, dir)
-      // durable swap: the replacement is fully on disk before the old
-      // copy is deleted (a checkpoint-then-overwrite would hold the only
-      // copy in non-durable executor blocks mid-rewrite)
-      StoredIndex.swapRewrite(spark, s"$dir/data") { tmp =>
-        ForkFreeLocalFileSystem.write(SchemaReader.readArtifact(spark, s"$dir/data")
-          .repartition(nFiles))
-          .parquet(tmp)
-      }
-    }
-  }
-
   /** SimHash fingerprint over the low `bits` bits of the token hash:
     * per-bit ±1 sums, sign → bit. Returns (id, simhash). Same
     * unique-id precondition as [[minhashFrom]]: one row per input row —
@@ -620,27 +573,6 @@ object Dedup {
     // pinned in spec).
     df.filter(col(textCol).isNotNull)
       .select(col(idCol), simhashExpr(col(textCol), bits).as("simhash"))
-
-  /** The explode → shuffle → bits-column conditional-sum AGGREGATION
-    * form [[simhash]] replaced — kept as the parity reference the
-    * row-local forms are property-tested against. */
-  private[graft] def simhashAggComposed(df: DataFrame, idCol: String,
-      textCol: String, bits: Int = 16): DataFrame = {
-    // md5Hash32 provides 32 hash bits; beyond that every fingerprint
-    // bit is constant 0 and the banded join silently degenerates
-    require(bits >= 1 && bits <= 32, s"simhash needs 1 <= bits <= 32, got $bits")
-    val exploded = df
-      .select(col(idCol), explode(distinctTokens(col(textCol))).as("tok"))
-      .withColumn("h", PortableHash.md5Hash32(col("tok")))
-    val bitSums = (0 until bits).map { j =>
-      sum(when(shiftright(col("h"), j) % 2 === 1, 1L).otherwise(-1L)).as(s"b$j")
-    }
-    val sums = exploded.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-    val fp: Column = (0 until bits)
-      .map(j => when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-      .reduce(_ + _)
-    sums.select(col(idCol), fp.as("simhash"))
-  }
 
   /** ROW-LOCAL SimHash: the same fingerprint as [[simhash]] computed
     * entirely inside one projection (array HOFs over the distinct
@@ -659,26 +591,6 @@ object Dedup {
       graft.functions.SimhashFingerprint(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(
           distinctTokens(text)), bits))
-
-  /** The interpreted bits-pass composition [[simhashExpr]] replaced
-    * (bits `aggregate` folds per document) — the row-local parity
-    * reference, property-tested equal to the native expression and to
-    * [[simhashAggComposed]]. */
-  private[graft] def simhashExprComposed(text: Column, bits: Int = 16): Column = {
-    val hs = transform(distinctTokens(text), t => PortableHash.md5Hash32(t))
-    val fp: Column = (0 until bits).map { j =>
-      val bitSum = aggregate(hs, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, j) % 2 === 1, lit(1L)).otherwise(lit(-1L)))
-      when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    // Null text propagates to a NULL fingerprint rather than silently
-    // collapsing to 0 (the naive evaluation: aggregate over a null
-    // array → null bitSum → otherwise(0) for every bit), which would
-    // make all null-text docs mutually "identical" and collide with any
-    // doc whose true fingerprint is 0. Matches the aggregation form,
-    // where a null-text row produces no fingerprint at all.
-    when(text.isNotNull, fp)
-  }
 
   /** Edit-distance near-duplicate pairs within a blocking key: all
     * (a, b), a < b, with levenshtein(s_a, s_b) ≤ `maxDist` — the fuzzy
@@ -913,34 +825,6 @@ object Dedup {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
       graft.functions.RollingHashWindows(
         org.apache.spark.sql.graftbridge.ColumnBridge.expression(toks), k))
-
-  /** The composed (pure-`functions._`) form [[rollingWindowDigests]]
-    * natively replaces — kept as the parity pin's reference
-    * (DedupSpec asserts bit-equality on random docs, short docs and
-    * null-token edges). The `aggregate` fold here runs k interpreted
-    * multiply-adds per position (O(n·k) per document, boxed
-    * accumulators); the native expression computes identical values in
-    * O(n + k) via the backward rolling recurrence. */
-  private[operators] def rollingWindowDigestsComposed(textCol: String, k: Int): Column = {
-    import graft.functions.ArrayOps
-    val (m1, m2) = (2147483647L, 2147483629L)
-    def pows(c: Long, m: Long): Seq[Long] =
-      Iterator.iterate(1L)(x => x * c % m).take(k).toSeq
-    val pw1 = typedLit(pows(1000003L, m1))
-    val pw2 = typedLit(pows(1000033L, m2))
-    ArrayOps.bind(
-      transform(tokens(col(textCol)), t => graft.functions.PortableHash.md5Hash32(t))) { h =>
-      when(size(h) >= k,
-        transform(sequence(lit(1), size(h) - (k - 1)), p => {
-          def line(pw: Column, m: Long): Column =
-            aggregate(sequence(lit(0), lit(k - 1)), lit(0L),
-              (acc, j) =>
-                acc + element_at(h, p + j) % m * element_at(pw, j + 1) % m) % m
-          line(pw1, m1) * lit(4294967296L) + line(pw2, m2)
-        }))
-        .otherwise(array().cast("array<bigint>"))
-    }
-  }
 
   def dupSpansRolling(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
@@ -1336,13 +1220,6 @@ object Dedup {
     rebuildWithout(docs, idCol, textCol, covered)
   }
 
-  /** Position multiplier for the winnowing (hash, pos) encoding:
-    * comb = h·2^31 + pos packs (min hash, tie → leftmost pos) into one
-    * BIGINT so a single window `min` implements the lexicographic rule
-    * in any engine. h < 2^32 ⇒ comb < 2^63 (no overflow); positions are
-    * bounded at 2^31 tokens per document — beyond any real document. */
-  private val WinnowPosMul = 2147483648L // 2^31
-
   /** Row-local winnowed fingerprint array of ONE document (Schleimer,
     * Wilkerson & Aiken, SIGMOD 2003 — the MOSS algorithm): hash every
     * k-token gram, slide a window of `w` consecutive gram hashes, keep
@@ -1355,33 +1232,6 @@ object Dedup {
     * window); documents shorter than a gram contribute none. */
   def winnowFingerprintArray(text: Column, kGram: Int, w: Int): Column =
     graft.functions.WinnowMinFingerprints.of(tokens(text), kGram, w)
-
-  /** The composed (pure-`functions._`) form [[winnowFingerprintArray]]
-    * natively replaces — kept as the parity pin's reference
-    * (WinnowingSpec asserts bit-equality, order included). The gram
-    * strings and the O(n·w) interpreted least()-chain here are what the
-    * native one-pass deque form removes. */
-  private[operators] def winnowFingerprintArrayComposed(text: Column, kGram: Int, w: Int): Column =
-    graft.functions.ArrayOps.bind(tokens(text)) { toks =>
-      val combs = when(size(toks) >= kGram,
-        transform(sequence(lit(0), size(toks) - kGram),
-          i => PortableHash.md5Hash32(concat_ws(" ", slice(toks, i + 1, lit(kGram))))
-            * WinnowPosMul + i.cast("long")))
-        .otherwise(array().cast("array<bigint>"))
-      graft.functions.ArrayOps.bind(combs) { cs =>
-        val ng = size(cs)
-        val starts = when(ng >= w, sequence(lit(0), ng - w))
-          .otherwise(when(ng >= 1, array(lit(0)))
-            .otherwise(array().cast("array<int>")))
-        // window min as least() over w try_element_at probes — no
-        // per-window array allocation (slice+array_min measured ~2×
-        // slower); for the single clipped window of a short document
-        // the out-of-range probes are null and least() skips nulls
-        array_distinct(transform(starts,
-          s => shiftright(
-            least((1 to w).map(j => try_element_at(cs, s + j)): _*), 31)))
-      }
-    }
 
   /** Winnowed fingerprints as rows: (idCol, fp), distinct per document.
     * Guarantees: any shared run of ≥ w+k-1 tokens between two documents

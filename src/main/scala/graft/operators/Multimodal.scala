@@ -44,11 +44,6 @@ object Multimodal {
         octet_length(col("media")).cast("long").as("size_bytes"),
         md5(col("media")).as("content_hash")))
 
-  /** Codegen'd metadata projection (no decode needed). */
-  def extractMeta(df: DataFrame, binCol: String): DataFrame =
-    df.withColumn("size_bytes", octet_length(col(binCol)).cast("long"))
-      .withColumn("content_hash", md5(col(binCol)))
-
   /** STUB DECODER — the default [[MediaDecoder]]'s float face
     * ([[MediaDecoders.WindowSums]], where the body now lives):
     * "decodes" a binary payload into a `dim`-float feature vector by
@@ -99,32 +94,6 @@ object Multimodal {
     * instead, so a real codec swaps in without touching it. */
   def stubFeaturesMicro(payload: Column, dim: Int): Column =
     MediaDecoders.WindowSums.featuresMicro(payload, dim)
-
-  /** Composed-functions reference implementation of
-    * [[stubFeaturesMicro]] — kept ONLY as the parity pin for the
-    * native [[graft.functions.CharWindowSums]] (MultimodalSpec asserts
-    * element-wise equality, multi-byte inputs included). The decoded
-    * code array is let-bound (ArrayOps.bind); un-bound, the per-char
-    * split+ascii subtree re-evaluates once per window (dim× the decode
-    * cost — 4.1 s vs 2.2 s for q164 at sf0.1). The native expression
-    * replaces even the bound form because the per-character string
-    * array and the interpreted window folds still dominated the
-    * media-dedup corpus pass. */
-  private[graft] def stubFeaturesMicroComposed(payload: Column, dim: Int): Column =
-    graft.functions.ArrayOps.bind(
-      transform(split(payload.cast("string"), ""),
-        c => ascii(c).cast("long"))) { codes =>
-      val n = length(payload.cast("string"))
-      val w = greatest(lit(1), floor(n / lit(dim)).cast("int"))
-      transform(sequence(lit(0), lit(dim - 1)), j => {
-        val from = j * w
-        val len = greatest(least(from + w, n) - from, lit(0))
-        when(len > 0,
-          aggregate(slice(codes, from + lit(1), len), lit(0L),
-            (acc, x) => acc + x))
-          .otherwise(lit(0L))
-      })
-    }
 
   /** Banded NEAR-DUP pairs over media payloads — the media column
     * family's answer to the text near-dup suite: candidates are pairs
@@ -319,6 +288,14 @@ object Multimodal {
       dir: String, df: DataFrame, idCol: String, binCol: String,
       maxL1: Long): DataFrame = {
     val (_, dim, bandSize) = readScreenMeta(spark, dir)
+    nearDupAgainstStoredBands(spark, dir, df, idCol, binCol, maxL1, dim, bandSize)
+  }
+
+  /** [[mediaNearDupAgainstStored]] under geometry the caller has
+    * already read from the index `meta` (and fenced). */
+  private def nearDupAgainstStoredBands(spark: org.apache.spark.sql.SparkSession,
+      dir: String, df: DataFrame, idCol: String, binCol: String,
+      maxL1: Long, dim: Int, bandSize: Int): DataFrame = {
     val probeF = featsFrame(df, idCol, binCol, dim).localCheckpoint()
     bandJoinVerify(
       broadcastBands(sideA(bandsFrame(probeF, dim, bandSize)),
@@ -371,7 +348,8 @@ object Multimodal {
     val (bloom, dim, bandSize) = readScreenMeta(spark, dir)
     val suspects = df.filter(col(binCol).isNotNull &&
       bloomHit(col(binCol), bloom, dim, bandSize))
-    val best = mediaNearDupAgainstStored(spark, dir, suspects, idCol, binCol, maxL1)
+    val best = nearDupAgainstStoredBands(spark, dir, suspects, idCol, binCol, maxL1,
+        dim, bandSize)
       .groupBy(col("id_a"))
       .agg(min(struct(col("l1"), col("id_b"))).as("_b"))
       .select(col("id_a").as(idCol),

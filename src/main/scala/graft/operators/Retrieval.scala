@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, StructField}
 
 import graft.functions.Plans
@@ -339,29 +338,13 @@ object Retrieval {
     // before the explode removes the window's Exchange + Sort from
     // every stored-retrieval probe. Values identical (same
     // left-to-right integer prefix sum; parity pinned in RetrievalSpec
-    // against the window form below).
+    // against the window-form twin decodeSegmentsComposed).
     posts
       .withColumn("_seg", segCol)
       .select(col("token"), col("_seg"), col("df_t"),
         explode(graft.functions.GapDecodePostings.of(col("postings"))).as("_p"))
       .select(col("token"), col("_p.id").as("id"), col("_p.tf").as("tf"),
         col("df_t"), col("_seg"))
-  }
-
-  /** The window-form decode [[decodeSegments]] replaced (running sum
-    * over the posexploded posting stream — Exchange + Sort + Window
-    * per probe) — the parity reference RetrievalSpec pins the in-row
-    * native decode against. */
-  private[graft] def decodeSegmentsComposed(posts: DataFrame): DataFrame = {
-    val segCol = if (posts.columns.contains("seg")) col("seg") else lit(0L)
-    posts
-      .withColumn("_seg", segCol)
-      .select(col("token"), col("_seg"), col("df_t"),
-        posexplode(col("postings")).as(Seq("_pos", "_p")))
-      .withColumn("id", sum(col("_p.gap"))
-        .over(Window.partitionBy(col("token"), col("_seg")).orderBy(col("_pos"))))
-      .select(col("token"), col("id"), col("_p.tf").as("tf"), col("df_t"),
-        col("_seg"))
   }
 
   /** BM25 top-k against the PERSISTED index: reads the query terms'

@@ -267,16 +267,6 @@ object Similarity {
         col("label_b"), col("cos_sim"), col("_r").cast("long").as("neg_rank"))
   }
 
-  /** [[hardNegatives]] with [[autoSignBits]] sizing — same linear-work
-    * rationale as [[bucketedNearDupPairsAuto]]: candidate enumeration
-    * stays ~targetBucket per anchor as the corpus grows instead of
-    * n/2^nBits at a frozen width. */
-  def hardNegativesAuto(df: DataFrame, idCol: String, vecCol: String,
-      labelCol: String, anchorPred: Column, k: Int,
-      targetBucket: Long = 64L): DataFrame =
-    hardNegatives(df, idCol, vecCol, labelCol, anchorPred, k,
-      autoSignBits(df, vecCol, targetBucket))
-
   /** IVF ANN with a DETERMINISTIC coarse quantizer: centroids are the
     * `nCentroids` lowest-id corpus vectors, and routing is by (rounded)
     * cosine affinity — spherical IVF, the standard layout for a cosine
@@ -1017,24 +1007,6 @@ object Similarity {
         .select(col(idCol), col("codes"), col("cell")), dir, "append")
     }
 
-  /** TRAINED twin of [[appendToIvfPqIndexDeterministic]]: squared-L2
-    * routing through the stored k-means coarse centroids
-    * ([[appendToIvfIndex]]'s move) + encoding against the stored
-    * trained codebook — the frozen-model maintenance path for the
-    * production IVFADC index. Same id-discipline validation. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, batch: DataFrame, idCol: String, vecCol: String): Unit =
-    StoredIndex.guardedAppend(spark, dir, batch, idCol) {
-      // both are eager driver reads (see appendToIvfIndexDeterministic)
-      (loadPqCodebook(spark, dir), storedCenters(spark, dir))
-    } { case (model, centers) =>
-      val assigned = batch
-        .select(col(idCol), asDouble(col(vecCol)).as("_vec"))
-        .withColumn("cell", array_min(l2Cells(col("_vec"), centers)).getField("cell"))
-      writeCells(pqEncode(assigned, "_vec", model)
-        .select(col(idCol), col("codes"), col("cell")), dir, "append")
-    }
-
   /** Probe a composed IVF+PQ index: queries route to their `nProbe`
     * best cells through the stored coarse centroids (directory-level
     * partition pruning on the data scan, the q84 contract), and the
@@ -1061,59 +1033,6 @@ object Similarity {
       .withColumn("_r", row_number().over(rank))
       .filter(col("_r") <= topK)
       .drop("_r")
-  }
-
-  /** Compact the `cell=` data directories of a stored IVF / IVF-PQ
-    * index (any of the four writers — deterministic/trained, plain/PQ:
-    * they share the `dir/data` partitioned-by-cell layout). Repeated
-    * [[appendToIvfIndexDeterministic]]-family ingests leave one file
-    * per batch per cell; past a point the probe's scan pays more in
-    * file-open fan-in than in bytes. This is the merge half of that
-    * log-structured design, and it is CELL-SELECTIVE: only cells whose
-    * file count exceeds `maxFilesPerCell` are rewritten (dynamic
-    * partition overwrite — untouched cells' files are not read, not
-    * rewritten), so at 100 TB a compaction pass costs the crowded
-    * cells only, not an index rewrite. Row content is untouched —
-    * probes before and after are identical (SimilaritySpec asserts
-    * bit-equality), centroids/codebook/meta are not involved. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      maxFilesPerCell: Int = 1): Unit = {
-    require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
-    // single-writer: files appended into a crowded cell between the
-    // snapshot below and the dynamic-overwrite commit would be wiped
-    // with the cell — the lock makes that append fail loudly instead
-    StoredIndex.withAppendLock(spark, dir) {
-      // crash fence: a crashed append may have left a PARTIAL cell file
-      // behind a pending meta — folding it in would commit the partial
-      // batch and erase the evidence (round-14 advice, all compactions)
-      StoredIndex.requireNotPending(spark, dir)
-      val dataPath = new org.apache.hadoop.fs.Path(s"$dir/data")
-      val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val crowded = fs.listStatus(dataPath).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-        .filter(s => fs.listStatus(s.getPath)
-          .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerCell)
-        .map(_.getPath.getName.stripPrefix("cell=").toInt)
-      if (crowded.nonEmpty) {
-        val merged = storedCells(spark, dir)
-          .filter(col("cell").isin(crowded: _*)) // partition-pruned read
-          .repartition(col("cell")) // one writer task per cell → one file
-          .localCheckpoint() // stable snapshot of the cells being replaced
-        // Durability note: dynamic partition overwrite STAGES the
-        // replacement files on durable storage before job commit, so no
-        // point in the rewrite holds the data in memory only. The commit
-        // itself is per-partition delete-then-rename, so a crash MID
-        // COMMIT can leave a cell deleted with its replacement still in
-        // the dot-prefixed staging dir (probes skip it silently) —
-        // recover by finishing the rename from .spark-staging-*, or
-        // re-run the compaction. The flat signature/postings compactions
-        // use StoredIndex.swapRewrite, whose failure mode is loud
-        // instead (complete copy always at path or path_tmp).
-        ForkFreeLocalFileSystem.write(merged).mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic") // replace ONLY crowded cells
-          .partitionBy("cell").parquet(s"$dir/data")
-      }
-    }
   }
 
   // --------------------------------------------------------------------

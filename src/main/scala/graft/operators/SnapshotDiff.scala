@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus snapshot maintenance: diff two versions of a keyed document
@@ -43,15 +43,6 @@ object SnapshotDiff {
           .when(!(col("old_digest") <=> col("new_digest")), lit("changed")))
       .filter(col("status").isNotNull)
       .select(col(idCol), col("status"), col("old_digest"), col("new_digest"))
-  }
-
-  /** One row of per-status counts over [[diff]] — the snapshot-delta
-    * summary a corpus build logs per version bump. */
-  def diffStats(older: DataFrame, newer: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    def n(s: String): Column =
-      sum(when(col("status") === s, 1L).otherwise(0L)).as(s"n_$s")
-    diff(older, newer, idCol, textCol).agg(n("added"), n("removed"), n("changed"))
   }
 
   /** Apply a change batch to a base snapshot: rows of `changes` with

@@ -92,18 +92,6 @@ object TextAnalysis {
     PortableRound.round4(lit(0.4) * lengthScore + lit(0.3) * diversity + lit(0.3) * stopDensity)
   }
 
-  /** The three-pass composition [[qualityScore]] replaced (tokenize ×3
-    * + interpreted stopword filter) — the parity reference
-    * TextAnalysisSpec pins the fused form against. */
-  private[graft] def qualityScoreComposed(text: Column): Column = {
-    val n = tokenCount(text).cast("double")
-    val lengthScore = least(lit(1.0), n / lit(100.0))
-    val diversity = distinctTokenCount(text).cast("double") / n
-    val stopDensity = least(lit(1.0),
-      wordHits(text, stopwords("en")).cast("double") / n * lit(5.0))
-    PortableRound.round4(lit(0.4) * lengthScore + lit(0.3) * diversity + lit(0.3) * stopDensity)
-  }
-
   /** Order-independent bag-of-tokens fingerprint: sum of md5-derived
     * token hashes (with multiplicity) mod P. Content-sensitive, cheap,
     * reproducible in the SQL oracle. */

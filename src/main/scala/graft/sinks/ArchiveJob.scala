@@ -2,8 +2,8 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{coalesce, lit}
-import org.apache.spark.sql.types.{DateType, StructField}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
@@ -147,24 +147,18 @@ object ArchiveJob {
     import org.apache.spark.sql.functions.{col, to_date}
     rotate(spark, liveDir) { (df, expected) =>
       val keyed = df.withColumn("date_key", to_date(col(dateCol)))
+      // the partition directory of each affected date_key; a null one
+      // (null or unparseable dateCol) lands in Hive's default partition,
+      // which the verify must count too, or it under-counts `after` and
+      // throws AFTER a successful append (live files kept, re-run
+      // double-appends)
       val affected = keyed.select("date_key").distinct().collect().map(_.get(0))
-      // null date_keys (null or unparseable dateCol) land in the default
-      // partition; `isin(null)` never matches them, which would make the
-      // post-append verify under-count `after` and throw AFTER a successful
-      // append (live files kept, re-run double-appends). Match them with an
-      // explicit isNull arm instead.
-      val (nullKeys, realKeys) = affected.partition(_ == null)
-      def affectedPred: org.apache.spark.sql.Column = {
-        val base =
-          if (realKeys.isEmpty) lit(false) else col("date_key").isin(realKeys: _*)
-        if (nullKeys.nonEmpty) base || col("date_key").isNull else base
-      }
+        .map(k => new Path(historicalDir,
+          s"date_key=${Option(k).getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)}"))
+      // footer row sums of those directories: no Spark job
       def affectedCount(): Long = {
-        val fs = new Path(historicalDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new Path(historicalDir))) 0L
-        else SchemaReader.readArtifact(spark, historicalDir,
-          Some(StructField("date_key", DateType))).filter(affectedPred).count()
+        val fs = ForkFreeLocalFileSystem.get(spark, historicalDir)
+        affected.filter(fs.exists).map(d => footerRows(spark, d.toString)).sum
       }
       val prior = affectedCount()
       ForkFreeLocalFileSystem.write(keyed.sortWithinPartitions(sortCol))

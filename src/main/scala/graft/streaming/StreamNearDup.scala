@@ -10,11 +10,6 @@ import graft.sources.SchemaReader
 /** One banded fingerprint occurrence flowing into the stateful stage. */
 case class BandEvent(docId: Long, sim: Long, bandId: Int, bandVal: Long)
 
-/** [[BandEvent]] with the document's event time — the evicting variant
-  * keys retention off it. */
-case class BandEventT(docId: Long, sim: Long, bandId: Int, bandVal: Long,
-    ts: java.sql.Timestamp)
-
 /** A detected near-duplicate: `docId` collided with the earlier-seen
   * `dupOf` in band `bandId` at the given hamming distance. A document
   * within `maxHamming` of an earlier one emits one collision per
@@ -163,85 +158,6 @@ object StreamNearDup {
       .select(col("docId"), col("_cid").as("dupOf"), col("hamming"),
         col("bandId").cast("int").as("bandId"))
       .as[Collision]
-  }
-
-  /** EVICTING variant of [[collisions]] for unbounded-key streams: kept
-    * fingerprints expire once the event-time watermark passes their
-    * timestamp + `retention`, so bucket state is bounded by the stream's
-    * RATE over the retention window instead of its lifetime key space —
-    * the difference between a crawl that runs for a day and one that
-    * runs forever. Dup detection becomes windowed ("within `retention`
-    * of the template"), which is the semantic an unbounded stream wants
-    * anyway: year-old templates shouldn't suppress today's documents.
-    *
-    * Mechanics: the input is watermarked on `tsCol` by `watermarkDelay`;
-    * expired entries are dropped on every bucket invocation (data-driven
-    * pass), and an [[GroupStateTimeout.EventTimeTimeout]] re-armed at
-    * the earliest pending expiry clears IDLE buckets too — state for a
-    * bucket that never sees another event still gets removed, which
-    * NoTimeout state never would. `maxKeptPerBucket` still applies
-    * within the window. */
-  def collisionsEvicting(df: DataFrame, idCol: String, textCol: String,
-      tsCol: String, retention: java.time.Duration,
-      watermarkDelay: java.time.Duration,
-      bits: Int = 16, bandBits: Int = 4, maxHamming: Int = 3,
-      maxKeptPerBucket: Int = 64): Dataset[Collision] = {
-    require(bits % bandBits == 0, "bits must be divisible by bandBits")
-    val nBands = bits / bandBits
-    require(maxHamming < nBands,
-      s"pigeonhole completeness needs maxHamming < $nBands bands; got $maxHamming")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val retMs = retention.toMillis
-    val events = df
-      .filter(col(textCol).isNotNull && col(tsCol).isNotNull &&
-        col(idCol).cast("long").isNotNull)
-      .select(col(idCol).cast("long").as("docId"),
-        Dedup.simhashExpr(col(textCol), bits).as("sim"),
-        col(tsCol).cast("timestamp").as("ts"))
-      // watermark AFTER the cast/rename: casting a watermarked column
-      // strips its event-time metadata and the stateful op would reject
-      // the EventTimeTimeout ("not supported without watermark")
-      .withWatermark("ts", s"${watermarkDelay.toMillis} milliseconds")
-      .select(col("docId"), col("sim"), col("ts"),
-        explode(bandStructsFor(col("sim"), nBands, bandBits)).as("band"))
-      .select(col("docId"), col("sim"),
-        col("band.bandId").as("bandId"), col("band.bandVal").as("bandVal"),
-        col("ts"))
-      .as[BandEventT]
-    events
-      .groupByKey(e => (e.bandId, e.bandVal))
-      .flatMapGroupsWithState[List[(Long, Long, Long)], Collision](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (_, it, state) =>
-          val wm = state.getCurrentWatermarkMs()
-          // expire first: a kept fingerprint is live while wm <= ts+retention
-          var seen = state.getOption.getOrElse(Nil)
-            .filter { case (_, _, ts) => ts + retMs >= wm }
-          val out = List.newBuilder[Collision]
-          it.toSeq.sortBy(_.docId).foreach { e =>
-            val hit = seen.iterator
-              // same self-collision guard as [[collisions]]
-              .filter { case (id0, _, _) => id0 != e.docId }
-              .map { case (id0, sim0, _) =>
-                (id0, java.lang.Long.bitCount(e.sim ^ sim0).toLong) }
-              .filter(_._2 <= maxHamming)
-              .reduceOption((a, b) =>
-                if (a._2 < b._2 || (a._2 == b._2 && a._1 <= b._1)) a else b)
-            hit.foreach { case (id0, d) =>
-              out += Collision(e.docId, id0, d, e.bandId) }
-            if (seen.size < maxKeptPerBucket && !seen.exists(_._1 == e.docId))
-              seen = seen :+ ((e.docId, e.sim, e.ts.getTime))
-          }
-          if (seen.isEmpty) state.remove()
-          else {
-            state.update(seen)
-            // idle-bucket cleanup: fire when the earliest entry expires
-            val next = seen.map(_._3).min + retMs + 1
-            state.setTimeoutTimestamp(math.max(next, wm + 1))
-          }
-          out.result().iterator
-      }
   }
 
   /** STORED-INDEX winnow screening for streams — the streaming face of

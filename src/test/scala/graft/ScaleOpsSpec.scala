@@ -2,26 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Multimodal, SkewJoin, StoredIndex}
+import graft.operators.{Dedup, Multimodal, StoredIndex}
 import graft.sources.Bucketed
-
-class SkewJoinSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("salted join returns exactly the plain join's rows on skewed data") {
-    // one hot key carrying 90% of rows
-    val large = ((1 to 900).map(_ => ("hot", 1.0)) ++ (1 to 100).map(i => (s"k$i", 2.0)))
-      .toDF("k", "v")
-    val dim = (Seq("hot") ++ (1 to 100).map(i => s"k$i")).zipWithIndex
-      .map { case (k, i) => (k, s"name$i") }.toDF("k", "name")
-    val plain = large.join(dim, Seq("k")).groupBy("k").count()
-      .as[(String, Long)].collect().toMap
-    val salted = SkewJoin.saltedEqui(large, dim, Seq("k"), salt = 8)
-      .groupBy("k").count().as[(String, Long)].collect().toMap
-    salted shouldBe plain
-    salted("hot") shouldBe 900L
-  }
-}
 
 class BucketedSpec extends SparkSpec {
 
@@ -296,27 +278,14 @@ class MultimodalSpec extends SparkSpec {
     Seq((1L, p1), (2L, p2), (3L, p3), (4L, p4))
       .toDF("doc_id", "media").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    // 1. metadata is BYTE-true: size counts raw bytes (not decoded
-    //    chars — the invalid sequences would collapse under a decode),
-    //    and the content hash is the md5 of the raw bytes
-    val meta = Multimodal.extractMeta(df, "media")
-      .select("doc_id", "size_bytes", "content_hash")
-      .as[(Long, Long, String)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    meta(1L)._1 shouldBe 16L
-    val md = java.security.MessageDigest.getInstance("MD5")
-    meta(1L)._2 shouldBe md.digest(p1).map("%02x".format(_)).mkString
-    // identical bytes hash equal; the one-byte edit does not
-    meta(3L)._2 shouldBe meta(1L)._2
-    meta(2L)._2 should not be meta(1L)._2
-    // 2. the decode stage consumes RAW bytes: the distributed
+    // 1. the decode stage consumes RAW bytes: the distributed
     //    mapPartitions codec equals the driver-side stub on the same
     //    byte array (this is the seam a JPEG/PCM decoder replaces)
     val feats = Multimodal.fakeDecodeFeatures(df, "doc_id", "media", dim = 4)
       .select("doc_id", "features").as[(Long, Seq[Float])].collect().toMap
     feats(1L) shouldBe Multimodal.stubDecode(p1, 4).toSeq
     feats(4L) shouldBe Multimodal.stubDecode(p4, 4).toSeq
-    // 3. band → verify on the binary payloads: the exact dup verifies
+    // 2. band → verify on the binary payloads: the exact dup verifies
     //    hash-equal at l1=0; the tail edit decodes to an equal-length
     //    char stream differing in ONE code point by 1 (the invalid
     //    prefix decodes identically on both sides), so it verifies at
@@ -330,7 +299,7 @@ class MultimodalSpec extends SparkSpec {
       (1L, 2L, 1L, false),
       (1L, 3L, 0L, true),
       (2L, 3L, 1L, false))
-    // 4. the stored-index round trip (build over the binary corpus,
+    // 3. the stored-index round trip (build over the binary corpus,
     //    bloom screen + banded probe) routes a binary arrival too
     val idxDir = tmpDir("t_binary_fixture_idx")
     Multimodal.writeMediaDupIndex(spark,

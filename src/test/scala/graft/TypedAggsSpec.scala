@@ -16,7 +16,7 @@ class TypedAggsSpec extends SparkSpec {
       .toDF("g", "v")
     val viaStruct = ModeAgg.mode(df, Seq("g"), "v", "m")
       .as[(String, String)].collect().toMap
-    val viaAggregator = df.groupBy("g").agg(TypedAggs.modeOf(col("v")).as("m"))
+    val viaAggregator = df.groupBy("g").agg(udaf(TypedAggs.ModeAggregator).apply(col("v")).as("m"))
       .as[(String, String)].collect().toMap
     viaAggregator shouldBe viaStruct
   }
@@ -24,7 +24,7 @@ class TypedAggsSpec extends SparkSpec {
   test("ModeAggregator skips nulls and returns null for all-null groups") {
     val df = Seq(("a", "x"), ("a", null), ("a", "x"), ("b", null))
       .toDF("g", "v")
-    val got = df.groupBy("g").agg(TypedAggs.modeOf(col("v")).as("m"))
+    val got = df.groupBy("g").agg(udaf(TypedAggs.ModeAggregator).apply(col("v")).as("m"))
       .as[(String, Option[String])].collect().toMap
     got shouldBe Map("a" -> Some("x"), "b" -> None)
   }
@@ -40,7 +40,7 @@ class TypedAggsSpec extends SparkSpec {
     }
     val df = values.map(v => ("g", v)).toDF("g", "v").repartition(8)
     val got = df.groupBy("g")
-      .agg(TypedAggs.heavyHittersOf(col("v"), k).as("hh"))
+      .agg(udaf(new TypedAggs.HeavyHittersAggregator(k)).apply(col("v")).as("hh"))
       .as[(String, Seq[(String, Long)])].collect().head._2.toMap
 
     val exact = values.groupBy(identity).view.mapValues(_.size.toLong).toMap

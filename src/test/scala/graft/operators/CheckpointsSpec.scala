@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -116,6 +118,51 @@ class CheckpointsSpec extends SparkSpec {
     // an input Spark proves empty reports no metrics: zero edges, no clusters
     val (empty, _) = clusters(pairs.filter(lit(false)))
     empty.filter(col("id") =!= col("cluster_id")).count() shouldBe 0L
+  }
+
+  /** The physical plans of the SQL executions `body` starts: each
+    * execution's initial plan and every adaptive re-plan. Listener
+    * events arrive asynchronously but in order, so a marker job started
+    * after `body` flushes every earlier one. */
+  private def plansDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val key = "graft.spec.plansDuring"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.physicalPlanDescription)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == "end")) flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty(key, "end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      (out, plans.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the distributed components loop plans no broadcast when the session turns broadcasting off") {
+    def run() = Clustering
+      .connectedComponents(pairs, "a", "b", driverSolveMaxEdges = 0)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (on, onPlans) = plansDuring(run())
+    // the labels side is hinted while broadcasting is on ...
+    onPlans.exists(_.contains("BroadcastExchange")) shouldBe true
+    val (off, offPlans) = withBroadcastThreshold("-1")(plansDuring(run()))
+    // ... and no round broadcasts once the session's threshold is -1
+    offPlans.exists(_.contains("SortMergeJoin")) shouldBe true
+    offPlans.filter(_.contains("BroadcastExchange")) shouldBe empty
+    off shouldBe on
   }
 
   // Round-16 (r15 verdict item 7): the Dedup FENCES now route through

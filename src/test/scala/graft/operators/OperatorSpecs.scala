@@ -411,20 +411,6 @@ class DedupSpec extends SparkSpec {
     an[IllegalArgumentException] should be thrownBy
       Dedup.appendToSimhashIndex(spark, dir,
         (50L to 55L).map(doc).toDF("doc_id", "text"), "doc_id", "text")
-    // compaction: screen-identical, data files merged, params/meta kept
-    def dataFiles() = new java.io.File(s"$dir/data").listFiles()
-      .map(_.getName).filter(_.endsWith(".parquet")).toSeq
-    dataFiles().size should be > 1 // the append really fragmented data
-    Dedup.compactSignatureIndex(spark, dir, nFiles = 1)
-    dataFiles().size shouldBe 1
-    val recompacted = Dedup.screenWithSimhashIndex(spark, dir, batch3,
-      "doc_id", "text", maxHamming = 3, bandBits = 4)
-      .as[(Long, Option[Long], Option[Long])].collect().toSet
-    recompacted shouldBe grown
-    // meta survives: the id discipline still refuses overlaps
-    an[IllegalArgumentException] should be thrownBy
-      Dedup.appendToSimhashIndex(spark, dir,
-        (50L to 55L).map(doc).toDF("doc_id", "text"), "doc_id", "text")
   }
 
   test("stored minhash index screen == brute-force signature comparison; appends validated") {
@@ -643,14 +629,6 @@ class SimilaritySpec extends SparkSpec {
       "embedding", 3, 64L)) shouldBe
       picks(graft.operators.Sampling.diversitySample(corpus, "vec_id",
         "embedding", b, 3))
-    val labeled = corpus.withColumn("lab", (col("vec_id") % 3).cast("string"))
-    def negs(df: org.apache.spark.sql.DataFrame) = df
-      .select("anchor_id", "cand_id", "neg_rank")
-      .as[(Long, Long, Long)].collect().sorted.toSeq
-    negs(Similarity.hardNegativesAuto(labeled, "vec_id", "embedding", "lab",
-      col("vec_id") % 50 === 0, 3, 64L)) shouldBe
-      negs(Similarity.hardNegatives(labeled, "vec_id", "embedding", "lab",
-        col("vec_id") % 50 === 0, 3, b))
   }
 
   test("bruteForceTopK ranks by cosine similarity") {
@@ -1128,45 +1106,6 @@ class SimilaritySpec extends SparkSpec {
         Seq((10L, vec())).toDF("vec_id", "embedding"), "vec_id", "embedding")
   }
 
-  test("IVF compaction is probe-identical, cell-selective, and reduces files") {
-    val rnd = new scala.util.Random(23)
-    def vec(): Array[Float] = Array.fill(6)(rnd.nextFloat() * 2 - 1)
-    def batch(lo: Int, hi: Int) =
-      (lo until hi).map(i => (i.toLong, vec())).toDF("vec_id", "embedding")
-    val dir = tmpDir("ivf_compact")
-    Similarity.writeIvfIndexDeterministic(batch(0, 60), "vec_id", "embedding",
-      dir, nCentroids = 4)
-    Similarity.appendToIvfIndexDeterministic(spark, dir, batch(60, 90), "vec_id", "embedding")
-    Similarity.appendToIvfIndexDeterministic(spark, dir, batch(90, 120), "vec_id", "embedding")
-    def cellFiles(): Map[String, Set[String]] = {
-      val root = new java.io.File(s"$dir/data")
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("cell="))
-        .map(c => c.getName ->
-          c.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
-        .toMap
-    }
-    val before = cellFiles()
-    val crowded = before.filter(_._2.size > 1).keySet
-    val quiet = before.keySet -- crowded
-    crowded should not be empty // appends really did fragment cells
-    val queries = batch(0, 3)
-    def probe() =
-      Similarity.probeIvfIndexDeterministic(spark, dir, "vec_id",
-        queries, "vec_id", "embedding", k = 10, nProbe = 3)
-        .select("query_id", "vec_id", "cos_sim")
-        .as[(Long, Long, Double)].collect().sorted.toSeq
-    val pre = probe()
-    Similarity.compactIvfIndex(spark, dir, maxFilesPerCell = 1)
-    val after = cellFiles()
-    probe() shouldBe pre // bit-identical probe
-    crowded.foreach(c => after(c).size shouldBe 1) // crowded cells merged
-    // cell-selective: quiet cells' files are untouched, not rewritten
-    quiet.foreach(c => after(c) shouldBe before(c))
-    // idempotent: nothing left to compact → file layout unchanged
-    Similarity.compactIvfIndex(spark, dir, maxFilesPerCell = 1)
-    cellFiles() shouldBe after
-  }
-
   test("rerankExact over a full-coverage shortlist equals brute-force top-k") {
     val rnd = new scala.util.Random(61)
     val corpus = (0 until 50).map(i => (i.toLong, Array.fill(32)(rnd.nextFloat() * 2 - 1)))
@@ -1273,18 +1212,6 @@ class SimilaritySpec extends SparkSpec {
       q, "vec_id", "embedding", k = 40, nProbe = 1)
       .select("vec_id").as[Long].collect()
     got.exists(_ >= 60L) shouldBe true
-
-    val pqDir = tmpDir("ivfpq_trained_inc")
-    Similarity.writeIvfPqIndex(base.toDF("vec_id", "embedding"),
-      "vec_id", "embedding", pqDir, nCentroids = 3, m = 2, k = 4,
-      trainFraction = 1.0)
-    Similarity.appendToIvfPqIndex(spark, pqDir,
-      batch.toDF("vec_id", "embedding"), "vec_id", "embedding")
-    spark.read.parquet(s"$pqDir/data").count() shouldBe 90L
-    val pqGot = Similarity.probeIvfPqIndex(spark, pqDir, "vec_id",
-      q, "vec_id", "embedding", topK = 40, nProbe = 1)
-      .select("vec_id").as[Long].collect()
-    pqGot.exists(_ >= 60L) shouldBe true
   }
 
   // ---- trained-IVF quality floors on the driver testdata (q137) ------
@@ -1385,8 +1312,6 @@ class SnapshotDiffSpec extends SparkSpec {
     val row3 = SnapshotDiff.diff(older, newer, "id", "text")
       .filter(col("id") === 3).head()
     row3.getAs[String]("old_digest") should not be row3.getAs[String]("new_digest")
-    SnapshotDiff.diffStats(older, newer, "id", "text")
-      .as[(Long, Long, Long)].head() shouldBe ((1L, 1L, 1L))
   }
 
   test("applyChanges upserts, inserts, and deletes in one pass") {

@@ -68,7 +68,7 @@ class StoredIndexDurabilitySpec extends SparkSpec {
 
   test("two-writer pin: compaction fails loudly while an appender holds the lock") {
     val dir = tmpDir("lock_compact")
-    Dedup.writeSimhashIndex(spark,
+    Retrieval.writeRetrievalIndex(spark,
       Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text"),
       "doc_id", "text", dir)
     // a LIVE same-host holder (our own pid): must NOT be auto-broken
@@ -77,12 +77,12 @@ class StoredIndexDurabilitySpec extends SparkSpec {
     out.write((s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
       s"pid=${ProcessHandle.current.pid} t=0").getBytes("UTF-8"))
     out.close()
-    intercept[IllegalStateException] { Dedup.compactSignatureIndex(spark, dir) }
+    intercept[IllegalStateException] { Retrieval.compactRetrievalIndex(spark, dir) }
     // the holder's lock survives the refused compaction
     fs(dir).exists(lock) shouldBe true
     fs(dir).delete(lock, false)
-    Dedup.compactSignatureIndex(spark, dir) // and with it gone, compaction runs
-    spark.read.parquet(s"$dir/data").count() shouldBe 2L
+    Retrieval.compactRetrievalIndex(spark, dir) // and with it gone, compaction runs
+    spark.read.parquet(s"$dir/postings").count() shouldBe 6L // one row per token
   }
 
   test("a stale same-host lock from a dead writer is broken automatically") {

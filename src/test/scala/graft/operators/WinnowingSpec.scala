@@ -158,11 +158,6 @@ class WinnowingSpec extends SparkSpec {
         case None => r.isNullAt(1) shouldBe true
       }
     }
-    // compaction (shared flat-signature layout) leaves the screen identical
-    Dedup.compactSignatureIndex(spark, dir, nFiles = 1)
-    Dedup.screenWithWinnowIndex(spark, dir, batch, "doc_id", "text",
-        maxDf = 50, minShared = 1)
-      .orderBy("doc_id").collect() shouldBe screened
   }
 
   test("fingerprints above maxDf are cut before pairing") {

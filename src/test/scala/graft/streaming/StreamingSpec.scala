@@ -538,7 +538,10 @@ class StreamingSpec extends SparkSpec {
   test("streaming bloom decontamination drops contaminated docs statelessly") {
     val testSet = Seq("held out eval question about spark joins",
       "another benchmark prompt entirely for eval").toDF("text")
-    val bloom = graft.operators.Decontaminate.buildTestBloom(testSet, "text", 5)
+    // the stored decontamination artifact's bloom, as a stream reads it
+    val dir = tmpDir("t_decon_artifact")
+    graft.operators.Decontaminate.writeDecontamArtifact(spark, testSet, "text", 5, dir)
+    val bloom = spark.read.parquet(s"$dir/bloom").head().getAs[Array[Byte]]("bloom")
     val in = MemoryStream[(Long, String)]
     val out = graft.operators.Decontaminate.streamCleanBloom(
       in.toDF().toDF("doc_id", "text"), "text", bloom, 5)
@@ -1150,36 +1153,6 @@ class StreamingSpec extends SparkSpec {
     // only the genuine dup collided; the three null docs matched nothing
     spark.table("t_neardup_null").select("docId", "dupOf")
       .as[(Long, Long)].collect().toSet shouldBe Set((5L, 1L))
-  }
-
-  test("evicting near-dup suppression expires templates past retention") {
-    import java.sql.Timestamp
-    def ts(hhmm: String): Timestamp = Timestamp.valueOf(s"2026-01-01 $hhmm:00")
-    val in = MemoryStream[(Long, String, Timestamp)]
-    val out = StreamNearDup.collisionsEvicting(
-      in.toDF().toDF("doc_id", "text", "event_ts"), "doc_id", "text",
-      "event_ts", retention = java.time.Duration.ofMinutes(10),
-      watermarkDelay = java.time.Duration.ofMinutes(5),
-      bits = 16, bandBits = 4, maxHamming = 3)
-    val q = out.toDF().writeStream.format("memory").queryName("t_neardup_evict")
-      .outputMode(OutputMode.Append()).start()
-    val a = "the quick brown fox jumps over the lazy dog again"
-    val b = "an entirely different boilerplate template about shuffles"
-    // batch 1: template A arrives at 10:00
-    in.addData((1L, a, ts("10:00")))
-    q.processAllAvailable()
-    // batch 2: a dup of A at 10:05 collides (watermark still 09:55);
-    // template B at 10:24 advances the watermark to 10:19 for batch 3
-    in.addData((2L, a, ts("10:05")), (3L, b, ts("10:24")))
-    q.processAllAvailable()
-    // batch 3: watermark 10:19 has passed A's 10:00+10min retention (and
-    // doc 2's 10:05+10min) — the A templates are evicted, so a fresh A
-    // dup matches NOTHING; B (10:24+10min ahead of watermark) still does
-    in.addData((4L, a, ts("10:26")), (5L, b, ts("10:26")))
-    q.processAllAvailable()
-    q.stop()
-    spark.table("t_neardup_evict").select("docId", "dupOf")
-      .as[(Long, Long)].collect().toSet shouldBe Set((2L, 1L), (5L, 3L))
   }
 
   test("semantic decontamination screens ingest-time: stream-static ≡ batch") {
